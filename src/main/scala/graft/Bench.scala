@@ -417,14 +417,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
 
     // optional arg: comma-separated name prefixes (local iteration only;
     // the driver invokes with no args → full suite)
@@ -452,5 +445,21 @@ object Bench {
     if (result.failed.nonEmpty)
       System.err.println(s"BENCH FAILURES: ${result.failed.mkString(", ")}")
     spark.stop()
+  }
+
+  /** The one session every main builds: `local[N]` with N shuffle
+    * partitions, UTC session time zone, UI off, ERROR log level. N is
+    * SPARK_GRAFT_CPUS, else the host's available processors. */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
   }
 }

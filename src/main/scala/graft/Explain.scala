@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print formatted physical plans for selected queries, to review
   * pushdown / broadcast / codegen / shuffle shape.
   *
@@ -11,13 +9,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val prefixes = if (args.length > 1) args(1).split(",").toSeq else Seq("")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session()
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => prefixes.exists(name.startsWith) }
       .foreach { case (name, fn) =>

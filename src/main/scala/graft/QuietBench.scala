@@ -11,7 +11,7 @@ import graft.Bench.{fmt, jsonSafe, errMsg}
   * quiet. Chunks of [[ChunkSize]] queries keep each window short (~10–60 s)
   * so a steal burst dirties one chunk, not the whole run; a noise-bound
   * chunk is re-measured up to [[ChunkRetries]] times and keeps its best
-  * passes.
+  * passes. [[QuietDiff]] times its queries with the same [[measure]].
   *
   * Output: ONE JSON line, `metric=quiet_bench`, with per-query min seconds,
   * per-chunk noise verdicts + probe floors, and the calibration pair
@@ -19,6 +19,9 @@ import graft.Bench.{fmt, jsonSafe, errMsg}
   * `BENCH_quiet_r{N}.json` — the standing per-query regression oracle on
   * the current host class (official `BENCH_r{N}.json` totals stay the
   * driver's cross-round metric).
+  *
+  * Usage: `sbt "runMain graft.QuietBench [prefix,...]"` (default: every
+  * query), scale factor from SPARK_GRAFT_SF_DIR.
   */
 object QuietBench {
   val Passes = 5
@@ -27,18 +30,36 @@ object QuietBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val probeRows = 64L * 1000 * 1000
+    val prefixes = if (args.nonEmpty) args(0).split(",").toSeq else Seq("")
+    val spark = Bench.session()
+    println(renderBench(measure(spark, sfDir, n => prefixes.exists(n.startsWith)), sfDir))
+    spark.stop()
+  }
 
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => args.isEmpty || args(0).split(",").exists(n.startsWith) }
+  /** One chunk's probe points (from its last attempt) and its verdict
+    * against the fold as it stood when the chunk was measured — the
+    * verdict that decided the retry. */
+  final case class Chunk(quietInterim: Boolean, probes: Seq[Double])
+
+  /** Per-query minima and errors in run order, the chunks, and the
+    * calibration pair: `cal0` raw, `quietCal` folded over every probe the
+    * run took. */
+  final case class Measurement(mins: Seq[(String, Double)], errors: Seq[(String, String)],
+                               chunks: Seq[Chunk], cal0: Double, quietCal: Double) {
+    /** Each chunk re-judged against the FINAL fold (r15 advice): the
+      * interim verdict compares against a fold that may still carry a
+      * steal-inflated calibration, so a later, lower probe must
+      * retroactively re-flag an earlier chunk, exactly as
+      * [[Bench.renderLines]] re-judges all passes against the final fold. */
+    def chunkQuiet: Seq[Boolean] = chunks.map(c => !Bench.noiseBound(c.probes, quietCal))
+  }
+
+  /** Warm up, calibrate, then time the `keep`-selected queries (sorted by
+    * name) chunk by chunk under the probe protocol above. Does NOT stop
+    * the session. */
+  def measure(spark: SparkSession, sfDir: String, keep: String => Boolean,
+              probeRows: Long = 64L * 1000 * 1000): Measurement = {
+    val queries = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) => keep(n) }
     def runOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
 
@@ -58,17 +79,12 @@ object QuietBench {
 
     val mins = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val chunkMeta = Seq.newBuilder[(Int, Boolean, Seq[Double])]
-
-    queries.grouped(ChunkSize).zipWithIndex.foreach { case (chunk, ci) =>
+    val chunks = queries.grouped(ChunkSize).zipWithIndex.map { case (chunk, ci) =>
       var best = Map.empty[String, Double]
-      var attempt = 0
-      var chunkProbes = Seq.empty[Double]
-      var wasQuiet = false
-      while (attempt <= ChunkRetries && !wasQuiet) {
-        val probes = Seq.newBuilder[Double]
-        probes += probe()
-        for (_ <- 1 to Passes) {
+      // one attempt: a probe, then Passes passes each followed by a probe;
+      // best keeps the per-query minimum across every attempt
+      def attempt(): Chunk = {
+        val probes = probe() +: (1 to Passes).map { _ =>
           chunk.foreach { case (name, fn) =>
             val t0 = System.nanoTime()
             try {
@@ -77,47 +93,48 @@ object QuietBench {
               if (!best.get(name).exists(_ <= s)) best += name -> s
             } catch { case e: Throwable => errors(name) = errMsg(e) }
           }
-          probes += probe()
+          probe()
         }
-        chunkProbes = probes.result()
-        wasQuiet = !Bench.noiseBound(chunkProbes, quiet)
-        attempt += 1
-        if (!wasQuiet && attempt <= ChunkRetries) Thread.sleep(5000)
+        Chunk(!Bench.noiseBound(probes, quiet), probes)
+      }
+      var c = attempt()
+      var retries = 0
+      while (!c.quietInterim && retries < ChunkRetries) {
+        Thread.sleep(5000)
+        c = attempt()
+        retries += 1
       }
       chunk.foreach { case (name, _) =>
         best.get(name).foreach(mins(name) = _)
       }
-      chunkMeta += ((ci, wasQuiet, chunkProbes))
-      System.err.println(f"[quiet-bench] chunk $ci%3d quiet=$wasQuiet " +
-        f"probes=${chunkProbes.map(fmt).mkString(",")}")
-    }
-
-    val total = mins.values.sum
-    def obj(kv: Iterable[(String, String)]): String =
-      kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val qJson = obj(mins.map { case (k, v) => k -> fmt(v) })
-    val eJson = obj(errors.map { case (k, v) => k -> ("\"" + v + "\"") })
-    val chunks = chunkMeta.result()
-    // Published verdicts are re-judged against the FINAL folded quiet value
-    // (r15 advice): the in-loop verdict compares against an interim fold
-    // that may still carry a steal-inflated calibration — a later, lower
-    // probe must retroactively re-flag an earlier chunk, exactly as
-    // Bench.renderLines re-judges all passes against the final fold. The
-    // interim verdict is kept only as the retry decision (and published as
-    // `quiet_interim` for forensics).
-    val finalQuiet = quiet
-    val cJson = obj(chunks.map { case (ci, interim, ps) =>
-      val q = !Bench.noiseBound(ps, finalQuiet)
-      ci.toString ->
-        s"""{"quiet":$q,"quiet_interim":$interim,"probes":[${ps.map(fmt).mkString(",")}]}"""
-    })
-    val allQuiet = chunks.forall { case (_, _, ps) => !Bench.noiseBound(ps, finalQuiet) }
-    println(
-      s"""{"metric":"quiet_bench","value":${fmt(total)},"unit":"sec",""" +
-        s""""nqueries":${mins.size},"passes":$Passes,"all_chunks_quiet":$allQuiet,""" +
-        s""""cal0":${fmt(cal0)},"probe_quiet_cal":${fmt(quiet)},""" +
-        s""""queries":$qJson,"errors":$eJson,"chunks":$cJson,""" +
-        s""""sf":"${jsonSafe(sfDir)}"}""")
-    spark.stop()
+      System.err.println(f"[quiet-bench] chunk $ci%3d quiet=${c.quietInterim} " +
+        f"probes=${c.probes.map(fmt).mkString(",")}")
+      c
+    }.toList
+    Measurement(mins.toSeq, errors.toSeq, chunks, cal0, quiet)
   }
+
+  private[graft] def obj(kv: Iterable[(String, String)]): String =
+    kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+
+  /** The `errors` object: query name → message. */
+  private[graft] def errorsJson(m: Measurement): String =
+    obj(m.errors.map { case (k, v) => k -> ("\"" + v + "\"") })
+
+  /** The `chunks` object: per chunk index, the final-fold verdict, the
+    * interim one (forensics only) and the probe points. */
+  private[graft] def chunksJson(m: Measurement): String =
+    obj(m.chunks.zip(m.chunkQuiet).zipWithIndex.map { case ((c, q), ci) =>
+      ci.toString ->
+        s"""{"quiet":$q,"quiet_interim":${c.quietInterim},"probes":[${c.probes.map(fmt).mkString(",")}]}"""
+    })
+
+  /** The `metric=quiet_bench` line. */
+  def renderBench(m: Measurement, sfDir: String): String =
+    s"""{"metric":"quiet_bench","value":${fmt(m.mins.map(_._2).sum)},"unit":"sec",""" +
+      s""""nqueries":${m.mins.size},"passes":$Passes,"all_chunks_quiet":${m.chunkQuiet.forall(identity)},""" +
+      s""""cal0":${fmt(m.cal0)},"probe_quiet_cal":${fmt(m.quietCal)},""" +
+      s""""queries":${obj(m.mins.map { case (k, v) => k -> fmt(v) })},""" +
+      s""""errors":${errorsJson(m)},"chunks":${chunksJson(m)},""" +
+      s""""sf":"${jsonSafe(sfDir)}"}"""
 }

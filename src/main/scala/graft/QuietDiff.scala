@@ -1,122 +1,85 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import graft.Bench.{fmt, jsonSafe, errMsg}
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+
+import graft.Bench.{fmt, jsonSafe}
 
 /** Per-query regression diff against the standing quiet baseline (the r15
   * verdict's item 5: `BENCH_quiet_r{N}.json` existed but nothing diffed
-  * against it). Re-times the named queries min-of-[[Passes]] inside a
-  * probe-bracketed window (the QuietBench protocol), loads the baseline's
-  * per-query minima, and emits ONE JSON line with per-query
-  * base/now/ratio plus a `flagged` list of queries above [[RatioFlag]]×
-  * their baseline — the round-close checklist runs this for the heaviest
-  * chunks and any new queries, and a regression is a named line in a
-  * committed artifact instead of a cross-round eyeball.
+  * against it). Re-times the named queries with [[QuietBench.measure]] —
+  * the same chunked, retried, final-fold-judged protocol that produced the
+  * baseline — loads the baseline's per-query minima, and emits ONE JSON
+  * line with per-query base/now/ratio plus a `flagged` list of queries
+  * above [[RatioFlag]]× their baseline — the round-close checklist runs
+  * this for the heaviest queries and any new ones, and a regression is a
+  * named line in a committed artifact instead of a cross-round eyeball.
   *
   * Usage: `sbt "runMain graft.QuietDiff q177,q225"` (comma-separated
-  * name prefixes; default = the standing heavy set + queries absent from
-  * the baseline, i.e. new this round). Baseline path via
-  * SPARK_GRAFT_QUIET_BASE (default BENCH_quiet_r15.json). A diff taken in
-  * a noise-bound window says so (`quiet:false`) — flags from a dirty
-  * window are telemetry, not verdicts. */
+  * name prefixes; default = the baseline's six slowest queries + queries
+  * absent from the baseline, i.e. new this round). Baseline path via
+  * SPARK_GRAFT_QUIET_BASE (default BENCH_quiet_r16.json); a missing,
+  * unreadable, malformed or query-less baseline is an error naming the
+  * path. A diff taken in a noise-bound window says so (`quiet:false`) —
+  * flags from a dirty window are telemetry, not verdicts. */
 object QuietDiff {
-  val Passes = 5
   val RatioFlag = 1.3
 
-  /** The standing heavy set: the baseline's slowest queries, the ones a
-    * plan regression hurts most. */
-  val DefaultHeavy = Seq("q177", "q225", "q150", "q140", "q121", "q208")
+  /** The quiet-bench artifact's `"queries"` object (name → seconds);
+    * malformed JSON throws. */
+  private[graft] def parseBaseline(json: String): Map[String, Double] =
+    new ObjectMapper().readTree(json).path("queries").properties().asScala
+      .map(e => e.getKey -> e.getValue.asDouble).toMap
 
-  /** Minimal parser for the quiet-bench artifact's `"queries":{...}`
-    * object (flat name→seconds pairs; names are [a-z0-9_]). */
-  private[graft] def parseBaseline(json: String): Map[String, Double] = {
-    val start = json.indexOf("\"queries\":{")
-    if (start < 0) return Map.empty
-    val body = json.substring(start + "\"queries\":{".length)
-    val end = body.indexOf('}')
-    if (end < 0) return Map.empty
-    val pair = """"([A-Za-z0-9_]+)":([0-9.]+)""".r
-    pair.findAllMatchIn(body.substring(0, end))
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
+  /** The baseline's per-query minima. Throws, naming `path`, when the file
+    * is missing, unreadable, malformed or holds no queries: an empty or
+    * partial baseline would report queries `base:null` and flag nothing. */
+  def loadBaseline(path: String): Map[String, Double] = {
+    val baseline =
+      try parseBaseline(java.nio.file.Files.readString(java.nio.file.Paths.get(path)))
+      catch { case e: java.io.IOException =>
+        throw new IllegalArgumentException(s"cannot read quiet baseline $path: $e", e)
+      }
+    require(baseline.nonEmpty, s"quiet baseline $path holds no queries")
+    baseline
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val basePath = sys.env.getOrElse("SPARK_GRAFT_QUIET_BASE", "BENCH_quiet_r16.json")
-    val baseline =
-      try parseBaseline(java.nio.file.Files.readString(java.nio.file.Paths.get(basePath)))
-      catch { case _: Exception => Map.empty[String, Double] }
-
-    val all = SparkEntry.queries.toSeq.sortBy(_._1)
-    val queries =
-      if (args.nonEmpty) all.filter { case (n, _) => args(0).split(",").exists(n.startsWith) }
+    val baseline = loadBaseline(basePath)
+    val keep: String => Boolean =
+      if (args.nonEmpty) n => args(0).split(",").exists(n.startsWith)
       else {
-        // default: the standing heavy set + everything new since the baseline
-        val newOnes = all.collect { case (n, _) if !baseline.contains(n) => n }
-        all.filter { case (n, _) =>
-          DefaultHeavy.exists(n.startsWith) || newOnes.contains(n) }
+        // the baseline's slowest queries, the ones a plan regression hurts
+        // most, plus everything new since the baseline
+        val heavy = baseline.toSeq.sortBy { case (n, s) => (-s, n) }.take(6).map(_._1).toSet
+        n => heavy(n) || !baseline.contains(n)
       }
+    val spark = Bench.session()
+    println(renderDiff(QuietBench.measure(spark, sfDir, keep), baseline, basePath, sfDir))
+    spark.stop()
+  }
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val probeRows = 64L * 1000 * 1000
-
-    def runOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-
-    // warmup (JIT + shared snapshots), then the QuietBench probe protocol
-    queries.foreach { case (_, fn) => try runOne(fn) catch { case _: Throwable => () } }
-    Bench.probeOnce(spark, probeRows)
-    val cal0 = Bench.calibrateQuiet(spark, probeRows)
-    var seen = Seq.empty[Double]
-    def probe(): Double = {
-      val p = Bench.probePoint(spark, probeRows); seen = seen :+ p; p
-    }
-
-    val mins = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val probes = Seq.newBuilder[Double]
-    probes += probe()
-    for (_ <- 1 to Passes) {
-      queries.foreach { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try {
-          runOne(fn)
-          val s = (System.nanoTime() - t0) / 1e9
-          if (!mins.get(name).exists(_ <= s)) mins(name) = s
-        } catch { case e: Throwable => errors(name) = errMsg(e) }
-      }
-      probes += probe()
-    }
-    val ps = probes.result()
-    val quietRef = Bench.foldQuiet(cal0, seen)
-    val quiet = !Bench.noiseBound(ps, quietRef)
-
+  /** The `metric=quiet_diff` line: `quiet` is the conjunction of the
+    * final-fold chunk verdicts. */
+  def renderDiff(m: QuietBench.Measurement, baseline: Map[String, Double],
+                 basePath: String, sfDir: String): String = {
     def entry(name: String, now: Double): (String, String) = baseline.get(name) match {
       case Some(b) =>
         name -> s"""{"base":${fmt(b)},"now":${fmt(now)},"ratio":${fmt(now / b)}}"""
       case None =>
         name -> s"""{"base":null,"now":${fmt(now)},"ratio":null}"""
     }
-    val flagged = mins.collect {
+    val flagged = m.mins.collect {
       case (n, now) if baseline.get(n).exists(b => now > RatioFlag * b) => n
-    }.toSeq
-    def obj(kv: Iterable[(String, String)]): String =
-      kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    println(
-      s"""{"metric":"quiet_diff","base":"${jsonSafe(basePath)}","passes":$Passes,""" +
-        s""""quiet":$quiet,"cal0":${fmt(cal0)},"probe_quiet_cal":${fmt(quietRef)},""" +
-        s""""probes":[${ps.map(fmt).mkString(",")}],""" +
-        s""""ratio_flag":$RatioFlag,"flagged":[${flagged.map("\"" + _ + "\"").mkString(",")}],""" +
-        s""""queries":${obj(mins.map { case (k, v) => entry(k, v) })},""" +
-        s""""errors":${obj(errors.map { case (k, v) => k -> ("\"" + v + "\"") })},""" +
-        s""""sf":"${jsonSafe(sfDir)}"}""")
-    spark.stop()
+    }
+    s"""{"metric":"quiet_diff","base":"${jsonSafe(basePath)}","passes":${QuietBench.Passes},""" +
+      s""""quiet":${m.chunkQuiet.forall(identity)},"cal0":${fmt(m.cal0)},""" +
+      s""""probe_quiet_cal":${fmt(m.quietCal)},"chunks":${QuietBench.chunksJson(m)},""" +
+      s""""ratio_flag":$RatioFlag,"flagged":[${flagged.map("\"" + _ + "\"").mkString(",")}],""" +
+      s""""queries":${QuietBench.obj(m.mins.map { case (k, v) => entry(k, v) })},""" +
+      s""""errors":${QuietBench.errorsJson(m)},"sf":"${jsonSafe(sfDir)}"}"""
   }
 }

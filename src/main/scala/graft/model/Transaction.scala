@@ -25,24 +25,20 @@ object Transaction {
     * (`TransactionProcessor.java:39`) — `amount == 10000.0` is NOT fraud. */
   val FraudThreshold: Double = 10000.0
 
-  /** JSON string → typed struct column. NOTE Spark's PERMISSIVE mode does
-    * NOT yield a null struct on malformed input — it yields a non-null
-    * struct whose FIELDS are null (only SQL NULL input gives a null
-    * struct; verified on this Spark build). The reference's
-    * drop-and-continue parse (`TransactionProcessor.java:30-37`) is
-    * therefore reproduced via [[parseJsonCorrupt]]'s corrupt-record
-    * column, as `FraudPipeline.parse` does. */
-  def parseJson(value: Column): Column = from_json(value, schema)
-
   /** Corrupt-record column name for [[parseJsonCorrupt]]. */
   val CorruptCol = "_corrupt"
 
-  /** Wire schema + corrupt-record capture: a record Jackson would THROW on
-    * (malformed JSON, wrong field type) gets `_corrupt` set; a merely
-    * INCOMPLETE record (missing keys) parses cleanly with null fields —
-    * exactly the reference's two cases (`TransactionProcessor.java:30-37`
-    * drops the thrower, keeps the incomplete record with POJO primitive
-    * defaults). */
+  /** JSON string → typed struct column, with corrupt-record capture: a
+    * record Jackson would THROW on (malformed JSON, wrong field type) gets
+    * `_corrupt` set; a merely INCOMPLETE record (missing keys) parses
+    * cleanly with null fields — exactly the reference's two cases
+    * (`TransactionProcessor.java:30-37` drops the thrower, keeps the
+    * incomplete record with POJO primitive defaults). The corrupt column is
+    * needed because Spark's PERMISSIVE mode does NOT yield a null struct on
+    * malformed input — it yields a non-null struct whose FIELDS are null
+    * (only SQL NULL input gives a null struct; verified on this Spark
+    * build), so a plain `from_json` cannot tell a thrower from an
+    * incomplete record. `FraudPipeline.parse` drops on `_corrupt`. */
   def parseJsonCorrupt(value: Column): Column =
     from_json(value,
       StructType(schema.fields :+ StructField(CorruptCol, StringType)),

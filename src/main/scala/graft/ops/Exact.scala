@@ -38,14 +38,4 @@ object Exact {
     * would dilute the mean). */
   def avgD(c: Column, scale: Int): Column =
     sum(units(c, scale)) / (lit(math.pow(10, scale)) * count(c))
-
-  /** DuckDB-side equivalents (kept next to the Spark forms so the two can
-    * never drift): */
-  def sqlUnits(col: String, scale: Int): String =
-    s"CAST(ROUND($col * ${u(scale)}) AS BIGINT)"
-  def sqlSum(col: String, scale: Int): String =
-    s"SUM(${sqlUnits(col, scale)}) / ${u(scale)}.0"
-  def sqlAvg(col: String, scale: Int): String =
-    s"SUM(${sqlUnits(col, scale)}) / (${u(scale)}.0 * COUNT($col))"
-  private def u(scale: Int): Long = math.pow(10, scale).toLong
 }

@@ -1624,7 +1624,6 @@ object RelationalOps {
 
   def saxMotifs(events: DataFrame): DataFrame = {
     val L = SaxWindow
-    val segn = L / SaxSegments
     val w = Window.partitionBy("user_id").orderBy("us", "event_id")
       .rowsBetween(Window.currentRow, L - 1)
     val win = events.where(col("value").isNotNull)

@@ -148,12 +148,6 @@ object ScaleOps {
       .drop(replicatedSmall(key)).drop("__salt")
   }
 
-  /** Pre-partition two tables identically so a later join is shuffle-free
-    * on reuse (the dynamic analog of bucketed tables). */
-  def coPartition(a: DataFrame, b: DataFrame, key: String,
-                  partitions: Int): (DataFrame, DataFrame) =
-    (a.repartition(partitions, col(key)), b.repartition(partitions, col(key)))
-
   /** q153 — JOIN-KEY SKEW AUDIT: for each (table, key) a join or
     * aggregation will hash on, the distribution evidence that decides
     * the physical plan — row/key counts, the hottest key's share, the

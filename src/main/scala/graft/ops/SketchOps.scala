@@ -901,7 +901,6 @@ object SketchOps {
     * domain); for unbounded-domain columns the q134 HLL registers are
     * the NDV path — both exist in this engine. */
   def equiDepthStats(events: DataFrame): DataFrame = {
-    val w = HistBinCents
     val b = EquiDepthBuckets
     val cents = events.selectExpr(
         "CASE WHEN value IS NULL THEN CAST(NULL AS BIGINT) " +

@@ -815,7 +815,6 @@ object TextOps {
 
   def dsirResample(docs: DataFrame, target: Long = DsirResampleTarget,
                    weights: Option[DataFrame] = None): DataFrame = {
-    val spark = docs.sparkSession
     val wts = weights.getOrElse(dsirWeights(docs)).select("doc_id", "logw_micro")
     val raw = "exp(CAST(logw_micro AS DOUBLE) / 1e6) * 1e6"
     val wm = wts.selectExpr("doc_id",

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import scala.util.Try
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}

@@ -7,23 +7,17 @@ import org.apache.spark.sql.functions._
   * family (batch exact dedup lives in [[graft.ops.TextOps.exactDedup]];
   * near-dup in [[graft.ops.DedupOps]]).
   *
-  * Both variants keep per-key state; the difference is the retention
-  * contract, which is THE scale question for stream dedup at 100 TB/day:
-  *  - [[dedupForever]] (`dropDuplicates`): state grows with the number of
-  *    distinct keys ever seen — only correct when the key space is bounded
-  *    (e.g. a small device registry).
-  *  - [[dedupWithinWatermark]] (`dropDuplicatesWithinWatermark`): a
-  *    duplicate is only suppressed if it arrives within the watermark
-  *    horizon of the first occurrence; state for keys older than the
-  *    horizon is dropped with the watermark, so total state is bounded by
-  *    the horizon's key arrival rate — the only contract that survives an
-  *    unbounded stream.
+  * The retention contract is THE scale question for stream dedup at
+  * 100 TB/day. Plain `dropDuplicates` keeps state for every distinct key
+  * ever seen — only correct when the key space is bounded (e.g. a small
+  * device registry). [[dedupWithinWatermark]]
+  * (`dropDuplicatesWithinWatermark`) suppresses a duplicate only if it
+  * arrives within the watermark horizon of the first occurrence; state for
+  * keys older than the horizon is dropped with the watermark, so total
+  * state is bounded by the horizon's key arrival rate — the only contract
+  * that survives an unbounded stream.
   */
 object StreamDedup {
-
-  /** Exact dedup on `keyCols`, unbounded state (bounded key spaces only). */
-  def dedupForever(df: DataFrame, keyCols: Seq[String]): DataFrame =
-    df.dropDuplicates(keyCols)
 
   /** Exact dedup on `keyCols` with watermark-bounded state: duplicates
     * within `delay` of the first occurrence are suppressed; the key's

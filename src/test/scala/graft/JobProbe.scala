@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Scratch per-job cost probe (optimization round 16). Not a spec — run
   * manually: sbt "Test/runMain graft.JobProbe q151,q159 [sfDir]".
@@ -14,13 +13,7 @@ object JobProbe {
   def main(args: Array[String]): Unit = {
     val prefixes = args(0).split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session()
 
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
     val done = new java.util.concurrent.CopyOnWriteArrayList[(Int, String, Double)]()
