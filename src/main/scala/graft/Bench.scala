@@ -189,7 +189,8 @@ object Bench {
   /** One probe POINT: the MIN of `n` back-to-back [[probeOnce]] runs.
     *
     * Why a pair and not a single (r15 diagnostic, `ProbeSettleProbe`,
-    * run in a verified-quiet window): the FIRST probe after a measured
+    * whose source remains at commit `596d2d2`, run in a verified-quiet
+    * window): the FIRST probe after a measured
     * pass — or after any pause following one — reproducibly reads
     * 0.25–0.55 s while an immediately-repeated probe reads the true
     * 0.10–0.17 s floor, and the inflation RECURS after a 1–3 s settle

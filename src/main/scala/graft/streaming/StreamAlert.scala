@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of q192's alert rule — the reference's ACTUAL product
   * (the `fraud-alerts` topic, `TransactionProcessor.java:54`) with
@@ -14,13 +13,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * again — alerts re-fire after recovery, once per island.
   *
   * State per key is one (islandStartUs, fired) latch (O(1) — nothing
-  * buffers), expiring via a processing-time TTL like [[StreamFunnel]],
-  * so total state is bounded by users active inside the TTL. Ordering
-  * contract as StreamFunnel: events fold in (us, eventId) order within
-  * a micro-batch, and arrival must respect event time across batches (a
-  * tail-following keyed stream — exactly what the reference's
-  * keyed-produce B2 guarantees per user); for out-of-order replay,
-  * buffer-until-watermark as [[VelocityDetector.detectEventTime]] does.
+  * buffers); no open island is no state, so a dip frees the key. State
+  * lifecycle, processing-time TTL and the ordering contract (events fold
+  * in (us, eventId) order): [[KeyedFold]].
   *
   * The spec proves the streamed firings equal batch q192's fired
   * islands' (user, start, fire) triples exactly — including islands
@@ -37,40 +32,21 @@ object StreamAlert {
             stateTimeout: Option[String] = Some("1 hour")): Dataset[Firing] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val timeoutConf =
-      if (stateTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    events.groupByKey(_.userId)
-      .flatMapGroupsWithState[AState, Firing](
-        OutputMode.Append(), timeoutConf) {
-        (userId: Long, rows: Iterator[Obs], state: GroupState[AState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            // Option-shaped latch over a non-nullable state slot: no open
-            // island is the REMOVED state, so an under-threshold dip both
-            // closes the run and frees the key's state
-            var st: Option[AState] = state.getOption
-            val out = Seq.newBuilder[Firing]
-            rows.toSeq.sortBy(o => (o.us, o.eventId)).foreach { o =>
-              if (!o.over) st = None
-              else st match {
-                case None => st = Some(AState(o.us, fired = false))
-                case Some(s) if !s.fired && o.us >= s.startUs + forUs =>
-                  out += Firing(userId, s.startUs, o.us)
-                  st = Some(s.copy(fired = true))
-                case _ => () // pending and not yet held long enough, or already fired
-              }
-            }
-            st match {
-              case Some(s) =>
-                state.update(s)
-                stateTimeout.foreach(state.setTimeoutDuration)
-              case None => if (state.exists) state.remove()
-            }
-            out.result().iterator
-          }
+    KeyedFold[Obs, Long, AState, Firing](events, _.userId,
+      Ordering.by(o => (o.us, o.eventId)), stateTimeout) { (userId, st0, rows) =>
+      var st = st0
+      val out = Seq.newBuilder[Firing]
+      rows.foreach { o =>
+        if (!o.over) st = None
+        else st match {
+          case None => st = Some(AState(o.us, fired = false))
+          case Some(s) if !s.fired && o.us >= s.startUs + forUs =>
+            out += Firing(userId, s.startUs, o.us)
+            st = Some(s.copy(fired = true))
+          case _ => () // pending and not yet held long enough, or already fired
+        }
       }
+      (st, out.result())
+    }
   }
 }

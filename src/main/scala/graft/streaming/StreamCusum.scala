@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of q193's CUSUM drift chart — Page's statistic
   * maintained in-flight, the sequential detector it was DESIGNED as
@@ -20,14 +19,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Emits one row PER OBSERVATION (the rendered chart q193 ships), not
   * just transitions — the dashboard sibling of [[StreamAlert]]'s
-  * alert-topic shape. Ordering contract as [[StreamAlert]]: rows fold
-  * in (us, eventId) order within a micro-batch and arrival respects
-  * event time across batches (the reference's keyed produce, B2,
-  * guarantees this per user); for out-of-order replay,
-  * buffer-until-watermark as [[VelocityDetector.detectEventTime]]
-  * does. Processing-time TTL bounds total state by active keys — same
-  * production dial and same test note as [[StreamAlert]] (specs pass
-  * `stateTimeout = None`). */
+  * alert-topic shape. State lifecycle, processing-time TTL and the
+  * ordering contract (rows fold in (us, eventId) order): [[KeyedFold]]. */
 object StreamCusum {
   case class Obs(userId: Long, us: Long, eventId: Long, cents: Long)
   /** The two sufficient statistics of the clamp fold. */
@@ -41,30 +34,17 @@ object StreamCusum {
             stateTimeout: Option[String] = Some("1 hour")): Dataset[Point] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val timeoutConf =
-      if (stateTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    events.groupByKey(_.userId)
-      .flatMapGroupsWithState[CState, Point](
-        OutputMode.Append(), timeoutConf) {
-        (userId: Long, rows: Iterator[Obs], state: GroupState[CState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var st = state.getOption.getOrElse(CState(0L, 0L))
-            val out = Seq.newBuilder[Point]
-            rows.toSeq.sortBy(o => (o.us, o.eventId)).foreach { o =>
-              val p = st.prefix + o.cents - slack
-              st = CState(p, math.min(st.minPrefix, p))
-              // minPrefix starts at 0, so min(0, ·) is already folded in
-              val s = p - st.minPrefix
-              out += Point(userId, o.us, o.eventId, o.cents, s, s >= alarmAt)
-            }
-            state.update(st)
-            stateTimeout.foreach(state.setTimeoutDuration)
-            out.result().iterator
-          }
+    KeyedFold[Obs, Long, CState, Point](events, _.userId,
+      Ordering.by(o => (o.us, o.eventId)), stateTimeout) { (userId, st0, rows) =>
+      var st = st0.getOrElse(CState(0L, 0L))
+      val out = rows.map { o =>
+        val p = st.prefix + o.cents - slack
+        st = CState(p, math.min(st.minPrefix, p))
+        // minPrefix starts at 0, so min(0, ·) is already folded in
+        val s = p - st.minPrefix
+        Point(userId, o.us, o.eventId, o.cents, s, s >= alarmAt)
       }
+      (Some(st), out)
+    }
   }
 }

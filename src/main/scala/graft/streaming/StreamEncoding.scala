@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of q201's encoding chooser — the writer-side analysis
   * maintained AS DATA LANDS, which is when a real columnar writer makes
@@ -13,9 +12,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * LAST value and a new batch's first value extends the open run
   * instead of opening one (the associative segment-merge law
   * `runs(A ⧺ B) = runs(A) + runs(B) − [last(A) = first(B)]`, folded
-  * incrementally). Ordering contract as [[StreamCusum]]: rows fold in
-  * (us, eventId) order within a batch and arrival respects ingest
-  * order per day — exactly a writer's append stream.
+  * incrementally). State lifecycle, processing-time TTL and the
+  * ordering contract: [[KeyedFold]] — rows fold in (us, eventId) order
+  * within a batch and arrival respects ingest order per day, exactly a
+  * writer's append stream.
   *
   * Emits the day's full current ledger (3 rows, versioned) after every
   * batch that touches it; the highest version per day is the live
@@ -74,49 +74,37 @@ object StreamEncoding {
             stateTimeout: Option[String] = Some("1 hour")): Dataset[Ledger] = {
     val spark = obs.sparkSession
     import spark.implicits._
-    val timeoutConf =
-      if (stateTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    obs.groupByKey(_.day)
-      .flatMapGroupsWithState[EState, Ledger](
-        OutputMode.Append(), timeoutConf) {
-        (day: Long, rows: Iterator[Obs], state: GroupState[EState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var st = state.getOption.getOrElse(EState(0L, 0L,
-              Map.empty, Map.empty, Map.empty,
-              None, 0L, 0L, None, 0L, None, 0L, 0L))
-            rows.toSeq.sortBy(o => (o.us, o.eventId)).foreach { o =>
-              // the boundary law in action: only a CHANGED value (or the
-              // day's very first) opens a run — a batch seam never does
-              val etHead = !st.etLast.contains(o.eventType)
-              val cHead = !st.cLast.contains(o.cents)
-              val hHead = !st.hLast.contains(o.hour)
-              st = st.copy(
-                n = st.n + 1,
-                etLen = st.etLen + o.eventType.length,
-                etCounts = st.etCounts.updated(o.eventType,
-                  st.etCounts.getOrElse(o.eventType, 0L) + 1),
-                cCounts = st.cCounts.updated(o.cents,
-                  st.cCounts.getOrElse(o.cents, 0L) + 1),
-                hCounts = st.hCounts.updated(o.hour,
-                  st.hCounts.getOrElse(o.hour, 0L) + 1),
-                etLast = Some(o.eventType),
-                etRuns = st.etRuns + (if (etHead) 1 else 0),
-                etHeadLen = st.etHeadLen +
-                  (if (etHead) o.eventType.length.toLong else 0L),
-                cLast = Some(o.cents),
-                cRuns = st.cRuns + (if (cHead) 1 else 0),
-                hLast = Some(o.hour),
-                hRuns = st.hRuns + (if (hHead) 1 else 0))
-            }
-            st = st.copy(version = st.version + 1)
-            state.update(st)
-            stateTimeout.foreach(state.setTimeoutDuration)
-            ledgers(day, st).iterator
-          }
+    KeyedFold[Obs, Long, EState, Ledger](obs, _.day,
+      Ordering.by(o => (o.us, o.eventId)), stateTimeout) { (day, st0, rows) =>
+      var st = st0.getOrElse(EState(0L, 0L,
+        Map.empty, Map.empty, Map.empty,
+        None, 0L, 0L, None, 0L, None, 0L, 0L))
+      rows.foreach { o =>
+        // the boundary law in action: only a CHANGED value (or the
+        // day's very first) opens a run — a batch seam never does
+        val etHead = !st.etLast.contains(o.eventType)
+        val cHead = !st.cLast.contains(o.cents)
+        val hHead = !st.hLast.contains(o.hour)
+        st = st.copy(
+          n = st.n + 1,
+          etLen = st.etLen + o.eventType.length,
+          etCounts = st.etCounts.updated(o.eventType,
+            st.etCounts.getOrElse(o.eventType, 0L) + 1),
+          cCounts = st.cCounts.updated(o.cents,
+            st.cCounts.getOrElse(o.cents, 0L) + 1),
+          hCounts = st.hCounts.updated(o.hour,
+            st.hCounts.getOrElse(o.hour, 0L) + 1),
+          etLast = Some(o.eventType),
+          etRuns = st.etRuns + (if (etHead) 1 else 0),
+          etHeadLen = st.etHeadLen +
+            (if (etHead) o.eventType.length.toLong else 0L),
+          cLast = Some(o.cents),
+          cRuns = st.cRuns + (if (cHead) 1 else 0),
+          hLast = Some(o.hour),
+          hRuns = st.hRuns + (if (hHead) 1 else 0))
       }
+      st = st.copy(version = st.version + 1)
+      (Some(st), ledgers(day, st))
+    }
   }
 }

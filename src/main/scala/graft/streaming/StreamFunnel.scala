@@ -1,27 +1,19 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of q136's ordered funnel: per-user stage progress
   * (view → click → purchase, strictly ordered in event time) tracked as
-  * keyed state via `flatMapGroupsWithState`, emitting an advance record
+  * keyed state via the shared [[KeyedFold]], emitting an advance record
   * the moment a user reaches a stage — the in-flight conversion feed a
   * product dashboard tails, vs q136's batch census over the same rule.
   *
-  * State per key is three epoch-µs slots (O(1) — nothing buffers), and
-  * idle-user state expires via a processing-time TTL, so total state is
-  * bounded by users active inside the TTL — the property that survives an
-  * unbounded stream. Stage rules are shared with the batch side
+  * State per key is three epoch-µs slots (O(1) — nothing buffers).
+  * Stage rules are shared with the batch side
   * ([[graft.ops.RelationalOps.FunnelStages]]), and the spec proves the
-  * streamed advances aggregate to exactly the batch q136 census.
-  *
-  * Ordering contract: events are folded in (us, eventId) order WITHIN a
-  * micro-batch, so arrival must respect event time ACROSS batches (a
-  * tail-following production stream). For replay/backfill with
-  * out-of-order arrival, buffer-until-watermark exactly as
-  * [[VelocityDetector.detectEventTime]] does — the same recipe applies
-  * verbatim since the fold here is a strict subset of that detector's. */
+  * streamed advances aggregate to exactly the batch q136 census. State
+  * lifecycle, processing-time TTL and the ordering contract (events fold
+  * in (us, eventId) order): [[KeyedFold]]. */
 object StreamFunnel {
   case class Ev(userId: Long, eventType: String, us: Long, eventId: Long)
   /** -1 = stage not reached. */
@@ -34,39 +26,27 @@ object StreamFunnel {
     val spark = events.sparkSession
     import spark.implicits._
     val stages = graft.ops.RelationalOps.FunnelStages
-    val timeoutConf =
-      if (stateTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    events.groupByKey(_.userId)
-      .flatMapGroupsWithState[FState, Advance](
-        OutputMode.Append(), timeoutConf) {
-        (userId: Long, rows: Iterator[Ev], state: GroupState[FState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var st = state.getOption.getOrElse(FState(-1L, -1L, -1L))
-            val out = Seq.newBuilder[Advance]
-            // fold in event order — the batch census's min-based stage
-            // rule is exactly this greedy fold over an ordered series
-            rows.toSeq.sortBy(e => (e.us, e.eventId)).foreach { e =>
-              if (st.t1 < 0 && e.eventType == stages(0)) {
-                st = st.copy(t1 = e.us)
-                out += Advance(userId, 1, e.us, 0L)
-              } else if (st.t1 >= 0 && st.t2 < 0 && e.eventType == stages(1)
-                         && e.us > st.t1) { // strictly after — q136's rule
-                st = st.copy(t2 = e.us)
-                out += Advance(userId, 2, e.us, e.us - st.t1)
-              } else if (st.t2 >= 0 && st.t3 < 0 && e.eventType == stages(2)
-                         && e.us > st.t2) {
-                st = st.copy(t3 = e.us)
-                out += Advance(userId, 3, e.us, e.us - st.t2)
-              }
-            }
-            state.update(st)
-            stateTimeout.foreach(state.setTimeoutDuration)
-            out.result().iterator
-          }
+    KeyedFold[Ev, Long, FState, Advance](events, _.userId,
+      Ordering.by(e => (e.us, e.eventId)), stateTimeout) { (userId, st0, rows) =>
+      var st = st0.getOrElse(FState(-1L, -1L, -1L))
+      val out = Seq.newBuilder[Advance]
+      // fold in event order — the batch census's min-based stage
+      // rule is exactly this greedy fold over an ordered series
+      rows.foreach { e =>
+        if (st.t1 < 0 && e.eventType == stages(0)) {
+          st = st.copy(t1 = e.us)
+          out += Advance(userId, 1, e.us, 0L)
+        } else if (st.t1 >= 0 && st.t2 < 0 && e.eventType == stages(1)
+                   && e.us > st.t1) { // strictly after — q136's rule
+          st = st.copy(t2 = e.us)
+          out += Advance(userId, 2, e.us, e.us - st.t1)
+        } else if (st.t2 >= 0 && st.t3 < 0 && e.eventType == stages(2)
+                   && e.us > st.t2) {
+          st = st.copy(t3 = e.us)
+          out += Advance(userId, 3, e.us, e.us - st.t2)
+        }
       }
+      (Some(st), out.result())
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of q196's SPRT — the test run the way Wald DESIGNED
   * it: sequentially, stopping the experiment THE MOMENT the evidence
@@ -17,11 +16,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * outcomes for a decided pair are absorbed silently (in production
   * they trail in while the stop propagates).
   *
-  * Ordering contract as [[StreamCusum]]: outcomes fold in (us, eventId)
-  * order within a micro-batch and arrival respects the first-seen order
-  * across batches. Processing-time TTL bounds state by live
-  * experiments — same production dial and same test note as
-  * [[StreamAlert]] (specs pass `stateTimeout = None`). The spec proves
+  * State lifecycle, processing-time TTL (bounding state by live
+  * experiments) and the ordering contract (outcomes fold in (us, eventId)
+  * order): [[KeyedFold]]. The spec proves
   * the streamed decisions equal batch q196's decided rows exactly —
   * (rule, arm, decision, n_at_decision, llr_at_decision) — across
   * chunk splits that cut walks mid-drift. */
@@ -40,34 +37,22 @@ object StreamSprt {
             stateTimeout: Option[String] = Some("1 hour")): Dataset[Decision] = {
     val spark = obs.sparkSession
     import spark.implicits._
-    val timeoutConf =
-      if (stateTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    obs.groupByKey(o => (o.rule, o.arm))
-      .flatMapGroupsWithState[SState, Decision](
-        OutputMode.Append(), timeoutConf) {
-        (key: (String, Long), rows: Iterator[Obs], state: GroupState[SState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var st = state.getOption.getOrElse(SState(0L, 0L, decided = false))
-            val out = Seq.newBuilder[Decision]
-            rows.toSeq.sortBy(o => (o.us, o.eventId)).foreach { o =>
-              if (!st.decided) {
-                val llr = st.llr + (if (o.conv) o.up else o.down)
-                val n = st.n + 1
-                if (llr >= bound || llr <= -bound) {
-                  out += Decision(key._1, key._2,
-                    if (llr >= bound) "accept_h1" else "accept_h0", n, llr)
-                  st = SState(llr, n, decided = true)
-                } else st = SState(llr, n, decided = false)
-              } // decided: the stop is propagating — trailing outcomes absorb
-            }
-            state.update(st)
-            stateTimeout.foreach(state.setTimeoutDuration)
-            out.result().iterator
-          }
+    KeyedFold[Obs, (String, Long), SState, Decision](obs, o => (o.rule, o.arm),
+      Ordering.by(o => (o.us, o.eventId)), stateTimeout) { (key, st0, rows) =>
+      var st = st0.getOrElse(SState(0L, 0L, decided = false))
+      val out = Seq.newBuilder[Decision]
+      rows.foreach { o =>
+        if (!st.decided) {
+          val llr = st.llr + (if (o.conv) o.up else o.down)
+          val n = st.n + 1
+          if (llr >= bound || llr <= -bound) {
+            out += Decision(key._1, key._2,
+              if (llr >= bound) "accept_h1" else "accept_h0", n, llr)
+            st = SState(llr, n, decided = true)
+          } else st = SState(llr, n, decided = false)
+        } // decided: the stop is propagating — trailing outcomes absorb
       }
+      (Some(st), out.result())
+    }
   }
 }

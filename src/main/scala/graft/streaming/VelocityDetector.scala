@@ -18,7 +18,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Two expiry clocks:
   *  - [[detect]]: processing-time TTL — simplest, correct for a
-  *    tail-following production stream.
+  *    tail-following production stream; its lifecycle is [[KeyedFold]]'s.
   *  - [[detectEventTime]]: watermark + event-time TTL — the scale-correct
   *    variant for replay/backfill, where state expiry must follow the
   *    DATA's clock (a backfill at 1000× speed would otherwise never expire
@@ -56,32 +56,18 @@ object VelocityDetector {
     (alerts, st)
   }
 
-  /** @param stateTimeout processing-time TTL for idle-user state (None =
-    *   keep forever — only for tests: the timeout wakes the stream in empty
-    *   micro-batches, which makes `processAllAvailable` spin). */
+  /** @param stateTimeout processing-time TTL for idle-user state, as
+    *   [[KeyedFold]] documents. */
   def detect(txns: Dataset[Txn], maxTxns: Int = 3, windowSec: Long = 60,
              stateTimeout: Option[String] = Some("1 hour")): Dataset[Alert] = {
     val spark = txns.sparkSession
     import spark.implicits._
-    val timeoutConf =
-      if (stateTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    txns.groupByKey(_.userId)
-      .flatMapGroupsWithState[UserState, Alert](
-        OutputMode.Append(), timeoutConf) {
-        (userId: String, rows: Iterator[Txn], state: GroupState[UserState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val st0 = state.getOption.getOrElse(UserState(Nil, 0L, 0.0))
-            val (alerts, st1) =
-              advance(userId, rows.toSeq.sortBy(_.timestamp), st0, maxTxns, windowSec)
-            state.update(st1)
-            stateTimeout.foreach(state.setTimeoutDuration)
-            alerts.iterator
-          }
-      }
+    KeyedFold[Txn, String, UserState, Alert](txns, _.userId,
+      Ordering.by(_.timestamp), stateTimeout) { (userId, st0, rows) =>
+      val (alerts, st1) = advance(userId, rows,
+        st0.getOrElse(UserState(Nil, 0L, 0.0)), maxTxns, windowSec)
+      (Some(st1), alerts)
+    }
   }
 
   /** Buffered per-key event-time state: not-yet-sealed events, the folded

@@ -1,0 +1,167 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{Dataset, Encoder, SQLContext, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+
+import graft.streaming._
+
+/** The restart law for every stateful entry point: feed batches 1..k,
+  * stop the query, restart it from the same checkpoint over the same
+  * MemoryStream, feed the rest — the sink must hold exactly the rows of an
+  * uninterrupted run. Each law runs under both state-store providers.
+  *
+  * Every fixture cuts live state: the tail batches alone, from empty
+  * state, must give other rows than the restarted tail, so the law cannot
+  * pass on a cut that carries nothing. The event-time fixtures hold
+  * out-of-order rows, one duplicate row, and a row that only the restored
+  * watermark drops as late; sentinel batches seal what is buffered. */
+class KeyedStateRestartSpec extends SparkSpec {
+  import spark.implicits._
+
+  private val ProviderConf = "spark.sql.streaming.stateStore.providerClass"
+  private val providers = Seq(
+    "HDFS" -> "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
+    "RocksDB" -> "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+
+  private def bag[T](rows: Seq[T]): Map[T, Int] = rows.groupMapReduce(identity)(_ => 1)(_ + _)
+
+  /** Runs each part in its own query over ONE source and ONE checkpoint;
+    * returns the sink's rows after each part. */
+  private def drive[In: Encoder, Out: Encoder](session: SparkSession,
+      run: Dataset[In] => Dataset[Out], parts: Seq[Seq[Seq[In]]]): Seq[Seq[Out]] = {
+    implicit val sc: SQLContext = session.sqlContext
+    val mem = MemoryStream[In]
+    val out = Files.createTempDirectory("restart_out").toString
+    val ck = Files.createTempDirectory("restart_ck").toString
+    parts.map { part =>
+      val q = run(mem.toDS()).writeStream.format("parquet")
+        .option("path", out).option("checkpointLocation", ck).start()
+      try part.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+      finally q.stop()
+      assert(Files.readString(Paths.get(ck, "offsets", "0"))
+        .contains(session.conf.get(ProviderConf)), "the checkpoint pins the provider")
+      session.read.schema(implicitly[Encoder[Out]].schema).parquet(out)
+        .as[Out].collect().toSeq
+    }
+  }
+
+  def restartLaw[In: Encoder, Out: Encoder](run: Dataset[In] => Dataset[Out],
+      batches: Seq[Seq[In]], k: Int)(provider: String): Unit = {
+    val session = spark.newSession()
+    session.conf.set(ProviderConf, provider)
+    val Seq(whole) = drive(session, run, Seq(batches))
+    val Seq(head, restarted) = drive(session, run, Seq(batches.take(k), batches.drop(k)))
+    assert(whole.nonEmpty, "the fixture must produce rows")
+    assert(bag(restarted) === bag(whole),
+      "a stop/restart from the checkpoint must not change the sink rows")
+    val Seq(fresh) = drive(session, run, Seq(batches.drop(k)))
+    assert(bag(fresh) !== bag(restarted.diff(head)),
+      s"the cut after batch $k carries no state, so the law proves nothing")
+  }
+
+  private val velocity = {
+    import VelocityDetector.Txn
+    Seq(
+      Seq(Txn("u1", 10, 100), Txn("u1", 11, 110), Txn("u2", 50, 100)),
+      Seq(Txn("u1", 12, 120), Txn("u2", 60, 105), Txn("u2", 55, 110)),
+      Seq(Txn("u1", 13, 130), Txn("u2", 500, 120)), // velocity + deviation
+      Seq(Txn("u1", 14, 300), Txn("u3", 1, 300)))
+  }
+
+  private val velocityEventTime = {
+    import VelocityDetector.Txn
+    Seq(
+      Seq(Txn("u1", 10, 100), Txn("u1", 11, 130), Txn("u1", 12, 110),
+        Txn("u2", 50, 100)),
+      // u1@110 again: the one duplicate row
+      Seq(Txn("u1", 13, 140), Txn("u2", 60, 120), Txn("u2", 55, 110),
+        Txn("u1", 12, 110)),
+      // u1@105 is behind the restored watermark (140 − 30): dropped late
+      Seq(Txn("u1", 14, 150), Txn("u2", 400, 160), Txn("u1", 9, 105)),
+      Seq(Txn("sentinel", 1, 100000)),
+      Seq(Txn("sentinel", 1, 100001)))
+  }
+
+  private val heavyHitters = {
+    import StreamHeavyHitters.Ev
+    Seq(
+      Seq(Ev("a", 1), Ev("b", 3), Ev("a", 2)),
+      // b@3 again: the one duplicate row
+      Seq(Ev("a", 12), Ev("a", 5), Ev("c", 11), Ev("b", 3)),
+      // c@6 is behind the restored watermark (12 − 5): dropped late
+      Seq(Ev("a", 8), Ev("c", 6), Ev("a", 14)),
+      Seq(Ev("sentinel", 100000)),
+      Seq(Ev("sentinel", 100001)))
+  }
+
+  private val cusum = {
+    import StreamCusum.Obs
+    Seq(
+      Seq(Obs(1, 1, 0, 10000), Obs(2, 1, 1, 9000), Obs(1, 2, 2, 2000)),
+      Seq(Obs(1, 3, 3, 30000), Obs(2, 2, 4, 20000)),
+      Seq(Obs(1, 4, 5, 12000), Obs(2, 3, 6, 20000)), // alarms on carried sums
+      Seq(Obs(1, 5, 7, 1000)))
+  }
+
+  private val alertRuns = {
+    import StreamAlert.Obs
+    Seq(
+      Seq(Obs(1, 0, 0, over = true), Obs(1, 5, 1, over = true), Obs(2, 0, 2, over = true)),
+      Seq(Obs(1, 8, 3, over = true), Obs(2, 3, 4, over = false)),
+      Seq(Obs(1, 12, 5, over = true), Obs(2, 4, 6, over = true)), // fires an island opened before the cut
+      Seq(Obs(1, 13, 7, over = false), Obs(1, 20, 8, over = true), Obs(2, 20, 9, over = true)),
+      Seq(Obs(1, 31, 10, over = true)))
+  }
+
+  private val sprt = {
+    import StreamSprt.Obs
+    def o(arm: Long, us: Long, conv: Boolean) = Obs("r", arm, us, us * 2 + arm, conv, 4, -3)
+    Seq(
+      Seq(o(0, 1, conv = true), o(0, 2, conv = true), o(1, 1, conv = false)),
+      Seq(o(0, 3, conv = false), o(0, 4, conv = true), o(1, 2, conv = false)),
+      Seq(o(0, 5, conv = true), o(1, 3, conv = false)), // arm 0 crosses +10
+      Seq(o(0, 6, conv = false), o(1, 4, conv = false))) // arm 1 crosses −10
+  }
+
+  private val funnel = {
+    import StreamFunnel.Ev
+    Seq(
+      Seq(Ev(1, "view", 10, 0), Ev(2, "click", 5, 1), Ev(2, "view", 8, 2)),
+      Seq(Ev(1, "click", 20, 3), Ev(2, "click", 9, 4)),
+      Seq(Ev(1, "purchase", 30, 5), Ev(2, "purchase", 12, 6), Ev(3, "view", 1, 7)),
+      Seq(Ev(1, "view", 40, 8), Ev(3, "click", 2, 9)))
+  }
+
+  private val encoding = {
+    import StreamEncoding.Obs
+    Seq(
+      Seq(Obs(0, 1, 0, "view", 100, 1), Obs(0, 2, 1, "view", 100, 1)),
+      Seq(Obs(0, 3, 2, "click", 100, 2), Obs(1, 1, 3, "view", 5, 0)),
+      Seq(Obs(0, 4, 4, "click", 200, 2), Obs(1, 2, 5, "view", 5, 0)), // runs extend across the cut
+      Seq(Obs(0, 5, 6, "view", 200, 3)))
+  }
+
+  private val laws: Seq[(String, String => Unit)] = Seq(
+    "VelocityDetector.detect" -> restartLaw((ds: Dataset[VelocityDetector.Txn]) =>
+      VelocityDetector.detect(ds, stateTimeout = None), velocity, 2),
+    "VelocityDetector.detectEventTime" -> restartLaw((ds: Dataset[VelocityDetector.Txn]) =>
+      VelocityDetector.detectEventTime(ds), velocityEventTime, 2),
+    "StreamHeavyHitters.detect" -> restartLaw((ds: Dataset[StreamHeavyHitters.Ev]) =>
+      StreamHeavyHitters.detect(ds, windowSec = 10, capacity = 4, thresholdInv = 3,
+        watermarkDelaySec = 5), heavyHitters, 2),
+    "StreamCusum.track" -> restartLaw((ds: Dataset[StreamCusum.Obs]) =>
+      StreamCusum.track(ds, stateTimeout = None), cusum, 2),
+    "StreamAlert.track" -> restartLaw((ds: Dataset[StreamAlert.Obs]) =>
+      StreamAlert.track(ds, forUs = 10, stateTimeout = None), alertRuns, 2),
+    "StreamSprt.track" -> restartLaw((ds: Dataset[StreamSprt.Obs]) =>
+      StreamSprt.track(ds, bound = 10, stateTimeout = None), sprt, 2),
+    "StreamFunnel.track" -> restartLaw((ds: Dataset[StreamFunnel.Ev]) =>
+      StreamFunnel.track(ds, stateTimeout = None), funnel, 2),
+    "StreamEncoding.track" -> restartLaw((ds: Dataset[StreamEncoding.Obs]) =>
+      StreamEncoding.track(ds, stateTimeout = None), encoding, 2))
+
+  for ((name, law) <- laws; (providerName, provider) <- providers)
+    test(s"restart law: $name under the $providerName state store") { law(provider) }
+}
