@@ -449,8 +449,9 @@ object Bench {
   }
 
   /** The one session every main builds: `local[N]` with N shuffle
-    * partitions, UTC session time zone, UI off, ERROR log level. N is
-    * SPARK_GRAFT_CPUS, else the host's available processors. */
+    * partitions, UTC session time zone, UI off, ERROR log level, local
+    * files on [[graft.io.LocalFs]]. N is SPARK_GRAFT_CPUS, else the host's
+    * available processors. */
   def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
@@ -461,6 +462,7 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    graft.io.LocalFs.install(spark)
     spark
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
 
+import graft.io.LocalFs
 import graft.model.Transaction
 
 /** The reference's streaming topology (`TransactionProcessor.java:25-54`),
@@ -163,8 +164,10 @@ object FraudPipeline {
     * reference's at-least-once auto-commit consumer
     * (`FraudAlertConsumer.java:42`) to effective exactly-once. Readers see
     * one table (`spark.read.parquet(path)`) with `batch_id` as a partition
-    * column they can ignore. */
-  def startAlertSink(alerts: DataFrame, path: String, checkpoint: String): StreamingQuery =
+    * column they can ignore. The checkpoint logs, state stores and sink
+    * commit run on [[LocalFs]], which it installs first. */
+  def startAlertSink(alerts: DataFrame, path: String, checkpoint: String): StreamingQuery = {
+    LocalFs.install(alerts.sparkSession)
     alerts.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime("1 second"))
@@ -172,4 +175,5 @@ object FraudPipeline {
         batch.write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
       }
       .start()
+  }
 }

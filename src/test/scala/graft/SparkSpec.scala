@@ -17,6 +17,8 @@ object TestSpark {
       .config("spark.sql.autoBroadcastJoinThreshold", "-1") // let bucketed-join tests see SMJ
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // every spec runs on the local-file path the stream benchmark times
+    graft.io.LocalFs.install(s)
     s
   }
 }

@@ -1,0 +1,131 @@
+#!/usr/bin/env python3
+"""Profile one perfbench workload under Java Flight Recorder.
+
+Usage (from the repository root):
+
+    python3 tools/jfr_perfbench.py --workload NAME [--seed N] [--seconds S]
+                                   [--cores N] [--scale full|tiny] [--top K]
+
+Builds and launches the benchmark JVM exactly as perfbench/run.py does (its
+classpath() and jvm_flags()), with -XX:StartFlightRecording added, runs the
+workload once untraced, and prints:
+  - process spawns (jdk.ProcessStart), counted by executable, by thread
+    and by the Hadoop or Spark call that started them;
+  - the top-K execution-sample frames (jdk.ExecutionSample, 10 ms period);
+  - the GC pause total (jdk.GarbageCollection);
+  - the run's latency p50/p99 as run.py computes them, for context.
+The recording is kept as .bench_build/perfbench/jfr/<workload>-seed<N>.jfr
+for `jfr print` or JDK Mission Control.
+"""
+import argparse
+import collections
+import json
+import os
+import re
+import subprocess
+import sys
+import time
+
+sys.path.insert(0, os.path.join(os.getcwd(), "perfbench"))
+import run as pb  # noqa: E402  (perfbench/run.py, relative to the repository root)
+
+
+def jfr_events(path, events, depth):
+    out = subprocess.run(["jfr", "print", "--json", "--stack-depth", str(depth),
+                          "--events", events, path],
+                         check=True, capture_output=True, text=True).stdout
+    return json.loads(out)["recording"]["events"]
+
+
+def frames(ev):
+    st = ev["values"].get("stackTrace") or {}
+    return [(f["method"]["type"]["name"] + "." + f["method"]["name"]).replace("/", ".")
+            for f in st.get("frames", []) if f and f.get("method")]
+
+
+def origin(ev):
+    """The first Hadoop or Spark frame that is neither a lambda nor one of
+    Hadoop's process-launching utilities (Shell, FileUtil.readLink)."""
+    return next((f for f in frames(ev) if f.startswith(("org.apache.hadoop", "org.apache.spark"))
+                 and not f.startswith(("org.apache.hadoop.util.", "org.apache.hadoop.fs.FileUtil."))
+                 and "$$Lambda" not in f), "?")
+
+
+def thread_kind(ev):
+    """Thread name with ids and numbers folded, so one kind counts once."""
+    t = ev["values"].get("eventThread") or {}
+    name = t.get("javaName") or t.get("osName") or "?"
+    name = re.sub(r"[0-9a-f]{8}-[0-9a-f-]{27}", "<id>", name)
+    return re.sub(r"\d+", "N", name)
+
+
+def seconds(text):
+    """A JFR duration as `jfr print --json` writes it (ISO-8601, PT0.0123S)."""
+    m = re.fullmatch(r"PT(?:(\d+)H)?(?:(\d+)M)?(?:([\d.]+)S)?", text or "")
+    if not m:
+        return 0.0
+    h, mi, s = m.groups()
+    return int(h or 0) * 3600 + int(mi or 0) * 60 + float(s or 0)
+
+
+def table(title, counter, total, top):
+    print(f"{title} ({total})")
+    for key, n in counter.most_common(top):
+        print(f"  {n:7d}  {100.0 * n / max(total, 1):5.1f}%  {key}")
+
+
+def main():
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--workload", required=True, choices=sorted(pb.WORKLOADS))
+    ap.add_argument("--seed", type=int, default=1)
+    ap.add_argument("--seconds", type=float, default=12)
+    ap.add_argument("--cores", type=int, default=min(4, os.cpu_count() or 1))
+    ap.add_argument("--scale", choices=("full", "tiny"), default="full")
+    ap.add_argument("--top", type=int, default=15)
+    a = ap.parse_args()
+
+    cp = pb.classpath()
+    params = dict(pb.WORKLOADS[a.workload][a.scale])
+    work = os.path.join(pb.BUILD, "jfr", a.workload)
+    os.makedirs(work, exist_ok=True)
+    jfr = os.path.join(pb.BUILD, "jfr", f"{a.workload}-seed{a.seed}.jfr")
+    args = {"workload": a.workload, "seed": a.seed, "seconds": a.seconds, "trace": 0,
+            "cores": a.cores, "work": work, "out": os.path.join(work, "raw.json")}
+    args.update(params)
+    cmd = (["java"] + pb.jvm_flags()
+           + [f"-XX:StartFlightRecording=filename={jfr},settings=profile,dumponexit=true",
+              "-cp", cp, "perfbench.Main"]
+           + [x for k, v in args.items() for x in (f"--{k}", str(v))])
+    t0 = time.time()
+    with open(os.path.join(work, "jvm.log"), "w") as log:
+        rc = subprocess.run(cmd, stdout=log, stderr=subprocess.STDOUT, stdin=subprocess.DEVNULL,
+                            timeout=pb.JVM_TIMEOUT_S).returncode
+    if rc != 0 or not os.path.exists(jfr):
+        pb.fail(f"benchmark JVM failed ({rc}); see {os.path.join(work, 'jvm.log')}")
+    print(f"recording {jfr} ({time.time() - t0:.1f} s run)")
+
+    spawns = jfr_events(jfr, "jdk.ProcessStart", 24)
+    table("process spawns by executable",
+          collections.Counter(os.path.basename(e["values"]["command"].split(" ")[0])
+                              for e in spawns), len(spawns), a.top)
+    table("process spawns by thread", collections.Counter(map(thread_kind, spawns)),
+          len(spawns), a.top)
+    table("process spawns by origin", collections.Counter(map(origin, spawns)), len(spawns), a.top)
+
+    samples = jfr_events(jfr, "jdk.ExecutionSample", 1)
+    table("execution samples by top frame",
+          collections.Counter((frames(e) or ["?"])[0] for e in samples), len(samples), a.top)
+
+    gcs = jfr_events(jfr, "jdk.GarbageCollection", 1)
+    pause = sum(seconds(e["values"].get("sumOfPauses")) for e in gcs)
+    print(f"gc: {len(gcs)} collections, {1000 * pause:.0f} ms paused")
+
+    with open(args["out"]) as fh:
+        raw = json.load(fh)
+    e2e, _, info = pb.stream_metrics(raw, params)
+    print(f"latency p50 {e2e['latency_p50_ms']:.0f} ms, p99 {e2e['latency_p99_ms']:.0f} ms "
+          f"over {info['latency_samples']} batches")
+
+
+if __name__ == "__main__":
+    main()
