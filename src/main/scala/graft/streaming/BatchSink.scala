@@ -1,0 +1,77 @@
+package graft.streaming
+
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+
+import graft.io.LocalFs
+
+/** The micro-batch sink protocol, in one place: every store maintainer
+  * and the alert sink start here, and land each micro-batch by one of two
+  * idempotent writes.
+  *
+  *  - [[write]] — SUM- or join-shaped state: the batch's rows replace the
+  *    `path/batch_id=N` leaf, so a batch re-delivered after a failure
+  *    rewrites its own partial instead of duplicating it. Readers see one
+  *    table (`spark.read.parquet(path)`) with `batch_id` a partition
+  *    column they can ignore; even an empty batch leaves a part file that
+  *    carries the schema, so the store is readable from the first batch.
+  *  - [[mergeByDay]] — algebraic state (MAX registers, OR words): the
+  *    touched days are re-merged with the batch and rewritten, so a
+  *    re-delivered batch cannot move the store once absorbed.
+  *
+  * Exactly-once is the replayable source plus these idempotent writes
+  * (Structured Streaming's sink contract); the checkpoint logs, state
+  * stores and sink commit run on [[LocalFs]], which [[start]] installs. */
+object BatchSink {
+
+  /** Start `each` on every micro-batch of `stream` (with its batch id),
+    * on a 1 s processing-time trigger, checkpointed at `checkpoint`. */
+  def start(stream: DataFrame, checkpoint: String)(
+      each: (DataFrame, Long) => Unit): StreamingQuery = {
+    LocalFs.install(stream.sparkSession)
+    stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.ProcessingTime("1 second"))
+      .foreachBatch(each)
+      .start()
+  }
+
+  /** Replace the `path/batch_id=N` leaf with `rows`. */
+  def write(rows: DataFrame, batchId: Long, path: String): Unit =
+    rows.write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
+
+  /** Merge `delta` into the `day`-partitioned store at `path`: the stored
+    * rows of the days the delta touches are unioned with it, regrouped on
+    * `keys` by the `merge` aggregate, and only those day partitions are
+    * rewritten. Each merge reads ≤ touched-days of the store, bounded work
+    * per batch however large history grows. The merged frame is
+    * localCheckpoint'ed so the overwrite never races its own read. */
+  def mergeByDay(delta: DataFrame, path: String, keys: Seq[String],
+                 merge: Column): Unit = {
+    val existing = stored(delta.sparkSession, path).map(
+      // partition-column inference reads `day=N` back as INT — restore
+      // the delta's key type before merging
+      _.withColumn("day", col("day").cast(delta.schema("day").dataType))
+        .select(delta.columns.map(col).toIndexedSeq: _*)
+        .join(broadcast(delta.select("day").distinct()), "day"))
+    existing.fold(delta)(_.unionByName(delta))
+      .groupBy(keys.map(col): _*).agg(merge)
+      .localCheckpoint()
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("day")
+      .parquet(path)
+  }
+
+  /** The store at `path`; None only while it is missing or holds no data
+    * files. Any other read failure — a stray directory, an unreadable
+    * file — fails the micro-batch instead of merging against nothing. */
+  private def stored(spark: SparkSession, path: String): Option[DataFrame] =
+    try Some(spark.read.parquet(path))
+    catch {
+      case e: AnalysisException
+          if e.getCondition == "PATH_NOT_FOUND"
+            || e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None
+    }
+}

@@ -2,10 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.apache.spark.sql.Row
 
-import graft.io.LocalFs
 import graft.model.Transaction
 
 /** The reference's streaming topology (`TransactionProcessor.java:25-54`),
@@ -22,7 +21,7 @@ import graft.model.Transaction
   *  - A4 branch         → [[branchFraud]] (two complementary filters)
   *  - A5 serialize      → [[serialize]] (`to_json`)
   *  - A7 peek           → `observe()` metrics in [[fraudAlerts]]
-  *  - A8 sink           → [[startAlertSink]] (foreachBatch → parquet table,
+  *  - A8 sink           → [[startAlertSink]] ([[BatchSink]] → parquet table,
   *                        the InfluxDB-analog sink of B5)
   * Beyond the reference (§2.D gaps closed): event-time tumbling windows
   * with a watermark for late data ([[windowedFraudStats]]).
@@ -158,22 +157,11 @@ object FraudPipeline {
   }
 
   /** B5 — the sink: fraud alerts into a parquet "fraud table" (the InfluxDB
-    * analog) via foreachBatch, written idempotently: each micro-batch
-    * overwrites its own `batch_id=N` partition, so a batch re-delivered
-    * after a failure replaces itself instead of duplicating — upgrading the
-    * reference's at-least-once auto-commit consumer
-    * (`FraudAlertConsumer.java:42`) to effective exactly-once. Readers see
-    * one table (`spark.read.parquet(path)`) with `batch_id` as a partition
-    * column they can ignore. The checkpoint logs, state stores and sink
-    * commit run on [[LocalFs]], which it installs first. */
-  def startAlertSink(alerts: DataFrame, path: String, checkpoint: String): StreamingQuery = {
-    LocalFs.install(alerts.sparkSession)
-    alerts.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
-      }
-      .start()
-  }
+    * analog) by the [[BatchSink]] protocol: each micro-batch replaces its
+    * own `batch_id=N` leaf, so a batch re-delivered after a failure
+    * replaces itself instead of duplicating — upgrading the reference's
+    * at-least-once auto-commit consumer (`FraudAlertConsumer.java:42`) to
+    * effective exactly-once. */
+  def startAlertSink(alerts: DataFrame, path: String, checkpoint: String): StreamingQuery =
+    BatchSink.start(alerts, checkpoint)(BatchSink.write(_, _, path))
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{lit, sum}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.functions.sum
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.RelationalOps
 
@@ -15,8 +15,8 @@ import graft.ops.RelationalOps
   * applied to a SUM-shaped store.
   *
   * Idempotency here is BOOKKEEPING, not algebra: counts merge by SUM, so
-  * a re-delivered batch would double-count — the StreamShardWriter
-  * discipline (dynamic overwrite of the batch's own partition) makes a
+  * a re-delivered batch would double-count — [[BatchSink.write]] (the
+  * batch's own `batch_id=N` leaf, replaced whole) makes a
   * failure-replayed micro-batch rewrite its own partial instead of
   * appending a second copy. That covers engine-side replay (the
   * at-least-once case checkpointed foreachBatch actually produces);
@@ -37,21 +37,11 @@ object StreamBurst {
     * batch_id partition — also the unit the spec replays directly. */
   private[graft] def mergeBatch(batch: DataFrame, batchId: Long,
                                     path: String): Unit =
-    RelationalOps.hourlyCounts(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(path)
+    BatchSink.write(RelationalOps.hourlyCounts(batch), batchId, path)
 
   /** Start the maintainer on a streaming frame carrying `ts`. */
-  def start(events: DataFrame, path: String, checkpointDir: String,
-            trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) => mergeBatch(batch, id, path) }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+  def start(events: DataFrame, path: String, checkpointDir: String): StreamingQuery =
+    BatchSink.start(events, checkpointDir)(mergeBatch(_, _, path))
 
   /** The always-current q162 verdict table off the maintained store:
     * partials SUM to the hourly series, then the shared verdict stage

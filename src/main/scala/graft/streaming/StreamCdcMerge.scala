@@ -1,8 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{lit, max, sum}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.functions.{max, sum}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.RelationalOps
 
@@ -16,9 +16,9 @@ import graft.ops.RelationalOps
   * Each micro-batch's changes collapse map-combinably to per-key
   * partials — `n_changes` (a count) and the winner struct `w` over the
   * (us, event_id) total order — and land under their own `batch_id=N`
-  * partition with dynamic partition overwrite, so a failure-replayed
-  * batch REWRITES its own partial instead of double-applying (the
-  * [[StreamShardWriter]] idempotency discipline; the count column is
+  * partition by [[BatchSink.write]], so a failure-replayed batch
+  * REWRITES its own partial instead of double-applying (the batch_id
+  * idempotency discipline; the count column is
   * why bookkeeping is needed at all — the struct MAX alone is
   * algebraically idempotent). Reads merge the partials per key — SUM
   * for counts, MAX for winners; the lexicographic struct MAX is
@@ -40,22 +40,13 @@ object StreamCdcMerge {
     * spec replays directly. */
   private[graft] def mergeBatch(batch: DataFrame, batchId: Long,
                                 path: String): Unit =
-    RelationalOps.cdcCollapse(RelationalOps.cdcChanges(batch))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(path)
+    BatchSink.write(RelationalOps.cdcCollapse(RelationalOps.cdcChanges(batch)),
+      batchId, path)
 
   /** Start the maintainer on a streaming frame with the events schema
     * (ts, event_id, user_id, event_type, value). */
-  def start(events: DataFrame, path: String, checkpointDir: String,
-            trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) => mergeBatch(batch, id, path) }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+  def start(events: DataFrame, path: String, checkpointDir: String): StreamingQuery =
+    BatchSink.start(events, checkpointDir)(mergeBatch(_, _, path))
 
   /** The always-current q173 snapshot off the maintained store: partials
     * merge per key (SUM counts, MAX winners), then the shared merge

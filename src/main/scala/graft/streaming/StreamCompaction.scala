@@ -1,8 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.lit
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.{RelationalOps, ScaleOps}
 
@@ -14,7 +13,7 @@ import graft.ops.{RelationalOps, ScaleOps}
   *
   * Each micro-batch's per-day byte deltas (the exact q179 proxy) land
   * under their own `batch_id=N` partition — SUM-shaped state, so the
-  * [[StreamShardWriter]] batch_id discipline makes a failure-replayed
+  * [[BatchSink.write]] batch_id discipline makes a failure-replayed
   * batch rewrite its own partial instead of double-counting. Reads SUM
   * the partials per day and run the SAME shared roll arithmetic as
   * batch q179 ([[ScaleOps.compactionPlanFromFiles]]), so the streamed
@@ -31,21 +30,11 @@ object StreamCompaction {
     * spec replays directly. */
   private[graft] def mergeBatch(batch: DataFrame, batchId: Long,
                                 path: String): Unit =
-    ScaleOps.compactionFiles(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(path)
+    BatchSink.write(ScaleOps.compactionFiles(batch), batchId, path)
 
   /** Start the maintainer on a streaming frame with the events schema. */
-  def start(events: DataFrame, path: String, checkpointDir: String,
-            trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) => mergeBatch(batch, id, path) }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+  def start(events: DataFrame, path: String, checkpointDir: String): StreamingQuery =
+    BatchSink.start(events, checkpointDir)(mergeBatch(_, _, path))
 
   /** The always-current q179 plan off the maintained manifest: partials
     * SUM per day, then the shared roll runs unchanged. */

@@ -1,8 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, sum, when}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, sum}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.ProfileOps
 
@@ -10,7 +10,7 @@ import graft.ops.ProfileOps
   * a serving stack actually runs: the REFERENCE distribution is a fixed
   * batch artifact (the training drop's bins — bounded, like the q123
   * budget dial), live traffic's (feature, value) deltas land per
-  * micro-batch under `batch_id` partitions (the [[StreamShardWriter]]
+  * micro-batch under `batch_id` partitions ([[BatchSink.write]], the
   * SUM-state replay discipline), and the read SUMs the live bins and
   * runs the SAME shared ledger stage (`driftRender`) against the
   * reference — so when the live store holds exactly batch q206's
@@ -34,23 +34,15 @@ object StreamDrift {
     * its own batch_id partition — also the spec's replay unit. */
   private[graft] def mergeBatch(batch: DataFrame, batchId: Long,
                                 path: String): Unit =
-    ProfileOps.driftPairs(batch, None)
-      .groupBy("feature", "value_key")
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("nb"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(path)
+    BatchSink.write(
+      ProfileOps.driftPairs(batch, None)
+        .groupBy("feature", "value_key")
+        .agg(org.apache.spark.sql.functions.count(lit(1)).as("nb")),
+      batchId, path)
 
   /** Start the maintainer on a streaming frame of events. */
-  def start(events: DataFrame, path: String, checkpointDir: String,
-            trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) => mergeBatch(batch, id, path) }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+  def start(events: DataFrame, path: String, checkpointDir: String): StreamingQuery =
+    BatchSink.start(events, checkpointDir)(mergeBatch(_, _, path))
 
   /** The always-current drift ledger: live bins SUMmed from the store,
     * full-outer against the broadcast reference (a value seen on only

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.SimilarityOps
 
@@ -29,7 +29,7 @@ import graft.ops.SimilarityOps
   * depend only on (its vector, the standing index), never on other
   * arrivals — landed under their own `batch_id=N` partition, so a
   * re-delivered batch overwrites itself and cannot duplicate a row (the
-  * [[StreamShardWriter]] replay guarantee). No watermark, no streaming
+  * [[BatchSink.write]] batch_id discipline). No watermark, no streaming
   * state store; per-batch work is bounded by arrivals × probed cells. */
 object StreamFilteredAnn {
 
@@ -48,28 +48,18 @@ object StreamFilteredAnn {
       .withColumn("rn", row_number().over(byDist))
       .filter(col("rn") <= nprobe)
       .select(col("vec_id").as("q_id"), col("cell"))
-    SimilarityOps.filteredAnnRows(qVecs, probes, assigned, all)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(path)
+    BatchSink.write(SimilarityOps.filteredAnnRows(qVecs, probes, assigned, all),
+      batchId, path)
   }
 
   /** Start the maintainer on a streaming (vec_id, embedding) query frame
     * against a standing corpus. The index is built ONCE here (in
     * production: read from the batch refresher's tables). */
   def start(queries: DataFrame, corpus: DataFrame, path: String,
-            checkpointDir: String, nprobe: Int = SimilarityOps.NProbe,
-            trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery = {
+            checkpointDir: String,
+            nprobe: Int = SimilarityOps.NProbe): StreamingQuery = {
     val index = SimilarityOps.servingIndex(corpus)
-    queries.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        mergeBatch(batch, id, path, index, nprobe)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    BatchSink.start(queries, checkpointDir)(mergeBatch(_, _, path, index, nprobe))
   }
 
   /** The always-current answer store, shaped exactly like batch q200. */

@@ -1,10 +1,8 @@
 package graft.streaming
 
-import scala.util.Try
-
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{broadcast, col, max}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.functions.max
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.SketchOps
 
@@ -16,49 +14,29 @@ import graft.ops.SketchOps
   * (StreamQualityScore/StreamShardWriter's pattern) applied to sketch
   * state.
   *
-  * Idempotency is ALGEBRAIC here, stronger than the shard writer's
+  * Idempotency is ALGEBRAIC here, stronger than [[BatchSink.write]]'s
   * batch_id bookkeeping: registers merge by per-(day, j) MAX, so a
   * re-delivered batch — or the same event a thousand times — cannot move
-  * the table once absorbed. The write rewrites ONLY the day partitions
-  * the batch touched (dynamic partition overwrite), and each rewrite
-  * reads ≤ touched-days × 256 existing rows — bounded work per batch no
-  * matter how large history grows, the property that makes this viable
-  * as a forever-running maintainer.
+  * the table once absorbed. [[BatchSink.mergeByDay]] rewrites ONLY the
+  * day partitions the batch touched, and each rewrite reads
+  * ≤ touched-days × 256 existing rows — bounded work per batch no matter
+  * how large history grows, the property that makes this viable as a
+  * forever-running maintainer.
   *
   * 100 TB shape: the per-batch delta is the q154 register build (raw
   * rows collapse map-combinably; nothing corpus-scale shuffles), the
   * merge touches a bounded table, and the store is partitioned on day so
-  * range readers prune. The merged frame is localCheckpoint'ed before
-  * the overwrite so the write never races its own read of the store. */
+  * range readers prune. */
 object StreamHllCube {
 
   /** MAX-merge one (static) batch of events into the register store at
     * `path` — also the unit the spec exercises directly. */
-  private[streaming] def mergeBatch(batch: DataFrame, path: String): Unit = {
-    val spark = batch.sparkSession
-    val delta = SketchOps.userDayRegisters(batch)
-    val affected = delta.select("day").distinct()
-    val existing = Try(spark.read.parquet(path)).toOption
-      // partition-column inference reads `day=N` back as INT — restore
-      // the BIGINT key before merging with the delta
-      .map(_.selectExpr("CAST(day AS BIGINT) AS day", "j", "reg")
-        .join(broadcast(affected), "day"))
-    val merged = existing.fold(delta)(_.unionByName(delta))
-      .groupBy("day", "j").agg(max("reg").as("reg"))
-      .localCheckpoint() // sever the read-before-overwrite dependency
-    merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("day")
-      .parquet(path)
-  }
+  private[streaming] def mergeBatch(batch: DataFrame, path: String): Unit =
+    BatchSink.mergeByDay(SketchOps.userDayRegisters(batch),
+      path, Seq("day", "j"), max("reg").as("reg"))
 
   /** Start the maintainer on a streaming frame carrying `ts` and
     * `user_id`. */
-  def start(events: DataFrame, path: String, checkpointDir: String,
-            trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) => mergeBatch(batch, path) }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+  def start(events: DataFrame, path: String, checkpointDir: String): StreamingQuery =
+    BatchSink.start(events, checkpointDir)((batch, _) => mergeBatch(batch, path))
 }

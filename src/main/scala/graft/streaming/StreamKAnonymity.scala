@@ -1,8 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{lit, max, sum}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.functions.{max, sum}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.PipelineOps
 
@@ -16,7 +16,7 @@ import graft.ops.PipelineOps
   * sees k dropping the moment a new rare QI combination arrives
   * (spec-pinned: one arriving singleton collapses k to 1 live).
   *
-  * SUM-shaped state, so the [[StreamShardWriter]] batch_id discipline
+  * SUM-shaped state, so the [[BatchSink.write]] batch_id discipline
   * carries the replay guarantee; the store is bounded by the QI
   * domain, not the row count, and the ladder only ever reads the
   * compacted class table. */
@@ -27,22 +27,12 @@ object StreamKAnonymity {
     * replay unit. */
   private[graft] def mergeBatch(batch: DataFrame, batchId: Long,
                                 path: String): Unit =
-    PipelineOps.kAnonymityFine(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(path)
+    BatchSink.write(PipelineOps.kAnonymityFine(batch), batchId, path)
 
   /** Start the maintainer on a streaming frame with the customer QI
     * columns (c_nationkey, c_mktsegment, c_acctbal). */
-  def start(customers: DataFrame, path: String, checkpointDir: String,
-            trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    customers.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) => mergeBatch(batch, id, path) }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+  def start(customers: DataFrame, path: String, checkpointDir: String): StreamingQuery =
+    BatchSink.start(customers, checkpointDir)(mergeBatch(_, _, path))
 
   /** The always-current q180 ladder off the maintained class store. */
   def posture(spark: SparkSession, path: String): DataFrame =

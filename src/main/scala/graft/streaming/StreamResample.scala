@@ -1,8 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, max, struct, sum}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.functions.{col, max, struct, sum}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.RelationalOps
 
@@ -18,7 +18,7 @@ import graft.ops.RelationalOps
   * streamed panel is bit-equal to the batch query by construction.
   *
   * Mixed-state store (the StreamCdcMerge class): `n_obs` is SUM state
-  * and leans on the [[StreamShardWriter]] batch_id replay discipline,
+  * and leans on the [[BatchSink.write]] batch_id replay discipline,
   * while the fill winner is a lexicographic struct MAX — associative,
   * commutative, idempotent — so LATE data is handled by algebra alone:
   * an earlier-timestamped observation arriving in a later batch merges
@@ -32,24 +32,16 @@ object StreamResample {
     * replay unit. The winner struct is flattened for the store. */
   private[graft] def mergeBatch(batch: DataFrame, batchId: Long,
                                 path: String): Unit =
-    RelationalOps.resampleCells(batch)
-      .selectExpr("user_id", "hour", "n_obs",
-        "w.us AS us", "w.event_id AS event_id", "w.cents AS cents")
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(path)
+    BatchSink.write(
+      RelationalOps.resampleCells(batch)
+        .selectExpr("user_id", "hour", "n_obs",
+          "w.us AS us", "w.event_id AS event_id", "w.cents AS cents"),
+      batchId, path)
 
   /** Start the maintainer on a streaming frame with `ts`, `user_id`,
     * `event_id`, `value`. */
-  def start(events: DataFrame, path: String, checkpointDir: String,
-            trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) => mergeBatch(batch, id, path) }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+  def start(events: DataFrame, path: String, checkpointDir: String): StreamingQuery =
+    BatchSink.start(events, checkpointDir)(mergeBatch(_, _, path))
 
   /** The always-current q190 panel off the maintained cell store. */
   def panel(spark: SparkSession, path: String): DataFrame =

@@ -1,10 +1,8 @@
 package graft.streaming
 
-import scala.util.Try
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, expr}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.SketchOps
 
@@ -26,40 +24,21 @@ import graft.ops.SketchOps
   * artifact is bit-equal to the batch query by construction.
   *
   * 100 TB shape: the per-batch delta is one map-combinable collapse of
-  * the batch; each merge rewrites only the day partitions the batch
-  * touched and reads ≤ touched-days × blocks × 16 existing words —
-  * bounded work per batch forever. */
+  * the batch; each [[BatchSink.mergeByDay]] rewrites only the day
+  * partitions the batch touched and reads ≤ touched-days × blocks × 16
+  * existing words — bounded work per batch forever. */
 object StreamRoaring {
 
   /** bit_or-merge one (static) batch of events into the word store at
     * `path` — also the unit the spec replays and duplicates directly. */
-  private[graft] def mergeBatch(batch: DataFrame, path: String): Unit = {
-    val spark = batch.sparkSession
-    val delta = SketchOps.roaringWords(SketchOps.roaringTriples(batch))
-    val affected = delta.select("day").distinct()
-    val existing = Try(spark.read.parquet(path)).toOption
-      // partition-column inference reads `day=N` back as INT — restore
-      // the BIGINT key before merging with the delta
-      .map(_.selectExpr("CAST(day AS BIGINT) AS day", "blk", "wi", "word")
-        .join(broadcast(affected), "day"))
-    val merged = existing.fold(delta)(_.unionByName(delta))
-      .groupBy("day", "blk", "wi").agg(expr("bit_or(word)").as("word"))
-      .localCheckpoint() // sever the read-before-overwrite dependency
-    merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("day")
-      .parquet(path)
-  }
+  private[graft] def mergeBatch(batch: DataFrame, path: String): Unit =
+    BatchSink.mergeByDay(SketchOps.roaringWords(SketchOps.roaringTriples(batch)),
+      path, Seq("day", "blk", "wi"), expr("bit_or(word)").as("word"))
 
   /** Start the maintainer on a streaming frame carrying `ts` and
     * `value`. */
-  def start(events: DataFrame, path: String, checkpointDir: String,
-            trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) => mergeBatch(batch, path) }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+  def start(events: DataFrame, path: String, checkpointDir: String): StreamingQuery =
+    BatchSink.start(events, checkpointDir)((batch, _) => mergeBatch(batch, path))
 
   /** The always-current q178 artifact off the maintained store: exact
     * counts ARE the popcounts, then the shared render runs unchanged. */

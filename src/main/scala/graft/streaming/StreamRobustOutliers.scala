@@ -1,8 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{lit, sum}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.functions.sum
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.RelationalOps
 
@@ -21,7 +21,7 @@ import graft.ops.RelationalOps
   * don't compose — but the value-count store is plain SUM state, so the
   * selection is always over the compacted (day, cents) table (bounded
   * by days × distinct cents, never row count) and the
-  * [[StreamShardWriter]] batch_id discipline carries the replay
+  * [[BatchSink.write]] batch_id discipline carries the replay
   * guarantee: a re-delivered batch overwrites its own partition and
   * cannot double a count. A landing whale moves the live flag census
   * the moment it arrives; the medians it anchors to move by at most one
@@ -32,21 +32,11 @@ object StreamRobustOutliers {
     * under its own batch_id partition — also the spec's replay unit. */
   private[graft] def mergeBatch(batch: DataFrame, batchId: Long,
                                 path: String): Unit =
-    RelationalOps.robustValueCounts(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(path)
+    BatchSink.write(RelationalOps.robustValueCounts(batch), batchId, path)
 
   /** Start the maintainer on a streaming frame with `ts` and `value`. */
-  def start(events: DataFrame, path: String, checkpointDir: String,
-            trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) => mergeBatch(batch, id, path) }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+  def start(events: DataFrame, path: String, checkpointDir: String): StreamingQuery =
+    BatchSink.start(events, checkpointDir)(mergeBatch(_, _, path))
 
   /** The always-current q187 census off the maintained count store. */
   def posture(spark: SparkSession, path: String): DataFrame =

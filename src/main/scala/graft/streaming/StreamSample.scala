@@ -1,8 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.lit
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.SketchOps
 
@@ -22,7 +21,7 @@ import graft.ops.SketchOps
   *
   * Contract: ids arrive exactly once across batches (each doc lives in
   * one micro-batch, as in any partitioned corpus walk); a RE-DELIVERED
-  * batch overwrites its own partition (the [[StreamShardWriter]]
+  * batch overwrites its own partition (the [[BatchSink.write]] batch_id
   * discipline), so replays cannot duplicate a candidate. State is
   * bounded: each batch contributes ≤ K rows per group regardless of
   * batch size, and the read merges ≤ K·groups·batches rows — never the
@@ -36,23 +35,11 @@ object StreamSample {
     * unit. */
   private[graft] def mergeBatch(batch: DataFrame, batchId: Long,
                                 path: String, k: Int): Unit =
-    SketchOps.selectTopKRows(batch, k)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(path)
+    BatchSink.write(SketchOps.selectTopKRows(batch, k), batchId, path)
 
   /** Start the maintainer on a streaming (g, id, key) frame. */
-  def start(rows: DataFrame, path: String, checkpointDir: String, k: Int,
-            trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        mergeBatch(batch, id, path, k)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+  def start(rows: DataFrame, path: String, checkpointDir: String, k: Int): StreamingQuery =
+    BatchSink.start(rows, checkpointDir)(mergeBatch(_, _, path, k))
 
   /** The always-current sample: the stored per-batch partials re-enter
     * the shared selection stage (truncate-merge). Returns (g, id, key)

@@ -14,12 +14,12 @@ import graft.ops.PipelineOps
   * job publishes can never disagree; `StreamShardWriterSpec` re-runs the
   * q100 round-trip check against the STREAMED directory).
   *
-  * Write protocol: foreachBatch, each micro-batch stamped with its
-  * batch_id and written with DYNAMIC partition overwrite under
-  * `shard=K/batch_id=N/` — a batch re-delivered after a failure replaces
-  * exactly its own (shard, batch_id) leaves instead of duplicating
-  * (the [[FraudPipeline.startAlertSink]] idempotency upgrade, extended to
-  * a partitioned layout). Readers see ONE table (`spark.read.parquet`)
+  * Write protocol: started by [[BatchSink]], each micro-batch stamped
+  * with its batch_id and written shard-first under `shard=K/batch_id=N/`
+  * — a batch re-delivered after a failure replaces exactly its own
+  * (shard, batch_id) leaves instead of duplicating ([[BatchSink.write]]'s
+  * idempotency, extended to a shard-first layout so a release loader
+  * reads `shard=K/` directly). Readers see ONE table (`spark.read.parquet`)
   * with `shard` the partition column a release loader prunes on and
   * `batch_id` bookkeeping they ignore.
   *
@@ -61,14 +61,11 @@ object StreamShardWriter {
     * the batch touches). */
   def start(stream: DataFrame, path: String, checkpoint: String,
             nShards: Int = 16): StreamingQuery =
-    route(stream, nShards).writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("shard", "batch_id")
-          .parquet(path)
-      }
-      .start()
+    BatchSink.start(route(stream, nShards), checkpoint) { (batch, batchId) =>
+      batch.withColumn("batch_id", lit(batchId))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("shard", "batch_id")
+        .parquet(path)
+    }
 }

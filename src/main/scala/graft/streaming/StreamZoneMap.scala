@@ -1,8 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{lit, max, min, sum}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.functions.{max, min, sum}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.ScaleOps
 
@@ -15,8 +15,9 @@ import graft.ops.ScaleOps
   * MAX-mergeable registers ([[StreamHllCube]], algebraic idempotency),
   * SUM-shaped counts ([[StreamBurst]], bookkeeping idempotency), and
   * here the MIXED store whose min/max columns are algebraic but whose
-  * counts still need the batch_id discipline — so the whole store uses
-  * it uniformly, and a failure-replayed batch rewrites its own partial.
+  * counts still need the [[BatchSink.write]] batch_id discipline — so
+  * the whole store uses it uniformly, and a failure-replayed batch
+  * rewrites its own partial.
   *
   * This is how file-level statistics actually come to exist at 100 TB:
   * the WRITER maintains them as data lands (every parquet footer /
@@ -30,22 +31,12 @@ object StreamZoneMap {
     * batch_id partition — also the unit the spec replays directly. */
   private[graft] def mergeBatch(batch: DataFrame, batchId: Long,
                                 path: String): Unit =
-    ScaleOps.zoneStats(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(path)
+    BatchSink.write(ScaleOps.zoneStats(batch), batchId, path)
 
   /** Start the maintainer on a streaming frame carrying `ts` and
     * `value`. */
-  def start(events: DataFrame, path: String, checkpointDir: String,
-            trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) => mergeBatch(batch, id, path) }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+  def start(events: DataFrame, path: String, checkpointDir: String): StreamingQuery =
+    BatchSink.start(events, checkpointDir)(mergeBatch(_, _, path))
 
   /** The always-current q160 audit off the maintained store: partials
     * merge per day (MIN/MAX/SUM — each column by its own algebra), then
