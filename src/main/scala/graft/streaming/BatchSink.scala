@@ -22,7 +22,10 @@ import graft.io.LocalFs
   *
   * Exactly-once is the replayable source plus these idempotent writes
   * (Structured Streaming's sink contract); the checkpoint logs, state
-  * stores and sink commit run on [[LocalFs]], which [[start]] installs. */
+  * stores and sink commit run on [[LocalFs]], which [[start]] installs.
+  * A store maintainer is a delta over one static batch on one of the two
+  * bases below, [[LeafStore]] or [[DayStore]]; they alone know how a
+  * maintainer lands and starts a micro-batch. */
 object BatchSink {
 
   /** Start `each` on every micro-batch of `stream` (with its batch id),
@@ -74,4 +77,35 @@ object BatchSink {
           if e.getCondition == "PATH_NOT_FOUND"
             || e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None
     }
+}
+
+/** A store maintainer whose micro-batches land by [[BatchSink.write]]:
+  * `delta` collapses one static batch to the partial the store keeps
+  * (SUM- or join-shaped state, so replay safety is the batch_id leaf). */
+abstract class LeafStore(delta: DataFrame => DataFrame) {
+
+  /** Land one (static) batch's partial under its own batch_id leaf — also
+    * the unit the specs replay directly. */
+  private[graft] def mergeBatch(batch: DataFrame, batchId: Long, path: String): Unit =
+    BatchSink.write(delta(batch), batchId, path)
+
+  /** Start the maintainer on a streaming frame of the delta's input. */
+  def start(events: DataFrame, path: String, checkpointDir: String): StreamingQuery =
+    BatchSink.start(events, checkpointDir)(mergeBatch(_, _, path))
+}
+
+/** A store maintainer whose micro-batches land by [[BatchSink.mergeByDay]]:
+  * `delta` collapses one static batch to day-keyed rows, regrouped with
+  * the stored days on `keys` by the algebraic `merge` aggregate, so
+  * redelivery cannot move the store and no batch id is needed. */
+abstract class DayStore(delta: DataFrame => DataFrame, keys: Seq[String], merge: Column) {
+
+  /** Merge one (static) batch into the store at `path` — also the unit
+    * the specs replay and duplicate directly. */
+  private[graft] def mergeBatch(batch: DataFrame, path: String): Unit =
+    BatchSink.mergeByDay(delta(batch), path, keys, merge)
+
+  /** Start the maintainer on a streaming frame of the delta's input. */
+  def start(events: DataFrame, path: String, checkpointDir: String): StreamingQuery =
+    BatchSink.start(events, checkpointDir)((batch, _) => mergeBatch(batch, path))
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.sum
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.RelationalOps
 
@@ -30,18 +29,11 @@ import graft.ops.RelationalOps
   * collapse of the batch (bounded by the batch's calendar hours); the
   * store grows by ≤ hours-per-batch rows per batch and reads collapse
   * it to the calendar-bounded hourly table before the bounded verdict
-  * join. Nothing corpus-scale ever shuffles. */
-object StreamBurst {
-
-  /** Write one (static) batch's partial hourly counts under its own
-    * batch_id partition — also the unit the spec replays directly. */
-  private[graft] def mergeBatch(batch: DataFrame, batchId: Long,
-                                    path: String): Unit =
-    BatchSink.write(RelationalOps.hourlyCounts(batch), batchId, path)
-
-  /** Start the maintainer on a streaming frame carrying `ts`. */
-  def start(events: DataFrame, path: String, checkpointDir: String): StreamingQuery =
-    BatchSink.start(events, checkpointDir)(mergeBatch(_, _, path))
+  * join. Nothing corpus-scale ever shuffles.
+  *
+  * A [[LeafStore]] over a streaming frame carrying `ts`: the delta is
+  * the batch's partial hourly counts. */
+object StreamBurst extends LeafStore(RelationalOps.hourlyCounts) {
 
   /** The always-current q162 verdict table off the maintained store:
     * partials SUM to the hourly series, then the shared verdict stage

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{max, sum}
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.RelationalOps
 
@@ -32,21 +31,13 @@ import graft.ops.RelationalOps
   * delta is one map-combinable collapse of the batch, the store carries
   * one row per (touched key, batch) and compacts on read, and the base
   * is only ever joined co-keyed at snapshot time. Raw history is never
-  * re-read. */
-object StreamCdcMerge {
-
-  /** Collapse one (static) batch of raw events to per-key partials and
-    * write them under their own batch_id partition — also the unit the
-    * spec replays directly. */
-  private[graft] def mergeBatch(batch: DataFrame, batchId: Long,
-                                path: String): Unit =
-    BatchSink.write(RelationalOps.cdcCollapse(RelationalOps.cdcChanges(batch)),
-      batchId, path)
-
-  /** Start the maintainer on a streaming frame with the events schema
-    * (ts, event_id, user_id, event_type, value). */
-  def start(events: DataFrame, path: String, checkpointDir: String): StreamingQuery =
-    BatchSink.start(events, checkpointDir)(mergeBatch(_, _, path))
+  * re-read.
+  *
+  * A [[LeafStore]] over a streaming frame with the events schema (ts,
+  * event_id, user_id, event_type, value): the delta is the batch's
+  * per-key partials. */
+object StreamCdcMerge extends LeafStore(batch =>
+  RelationalOps.cdcCollapse(RelationalOps.cdcChanges(batch))) {
 
   /** The always-current q173 snapshot off the maintained store: partials
     * merge per key (SUM counts, MAX winners), then the shared merge

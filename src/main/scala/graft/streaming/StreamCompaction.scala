@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.{RelationalOps, ScaleOps}
 
@@ -22,19 +21,11 @@ import graft.ops.{RelationalOps, ScaleOps}
   *
   * 100 TB shape: the per-batch delta is one map-combinable collapse of
   * the batch; the store carries one row per (day, batch) and compacts
-  * on read; the planner's work stays bounded metadata forever. */
-object StreamCompaction {
-
-  /** Collapse one (static) batch of events to per-day byte partials and
-    * write them under their own batch_id partition — also the unit the
-    * spec replays directly. */
-  private[graft] def mergeBatch(batch: DataFrame, batchId: Long,
-                                path: String): Unit =
-    BatchSink.write(ScaleOps.compactionFiles(batch), batchId, path)
-
-  /** Start the maintainer on a streaming frame with the events schema. */
-  def start(events: DataFrame, path: String, checkpointDir: String): StreamingQuery =
-    BatchSink.start(events, checkpointDir)(mergeBatch(_, _, path))
+  * on read; the planner's work stays bounded metadata forever.
+  *
+  * A [[LeafStore]] over a streaming frame with the events schema: the
+  * delta is the batch's per-day byte partials. */
+object StreamCompaction extends LeafStore(ScaleOps.compactionFiles) {
 
   /** The always-current q179 plan off the maintained manifest: partials
     * SUM per day, then the shared roll runs unchanged. */

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, sum}
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.ProfileOps
 
@@ -20,8 +19,14 @@ import graft.ops.ProfileOps
   * (spec: an all-error batch pages the event_type monitor live).
   *
   * Store bounded by the feature-value domain × batches; the ledger
-  * only ever reads the compacted bin table. */
-object StreamDrift {
+  * only ever reads the compacted bin table.
+  *
+  * A [[LeafStore]] over a streaming frame of events: the delta is the
+  * batch's live bin partials. */
+object StreamDrift extends LeafStore(batch =>
+  ProfileOps.driftPairs(batch, None)
+    .groupBy("feature", "value_key")
+    .agg(org.apache.spark.sql.functions.count(lit(1)).as("nb"))) {
 
   /** Reference bins (feature, value_key, na) from a static reference
     * drop — computed once, the monitor's fixed yardstick. */
@@ -29,20 +34,6 @@ object StreamDrift {
     ProfileOps.driftPairs(reference, None)
       .groupBy("feature", "value_key")
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("na"))
-
-  /** Collapse one (static) batch of live events to bin partials under
-    * its own batch_id partition — also the spec's replay unit. */
-  private[graft] def mergeBatch(batch: DataFrame, batchId: Long,
-                                path: String): Unit =
-    BatchSink.write(
-      ProfileOps.driftPairs(batch, None)
-        .groupBy("feature", "value_key")
-        .agg(org.apache.spark.sql.functions.count(lit(1)).as("nb")),
-      batchId, path)
-
-  /** Start the maintainer on a streaming frame of events. */
-  def start(events: DataFrame, path: String, checkpointDir: String): StreamingQuery =
-    BatchSink.start(events, checkpointDir)(mergeBatch(_, _, path))
 
   /** The always-current drift ledger: live bins SUMmed from the store,
     * full-outer against the broadcast reference (a value seen on only

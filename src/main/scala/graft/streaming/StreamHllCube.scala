@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.max
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.SketchOps
 
@@ -26,17 +24,9 @@ import graft.ops.SketchOps
   * 100 TB shape: the per-batch delta is the q154 register build (raw
   * rows collapse map-combinably; nothing corpus-scale shuffles), the
   * merge touches a bounded table, and the store is partitioned on day so
-  * range readers prune. */
-object StreamHllCube {
-
-  /** MAX-merge one (static) batch of events into the register store at
-    * `path` — also the unit the spec exercises directly. */
-  private[streaming] def mergeBatch(batch: DataFrame, path: String): Unit =
-    BatchSink.mergeByDay(SketchOps.userDayRegisters(batch),
-      path, Seq("day", "j"), max("reg").as("reg"))
-
-  /** Start the maintainer on a streaming frame carrying `ts` and
-    * `user_id`. */
-  def start(events: DataFrame, path: String, checkpointDir: String): StreamingQuery =
-    BatchSink.start(events, checkpointDir)((batch, _) => mergeBatch(batch, path))
-}
+  * range readers prune.
+  *
+  * A [[DayStore]] over a streaming frame carrying `ts` and `user_id`: the
+  * delta is the batch's (day, j) registers, MAX-merged. */
+object StreamHllCube extends DayStore(SketchOps.userDayRegisters,
+  Seq("day", "j"), max("reg").as("reg"))

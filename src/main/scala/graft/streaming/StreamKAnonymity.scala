@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{max, sum}
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.PipelineOps
 
@@ -19,20 +18,12 @@ import graft.ops.PipelineOps
   * SUM-shaped state, so the [[BatchSink.write]] batch_id discipline
   * carries the replay guarantee; the store is bounded by the QI
   * domain, not the row count, and the ladder only ever reads the
-  * compacted class table. */
-object StreamKAnonymity {
-
-  /** Collapse one (static) batch of customer rows to fine-class
-    * partials under its own batch_id partition — also the spec's
-    * replay unit. */
-  private[graft] def mergeBatch(batch: DataFrame, batchId: Long,
-                                path: String): Unit =
-    BatchSink.write(PipelineOps.kAnonymityFine(batch), batchId, path)
-
-  /** Start the maintainer on a streaming frame with the customer QI
-    * columns (c_nationkey, c_mktsegment, c_acctbal). */
-  def start(customers: DataFrame, path: String, checkpointDir: String): StreamingQuery =
-    BatchSink.start(customers, checkpointDir)(mergeBatch(_, _, path))
+  * compacted class table.
+  *
+  * A [[LeafStore]] over a streaming frame with the customer QI columns
+  * (c_nationkey, c_mktsegment, c_acctbal): the delta is the batch's
+  * fine-class partials. */
+object StreamKAnonymity extends LeafStore(PipelineOps.kAnonymityFine) {
 
   /** The always-current q180 ladder off the maintained class store. */
   def posture(spark: SparkSession, path: String): DataFrame =

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, max, struct, sum}
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.RelationalOps
 
@@ -24,24 +23,15 @@ import graft.ops.RelationalOps
   * an earlier-timestamped observation arriving in a later batch merges
   * into its cell but cannot displace a later winner, and the fill it
   * feeds stays exactly what a batch run over the full history would
-  * compute (spec-pinned). */
-object StreamResample {
-
-  /** Collapse one (static) batch of events to per-(user, hour) cell
-    * partials under its own batch_id partition — also the spec's
-    * replay unit. The winner struct is flattened for the store. */
-  private[graft] def mergeBatch(batch: DataFrame, batchId: Long,
-                                path: String): Unit =
-    BatchSink.write(
-      RelationalOps.resampleCells(batch)
-        .selectExpr("user_id", "hour", "n_obs",
-          "w.us AS us", "w.event_id AS event_id", "w.cents AS cents"),
-      batchId, path)
-
-  /** Start the maintainer on a streaming frame with `ts`, `user_id`,
-    * `event_id`, `value`. */
-  def start(events: DataFrame, path: String, checkpointDir: String): StreamingQuery =
-    BatchSink.start(events, checkpointDir)(mergeBatch(_, _, path))
+  * compute (spec-pinned).
+  *
+  * A [[LeafStore]] over a streaming frame with `ts`, `user_id`,
+  * `event_id`, `value`: the delta is the batch's per-(user, hour) cell
+  * partials, the winner struct flattened for the store. */
+object StreamResample extends LeafStore(batch =>
+  RelationalOps.resampleCells(batch)
+    .selectExpr("user_id", "hour", "n_obs",
+      "w.us AS us", "w.event_id AS event_id", "w.cents AS cents")) {
 
   /** The always-current q190 panel off the maintained cell store. */
   def panel(spark: SparkSession, path: String): DataFrame =

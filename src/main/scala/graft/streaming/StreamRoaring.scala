@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.SketchOps
 
@@ -26,19 +25,13 @@ import graft.ops.SketchOps
   * 100 TB shape: the per-batch delta is one map-combinable collapse of
   * the batch; each [[BatchSink.mergeByDay]] rewrites only the day
   * partitions the batch touched and reads ≤ touched-days × blocks × 16
-  * existing words — bounded work per batch forever. */
-object StreamRoaring {
-
-  /** bit_or-merge one (static) batch of events into the word store at
-    * `path` — also the unit the spec replays and duplicates directly. */
-  private[graft] def mergeBatch(batch: DataFrame, path: String): Unit =
-    BatchSink.mergeByDay(SketchOps.roaringWords(SketchOps.roaringTriples(batch)),
-      path, Seq("day", "blk", "wi"), expr("bit_or(word)").as("word"))
-
-  /** Start the maintainer on a streaming frame carrying `ts` and
-    * `value`. */
-  def start(events: DataFrame, path: String, checkpointDir: String): StreamingQuery =
-    BatchSink.start(events, checkpointDir)((batch, _) => mergeBatch(batch, path))
+  * existing words — bounded work per batch forever.
+  *
+  * A [[DayStore]] over a streaming frame carrying `ts` and `value`: the
+  * delta is the batch's (day, blk, wi) words, bit_or-merged. */
+object StreamRoaring extends DayStore(
+  batch => SketchOps.roaringWords(SketchOps.roaringTriples(batch)),
+  Seq("day", "blk", "wi"), expr("bit_or(word)").as("word")) {
 
   /** The always-current q178 artifact off the maintained store: exact
     * counts ARE the popcounts, then the shared render runs unchanged. */

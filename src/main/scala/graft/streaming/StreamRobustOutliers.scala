@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.sum
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.RelationalOps
 
@@ -25,18 +24,11 @@ import graft.ops.RelationalOps
   * guarantee: a re-delivered batch overwrites its own partition and
   * cannot double a count. A landing whale moves the live flag census
   * the moment it arrives; the medians it anchors to move by at most one
-  * rank (spec-pinned) — the robustness argument, observed live. */
-object StreamRobustOutliers {
-
-  /** Collapse one (static) batch of events to (day, cents, n) partials
-    * under its own batch_id partition — also the spec's replay unit. */
-  private[graft] def mergeBatch(batch: DataFrame, batchId: Long,
-                                path: String): Unit =
-    BatchSink.write(RelationalOps.robustValueCounts(batch), batchId, path)
-
-  /** Start the maintainer on a streaming frame with `ts` and `value`. */
-  def start(events: DataFrame, path: String, checkpointDir: String): StreamingQuery =
-    BatchSink.start(events, checkpointDir)(mergeBatch(_, _, path))
+  * rank (spec-pinned) — the robustness argument, observed live.
+  *
+  * A [[LeafStore]] over a streaming frame with `ts` and `value`: the
+  * delta is the batch's (day, cents, n) partials. */
+object StreamRobustOutliers extends LeafStore(RelationalOps.robustValueCounts) {
 
   /** The always-current q187 census off the maintained count store. */
   def posture(spark: SparkSession, path: String): DataFrame =

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{max, min, sum}
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.ScaleOps
 
@@ -24,19 +23,11 @@ import graft.ops.ScaleOps
   * Iceberg manifest is exactly this store), and readers prune without
   * touching data. The per-batch delta is one map-combinable collapse of
   * the batch; reads collapse the bounded store before the bounded audit
-  * join. Nothing corpus-scale ever shuffles. */
-object StreamZoneMap {
-
-  /** Write one (static) batch's per-day zone stats under its own
-    * batch_id partition — also the unit the spec replays directly. */
-  private[graft] def mergeBatch(batch: DataFrame, batchId: Long,
-                                path: String): Unit =
-    BatchSink.write(ScaleOps.zoneStats(batch), batchId, path)
-
-  /** Start the maintainer on a streaming frame carrying `ts` and
-    * `value`. */
-  def start(events: DataFrame, path: String, checkpointDir: String): StreamingQuery =
-    BatchSink.start(events, checkpointDir)(mergeBatch(_, _, path))
+  * join. Nothing corpus-scale ever shuffles.
+  *
+  * A [[LeafStore]] over a streaming frame carrying `ts` and `value`: the
+  * delta is the batch's per-day zone stats. */
+object StreamZoneMap extends LeafStore(ScaleOps.zoneStats) {
 
   /** The always-current q160 audit off the maintained store: partials
     * merge per day (MIN/MAX/SUM — each column by its own algebra), then

@@ -3,15 +3,18 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.ops.{RelationalOps, ScaleOps}
-import graft.streaming.{StreamCompaction, StreamRoaring}
+import graft.ops.{RelationalOps, ScaleOps, SimilarityOps}
+import graft.streaming._
 
-/** The micro-batch sink protocol of [[graft.streaming.BatchSink]], on one
-  * maintainer per write: `StreamCompaction` (batch_id leaf write, SUM
-  * state) and `StreamRoaring` (day merge, OR state). */
+/** The micro-batch sink protocol of [[graft.streaming.BatchSink]]: the
+  * sink restart law on all twelve store maintainers — the eight
+  * [[LeafStore]]s, the two [[DayStore]]s, `StreamSample` and
+  * `StreamFilteredAnn` — and the two writes' edge cases, on
+  * `StreamCompaction` (batch_id leaf write, SUM state) and `StreamRoaring`
+  * (day merge, OR state). */
 class BatchSinkSpec extends SparkSpec {
   import spark.implicits._
 
@@ -33,29 +36,40 @@ class BatchSinkSpec extends SparkSpec {
     Seq((1L, 5L, "view", 7.25), (2L, 1L, "click", 2.50), (2L, 7L, "buy", 4.00),
       (0L, 6L, "buy", 3.00)))
 
+  /** `batches` in the events schema, with an event id unique per row. */
+  private lazy val eventInput: Seq[DataFrame] = batches.map(b => events(b.toDF())
+    .withColumn("event_id", expr(s"user_id * 10 + unix_micros(ts) DIV ${RelationalOps.DayUs}")))
+
   /** Stop the query after batch k, restart it from the same checkpoint
     * over the same source, then replay batch k through `replay` with its
-    * id: the store must read as an uninterrupted run's. */
+    * id: the store must read as an uninterrupted run's, and the restarted
+    * query must go on with the batch ids the cut left off at. The source
+    * is a parquet directory fed one file per batch, so one law serves
+    * every input schema. */
   private def restartLaw(start: (DataFrame, String, String) => StreamingQuery,
-                         replay: (DataFrame, Long, String) => Unit, k: Int): Unit = {
-    implicit val sc = spark.sqlContext
-    def run(parts: Seq[Seq[Seq[Ev]]]): String = {
-      val mem = MemoryStream[Ev]
+                         replay: (DataFrame, Long, String) => Unit, k: Int,
+                         input: Seq[DataFrame] = eventInput): Unit = {
+    def run(parts: Seq[Seq[DataFrame]]): (String, Seq[Long]) = {
+      val src = tmp("sink_src")
       val store = tmp("sink") + "/store"
       val ck = tmp("sink_ck")
-      parts.foreach { part =>
-        val q = start(events(mem.toDF()), store, ck)
-        try part.foreach { b => mem.addData(b); q.processAllAvailable() }
-        finally q.stop()
+      val ids = parts.flatMap { part =>
+        val q = start(spark.readStream.schema(input.head.schema).parquet(src), store, ck)
+        try part.foreach { b =>
+          b.coalesce(1).write.mode("append").parquet(src)
+          q.processAllAvailable()
+        } finally q.stop()
+        q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSeq
       }
-      store
+      (store, ids)
     }
     def read(store: String) = rows(spark.read.parquet(store))
-    val whole = read(run(Seq(batches)))
-    val store = run(Seq(batches.take(k), batches.drop(k)))
-    replay(events(batches(k - 1).toDF()), k - 1L, store)
-    assert(whole.nonEmpty, "the fixture must produce rows")
-    assert(read(store) === whole,
+    val (whole, wholeIds) = run(Seq(input))
+    val (store, ids) = run(Seq(input.take(k), input.drop(k)))
+    replay(input(k - 1), k - 1L, store)
+    assert(read(whole).nonEmpty, "the fixture must produce rows")
+    assert(ids === wholeIds, "the restarted query must resume the checkpoint's batch ids")
+    assert(read(store) === read(whole),
       "a stop/restart plus a same-id replay must not change the store")
   }
 
@@ -90,4 +104,49 @@ class BatchSinkSpec extends SparkSpec {
     assert(e.getMessage.contains("CONFLICTING_DIRECTORY_STRUCTURES"), s"unexpected failure: $e")
     assert(day1 === before, "a failed read must not overwrite the stored day")
   }
+
+  private lazy val customers: Seq[DataFrame] = Seq(
+    Seq((1, "S", 10.00), (2, "B", 20.00)),
+    Seq((1, "S", 12.50), (3, "M", 30.00)),
+    Seq((2, "B", 25.00), (1, "S", 10.00)))
+    .map(_.toDF("c_nationkey", "c_mktsegment", "c_acctbal"))
+
+  private lazy val sampleRows: Seq[DataFrame] = Seq(
+    Seq((0L, 1L, 90L), (0L, 2L, 70L), (1L, 3L, 50L)),
+    Seq((0L, 4L, 80L), (1L, 5L, 60L)),
+    Seq((0L, 6L, 95L), (1L, 7L, 10L)))
+    .map(_.toDF("g", "id", "key"))
+
+  private def corpus = Tables.embeddings(spark, "/root/testdata/sf0.001")
+
+  private lazy val annQueries: Seq[DataFrame] = Seq(0 until 2, 2 until 4, 4 until 5)
+    .map(r => corpus.filter(col("vec_id").between(r.start, r.end - 1))
+      .select("vec_id", "embedding"))
+
+  private def leaf(m: LeafStore, input: => Seq[DataFrame] = eventInput): () => Unit =
+    () => restartLaw(m.start, m.mergeBatch, k = 2, input)
+
+  private def day(m: DayStore): () => Unit =
+    () => restartLaw(m.start, (b, _, path) => m.mergeBatch(b, path), k = 2)
+
+  /** Every store maintainer, with its sink-law input. */
+  private val sinkLaws: Seq[(String, () => Unit)] = Seq(
+    "StreamBurst" -> leaf(StreamBurst),
+    "StreamDrift" -> leaf(StreamDrift),
+    "StreamKAnonymity" -> leaf(StreamKAnonymity, customers),
+    "StreamCdcMerge" -> leaf(StreamCdcMerge),
+    "StreamCompaction" -> leaf(StreamCompaction),
+    "StreamResample" -> leaf(StreamResample),
+    "StreamZoneMap" -> leaf(StreamZoneMap),
+    "StreamRobustOutliers" -> leaf(StreamRobustOutliers),
+    "StreamHllCube" -> day(StreamHllCube),
+    "StreamRoaring" -> day(StreamRoaring),
+    "StreamSample" -> (() => restartLaw(StreamSample.start(_, _, _, 2),
+      StreamSample.mergeBatch(_, _, _, 2), k = 2, sampleRows)),
+    "StreamFilteredAnn" -> (() => restartLaw(StreamFilteredAnn.start(_, corpus, _, _),
+      StreamFilteredAnn.mergeBatch(_, _, _, SimilarityOps.servingIndex(corpus),
+        SimilarityOps.NProbe), k = 2, annQueries)))
+
+  for ((name, law) <- sinkLaws)
+    test(s"sink restart law: $name") { law() }
 }
