@@ -2,7 +2,7 @@ package graft
 
 import java.util.Locale
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main — runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints machine-readable JSON lines (see [[renderLines]] for the contract).
@@ -103,7 +103,7 @@ object Bench {
   def calibrateQuiet(spark: SparkSession, probeRows: Long, n: Int = 5): Double = {
     val samples = (1 to n).map { _ =>
       Thread.sleep(500)
-      probePoint(spark, probeRows) // min-of-pair points (see probePoint)
+      probeSamples(spark, probeRows).min // min-of-pair points (see probeSamples)
     }
     math.max(ProbeQuietSec, samples.min)
   }
@@ -180,13 +180,13 @@ object Bench {
   def probeOnce(spark: SparkSession, rows: Long): Double = {
     val t0 = System.nanoTime()
     // xxhash64 is per-row CPU work; bit_xor cannot overflow under ANSI mode.
-    spark.range(0L, rows, 1L, spark.sparkContext.defaultParallelism)
-      .selectExpr("bit_xor(xxhash64(id)) AS s")
-      .write.format("noop").mode("overwrite").save()
+    noop(spark.range(0L, rows, 1L, spark.sparkContext.defaultParallelism)
+      .selectExpr("bit_xor(xxhash64(id)) AS s"))
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** One probe POINT: the MIN of `n` back-to-back [[probeOnce]] runs.
+  /** One probe POINT's `n` back-to-back [[probeOnce]] runs; the point is
+    * their MIN, and callers that publish forensics keep the whole pair.
     *
     * Why a pair and not a single (r15 diagnostic, `ProbeSettleProbe`,
     * whose source remains at commit `596d2d2`, run in a verified-quiet
@@ -212,13 +212,53 @@ object Bench {
     * official runs record the RAW pair for every probe point and publish
     * them as `probe_raw` in the bench_detail line ([[renderLines]]);
     * the gate still judges on the min. */
-  def probePoint(spark: SparkSession, rows: Long, n: Int = 2): Double =
-    probeSamples(spark, rows, n).min
-
-  /** The raw back-to-back samples behind one [[probePoint]] (min-of-pair);
-    * callers that publish forensics keep the whole sequence. */
   def probeSamples(spark: SparkSession, rows: Long, n: Int = 2): Seq[Double] =
     (1 to n).map(_ => probeOnce(spark, rows))
+
+  /** A run's probe record, begun after its warm-up: it warms the probe
+    * plan's JIT and calibrates (`cal0`, [[calibrateQuiet]]); each [[point]]
+    * records its raw pair (`raw`, published as `probe_raw`) and folds the
+    * pair's min into [[quiet]] at once. */
+  final class ProbeLedger(spark: SparkSession, probeRows: Long) {
+    probeOnce(spark, probeRows)
+    val cal0: Double = calibrateQuiet(spark, probeRows)
+    private var pairs = Vector.empty[Seq[Double]]
+    def raw: Seq[Seq[Double]] = pairs
+    def quiet: Double = foldQuiet(cal0, pairs.map(_.min))
+
+    /** One probe point, the min of a back-to-back pair ([[probeSamples]]). */
+    def point(): Double = {
+      pairs :+= probeSamples(spark, probeRows)
+      pairs.last.min
+    }
+  }
+
+  /** A registered query: session and scale-factor directory to its result. */
+  type Query = (SparkSession, String) => DataFrame
+
+  /** The registered queries named by any of `prefixes`, in name order. */
+  def selected(prefixes: Seq[String]): Seq[(String, Query)] =
+    SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => prefixes.exists(name.startsWith) }
+
+  /** The comma-separated name prefixes in `args(at)`; all when absent. */
+  def prefixes(args: Array[String], at: Int = 0): Seq[String] =
+    if (args.length > at) args(at).split(",").toSeq else Seq("")
+
+  def sfDirFromEnv(): String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+
+  /** One query built and run to the noop sink: its seconds, or its error. */
+  def timed(spark: SparkSession, sfDir: String, query: Query): Either[String, Double] = {
+    val t0 = System.nanoTime()
+    try { noop(query(spark, sfDir)); Right((System.nanoTime() - t0) / 1e9) }
+    catch { case e: Throwable => Left(errMsg(e)) }
+  }
+
+  /** The untimed warm-up pass; failures surface in the timed runs. */
+  def warmUp(spark: SparkSession, sfDir: String, queries: Seq[(String, Query)]): Unit =
+    queries.foreach { case (_, query) => timed(spark, sfDir, query) }
 
   /** Render the stdout contract. Returns the lines IN PRINT ORDER:
     *
@@ -283,7 +323,7 @@ object Bench {
         .map { case (ps, i) => s""""pass${i + 1}":${probeArr(ps)}""" }.mkString(",")
       // raw (pre-min) samples per probe point, in run order — short steal
       // bursts that the min-of-pair hides stay visible here (see
-      // [[probePoint]]'s tradeoff note)
+      // [[probeSamples]]' tradeoff note)
       val rawJson = probeRaw.map(probeArr).mkString("[", ",", "]")
       s"""{"metric":"bench_detail",$passObjs,""" +
         s""""probe":{$probeObjs},"probe_raw":$rawJson,""" +
@@ -315,35 +355,8 @@ object Bench {
   def run(spark: SparkSession, sfDir: String, prefixes: Seq[String],
           probeRows: Long = 64L * 1000 * 1000,
           gateMaxWaitSec: Double = 0.0): RunResult = {
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => prefixes.exists(name.startsWith) }
-    def runOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-
-    // warmup pass (not timed; failures surface in the measured passes)
-    queries.foreach { case (_, fn) =>
-      try runOne(fn) catch { case _: Throwable => () }
-    }
-    // every probe point's raw pre-min pair, in run order → `probe_raw` in
-    // the detail line (the min hides sub-probe-length steal; see probePoint)
-    var rawPoints = Seq.empty[Seq[Double]]
-    def probePointRec(): Double = {
-      val raw = probeSamples(spark, probeRows)
-      rawPoints = rawPoints :+ raw
-      raw.min
-    }
-    // one measured pass, with a probe between every ProbeEvery-query span
-    def measuredPass(): (Seq[(String, Either[String, Double])], Seq[Double]) = {
-      val mids = Seq.newBuilder[Double]
-      val timings = queries.zipWithIndex.map { case ((name, fn), i) =>
-        if (i > 0 && i % ProbeEvery == 0) mids += probePointRec()
-        val t0 = System.nanoTime()
-        try { runOne(fn); name -> Right((System.nanoTime() - t0) / 1e9) }
-        catch { case e: Throwable => name -> Left(errMsg(e)) }
-      }
-      (timings, mids.result())
-    }
-    probeOnce(spark, probeRows) // probe warmup (JIT for the probe plan itself)
+    val queries = selected(prefixes)
+    warmUp(spark, sfDir, queries)
     // Per-run recalibration (the r13 forensics' lesson): the current
     // host's probe floor is the noise reference for THIS run. The first
     // estimate here is only a ~3.5 s window taken right after the warmup
@@ -355,14 +368,7 @@ object Bench {
     // folded value is published as probe_quiet_cal, the raw first
     // estimate as cal0, and cal_high flags a suspectly high
     // calibration (slow host class OR stolen calibration window).
-    val quietCal0 = calibrateQuiet(spark, probeRows)
-    var seenProbes = Seq.empty[Double]
-    def quiet: Double = foldQuiet(quietCal0, seenProbes)
-    def probe(): Double = {
-      val p = probePointRec() // min-of-pair (see probePoint); raw recorded
-      seenProbes = seenProbes :+ p
-      p
-    }
+    val ledger = new ProbeLedger(spark, probeRows)
     // QUIET GATE (official runs only — gateMaxWaitSec=0 disables): hold
     // the first measured pass until the median of the last 3 probes is
     // quiet, bounded by gateMaxWaitSec of waiting. Steal bursts outlast
@@ -370,59 +376,49 @@ object Bench {
     // this is best-effort; the wait is recorded as `gate_wait` either way
     // — telemetry, never laundering.
     val gateT0 = System.nanoTime()
-    var gateProbes = Seq(probe())
-    while (noiseBound(gateProbes.takeRight(3), quiet) &&
+    var gateProbes = Seq(ledger.point())
+    while (noiseBound(gateProbes.takeRight(3), ledger.quiet) &&
            (System.nanoTime() - gateT0) / 1e9 < gateMaxWaitSec) {
       Thread.sleep(2000)
-      gateProbes = gateProbes :+ probe()
+      gateProbes = gateProbes :+ ledger.point()
     }
     val gateWait = (System.nanoTime() - gateT0) / 1e9
-    def measuredPassProbed(): (Seq[(String, Either[String, Double])], Seq[Double]) = {
-      val (pass, mids) = measuredPass()
-      seenProbes = seenProbes ++ mids
-      (pass, mids)
+    var passes = Seq.empty[Seq[Either[String, Double]]]
+    var probes = Probes(Seq.empty)
+    // one measured pass, bracketed by boundary probes (the previous pass's
+    // last opens it), with a probe between every ProbeEvery-query span
+    def measuredPass(): Unit = {
+      val ps = Seq.newBuilder[Double] += probes.passes.lastOption.fold(ledger.point())(_.last)
+      passes :+= queries.zipWithIndex.map { case ((_, query), i) =>
+        if (i > 0 && i % ProbeEvery == 0) ps += ledger.point()
+        timed(spark, sfDir, query)
+      }
+      probes = Probes(probes.passes :+ (ps += ledger.point()).result())
     }
-    val p1b = probe()
-    val (pass1, mids1) = measuredPassProbed()
-    val p1a = probe() // boundary probe: ends pass 1, starts pass 2
-    val (pass2, mids2) = measuredPassProbed()
-    val p2a = probe()
-    var probes = Probes(Seq((p1b +: mids1) :+ p1a, (p1a +: mids2) :+ p2a))
-    var passes = Seq(pass1, pass2)
-    // NOISE REMEDIATION: while EVERY pass so far is individually
-    // noise-bound (the probes saw external CPU steal in each), pay another
-    // pass up to [[MaxPasses]] — bounded cost, since per-query minima are
-    // already the metric, and one quiet pass upper-bounds every minimum
-    // (see [[passNoise]]). A run still all-noisy after MaxPasses stays
-    // flagged rather than laundered — documented exhaustion. Each verdict
-    // re-reads the FOLDED reference, so a mid-run probe that dips below
-    // the (possibly steal-inflated) calibration immediately tightens the
-    // bar for every later decision.
-    var lastBoundary = p2a
-    while (passes.size < MaxPasses && passNoise(probes, quiet).forall(identity)) {
-      val (passN, midsN) = measuredPassProbed()
-      val pNa = probe()
-      probes = Probes(probes.passes :+ ((lastBoundary +: midsN) :+ pNa))
-      passes = passes :+ passN
-      lastBoundary = pNa
-    }
-    val results = passes.head.indices.map { i =>
-      QueryResult(passes.head(i)._1, passes.map(_(i)._2))
+    // Two passes, then NOISE REMEDIATION: while EVERY pass so far is
+    // individually noise-bound (the probes saw external CPU steal in
+    // each), pay another pass up to [[MaxPasses]] — bounded cost, since
+    // per-query minima are already the metric, and one quiet pass
+    // upper-bounds every minimum (see [[passNoise]]). A run still
+    // all-noisy after MaxPasses stays flagged rather than laundered —
+    // documented exhaustion. Each verdict re-reads the FOLDED reference,
+    // so a probe that dips below the (possibly steal-inflated)
+    // calibration immediately tightens the bar for every later decision.
+    while (passes.size < 2 ||
+           passes.size < MaxPasses && passNoise(probes, ledger.quiet).forall(identity))
+      measuredPass()
+    val results = queries.zipWithIndex.map { case ((name, _), i) =>
+      QueryResult(name, passes.map(_(i)))
     }
     val failed = results.collect {
       case QueryResult(name, ps) if ps.exists(_.isLeft) => name
     }
-    RunResult(renderLines(results, probes, sfDir, gateWait, quiet, quietCal0,
-      rawPoints), failed)
+    RunResult(renderLines(results, probes, sfDir, gateWait, ledger.quiet, ledger.cal0,
+      ledger.raw), failed)
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = session()
-
-    // optional arg: comma-separated name prefixes (local iteration only;
-    // the driver invokes with no args → full suite)
-    val prefixes = if (args.nonEmpty) args(0).split(",").toSeq else Seq("")
     // official (no-arg) runs gate on a quiet probe window before measuring;
     // prefix-filtered local iteration skips the wait
     // 120s: r11/r12 both saw steal bursts outlast the old 60s window; the
@@ -430,7 +426,9 @@ object Bench {
     // pay ~one probe
     val gateSec = sys.env.get("SPARK_GRAFT_GATE_SEC").map(_.toDouble)
       .getOrElse(if (args.isEmpty) 120.0 else 0.0)
-    val result = run(spark, sfDir, prefixes, gateMaxWaitSec = gateSec)
+    // optional arg: comma-separated name prefixes (local iteration only;
+    // official runs pass none → full suite)
+    val result = run(spark, sfDirFromEnv(), prefixes(args), gateMaxWaitSec = gateSec)
     result.lines.foreach(println)
     // persist the forensic record: stdout-tail capture sheds the detail line,
     // so append it to a committed JSONL artifact (best-effort — the bench

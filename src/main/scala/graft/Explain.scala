@@ -8,15 +8,12 @@ package graft
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val prefixes = if (args.length > 1) args(1).split(",").toSeq else Seq("")
     val spark = Bench.session()
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => prefixes.exists(name.startsWith) }
-      .foreach { case (name, fn) =>
-        println(s"\n========== $name ==========")
-        try fn(spark, sfDir).explain("formatted")
-        catch { case e: Throwable => println(s"failed: ${e.getMessage}") }
-      }
+    Bench.selected(Bench.prefixes(args, at = 1)).foreach { case (name, fn) =>
+      println(s"\n========== $name ==========")
+      try fn(spark, sfDir).explain("formatted")
+      catch { case e: Throwable => println(s"failed: ${e.getMessage}") }
+    }
     spark.stop()
   }
 }

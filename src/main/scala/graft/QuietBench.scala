@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import graft.Bench.{fmt, jsonSafe, errMsg}
+import graft.Bench.{fmt, jsonSafe}
 
 /** Quiet-window per-query regression baseline (the r14 verdict's method):
   * every `SparkEntry.queries` entry timed MIN-OF-[[Passes]] inside a small
@@ -29,10 +29,9 @@ object QuietBench {
   val ChunkRetries = 2
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val prefixes = if (args.nonEmpty) args(0).split(",").toSeq else Seq("")
+    val sfDir = Bench.sfDirFromEnv()
     val spark = Bench.session()
-    println(renderBench(measure(spark, sfDir, n => prefixes.exists(n.startsWith)), sfDir))
+    println(renderBench(measure(spark, sfDir, n => Bench.prefixes(args).exists(n.startsWith)), sfDir))
     spark.stop()
   }
 
@@ -59,23 +58,11 @@ object QuietBench {
     * the session. */
   def measure(spark: SparkSession, sfDir: String, keep: String => Boolean,
               probeRows: Long = 64L * 1000 * 1000): Measurement = {
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) => keep(n) }
-    def runOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-
-    // full warmup pass (JIT + shuffle files + shared snapshots)
-    queries.foreach { case (_, fn) =>
-      try runOne(fn) catch { case _: Throwable => () }
-    }
-    Bench.probeOnce(spark, probeRows) // probe-plan JIT
-    val cal0 = Bench.calibrateQuiet(spark, probeRows)
-    var seen = Seq.empty[Double]
-    def probe(): Double = {
-      // min-of-pair probe points (Bench.probePoint): a single probe
-      // right after a pass reads the engine's own settle, not steal
-      val p = Bench.probePoint(spark, probeRows); seen = seen :+ p; p
-    }
-    def quiet: Double = Bench.foldQuiet(cal0, seen)
+    val queries = Bench.selected(Seq("")).filter { case (n, _) => keep(n) }
+    Bench.warmUp(spark, sfDir, queries)
+    // min-of-pair probe points: a single probe right after a pass reads
+    // the engine's own settle, not steal
+    val ledger = new Bench.ProbeLedger(spark, probeRows)
 
     val mins = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
@@ -84,25 +71,19 @@ object QuietBench {
       // one attempt: a probe, then Passes passes each followed by a probe;
       // best keeps the per-query minimum across every attempt
       def attempt(): Chunk = {
-        val probes = probe() +: (1 to Passes).map { _ =>
-          chunk.foreach { case (name, fn) =>
-            val t0 = System.nanoTime()
-            try {
-              runOne(fn)
-              val s = (System.nanoTime() - t0) / 1e9
-              if (!best.get(name).exists(_ <= s)) best += name -> s
-            } catch { case e: Throwable => errors(name) = errMsg(e) }
+        val probes = ledger.point() +: (1 to Passes).map { _ =>
+          chunk.foreach { case (name, query) =>
+            Bench.timed(spark, sfDir, query) match {
+              case Right(s) => if (!best.get(name).exists(_ <= s)) best += name -> s
+              case Left(e) => errors(name) = e
+            }
           }
-          probe()
+          ledger.point()
         }
-        Chunk(!Bench.noiseBound(probes, quiet), probes)
+        Chunk(!Bench.noiseBound(probes, ledger.quiet), probes)
       }
-      var c = attempt()
-      var retries = 0
-      while (!c.quietInterim && retries < ChunkRetries) {
-        Thread.sleep(5000)
-        c = attempt()
-        retries += 1
+      val c = (1 to ChunkRetries).foldLeft(attempt()) { (c, _) =>
+        if (c.quietInterim) c else { Thread.sleep(5000); attempt() }
       }
       chunk.foreach { case (name, _) =>
         best.get(name).foreach(mins(name) = _)
@@ -111,7 +92,7 @@ object QuietBench {
         f"probes=${c.probes.map(fmt).mkString(",")}")
       c
     }.toList
-    Measurement(mins.toSeq, errors.toSeq, chunks, cal0, quiet)
+    Measurement(mins.toSeq, errors.toSeq, chunks, ledger.cal0, ledger.quiet)
   }
 
   private[graft] def obj(kv: Iterable[(String, String)]): String =

@@ -46,11 +46,11 @@ object QuietDiff {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = Bench.sfDirFromEnv()
     val basePath = sys.env.getOrElse("SPARK_GRAFT_QUIET_BASE", "BENCH_quiet_r16.json")
     val baseline = loadBaseline(basePath)
     val keep: String => Boolean =
-      if (args.nonEmpty) n => args(0).split(",").exists(n.startsWith)
+      if (args.nonEmpty) n => Bench.prefixes(args).exists(n.startsWith)
       else {
         // the baseline's slowest queries, the ones a plan regression hurts
         // most, plus everything new since the baseline

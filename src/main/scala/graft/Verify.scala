@@ -7,8 +7,6 @@ import com.fasterxml.jackson.databind.ObjectMapper
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg (local dev only): comma-separated query-name prefixes
-    val prefixes = if (args.length > 2) args(2).split(",").toSeq else Seq("")
     val spark = Bench.session()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
@@ -28,9 +26,8 @@ object Verify {
       if (!f.delete() && f.exists())
         System.err.println(s"[verify] WARNING: could not delete stale $f")
     }
-    SparkEntry.queries
-      .filter { case (name, _) => prefixes.exists(name.startsWith) }
-      .foreach { case (name, fn) =>
+    // optional 3rd arg (local dev only): comma-separated query-name prefixes
+    Bench.selected(Bench.prefixes(args, at = 2)).foreach { case (name, fn) =>
       deleteRecursively(new java.io.File(s"$outDir/$name"))
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

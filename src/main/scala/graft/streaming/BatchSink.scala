@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -67,16 +68,16 @@ object BatchSink {
       .parquet(path)
   }
 
-  /** The store at `path`; None only while it is missing or holds no data
-    * files. Any other read failure — a stray directory, an unreadable
-    * file — fails the micro-batch instead of merging against nothing. */
-  private def stored(spark: SparkSession, path: String): Option[DataFrame] =
-    try Some(spark.read.parquet(path))
-    catch {
-      case e: AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND"
-            || e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None
-    }
+  /** The store at `path`; None only while it is missing (checked, since
+    * reading a missing path logs a stack trace) or holds no data files.
+    * Any other read failure — a stray directory, an unreadable file —
+    * fails the micro-batch instead of merging against nothing. */
+  private def stored(spark: SparkSession, path: String): Option[DataFrame] = {
+    val store = new Path(path)
+    if (!store.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(store)) None
+    else try Some(spark.read.parquet(path))
+    catch { case e: AnalysisException if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None }
+  }
 }
 
 /** A store maintainer whose micro-batches land by [[BatchSink.write]]:
