@@ -224,7 +224,8 @@ object Bench {
     val cal0: Double = calibrateQuiet(spark, probeRows)
     private var pairs = Vector.empty[Seq[Double]]
     def raw: Seq[Seq[Double]] = pairs
-    def quiet: Double = foldQuiet(cal0, pairs.map(_.min))
+    def points: Seq[Double] = pairs.map(_.min)
+    def quiet: Double = foldQuiet(cal0, points)
 
     /** One probe point, the min of a back-to-back pair ([[probeSamples]]). */
     def point(): Double = {
@@ -357,17 +358,9 @@ object Bench {
           gateMaxWaitSec: Double = 0.0): RunResult = {
     val queries = selected(prefixes)
     warmUp(spark, sfDir, queries)
-    // Per-run recalibration (the r13 forensics' lesson): the current
-    // host's probe floor is the noise reference for THIS run. The first
-    // estimate here is only a ~3.5 s window taken right after the warmup
-    // pass — a steal episode spanning it would inflate the bar and
-    // launder later noise (the r12 failure mode via calibration) — so
-    // every probe observed from here on FOLDS back into the reference via
-    // [[foldQuiet]]: the smallest probe ever seen is the best idle-floor
-    // estimate, and folding can only LOWER the bar, never raise it. The
-    // folded value is published as probe_quiet_cal, the raw first
-    // estimate as cal0, and cal_high flags a suspectly high
-    // calibration (slow host class OR stolen calibration window).
+    // Per-run recalibration (the r13 forensics' lesson), every later probe
+    // folded in ([[calibrateQuiet]] says why; published as probe_quiet_cal,
+    // cal0 and cal_high)
     val ledger = new ProbeLedger(spark, probeRows)
     // QUIET GATE (official runs only — gateMaxWaitSec=0 disables): hold
     // the first measured pass until the median of the last 3 probes is
@@ -376,11 +369,11 @@ object Bench {
     // this is best-effort; the wait is recorded as `gate_wait` either way
     // — telemetry, never laundering.
     val gateT0 = System.nanoTime()
-    var gateProbes = Seq(ledger.point())
-    while (noiseBound(gateProbes.takeRight(3), ledger.quiet) &&
+    ledger.point()
+    while (noiseBound(ledger.points.takeRight(3), ledger.quiet) &&
            (System.nanoTime() - gateT0) / 1e9 < gateMaxWaitSec) {
       Thread.sleep(2000)
-      gateProbes = gateProbes :+ ledger.point()
+      ledger.point()
     }
     val gateWait = (System.nanoTime() - gateT0) / 1e9
     var passes = Seq.empty[Seq[Either[String, Double]]]

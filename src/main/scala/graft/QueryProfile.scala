@@ -1,10 +1,8 @@
 package graft
 
-import java.util.concurrent.{ConcurrentHashMap, LinkedBlockingQueue, TimeUnit}
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -106,9 +104,8 @@ object QueryProfile {
     * object-map children are the q79-shape candidates. */
   def sortSamplers(plan: Seq[SparkPlan]): Seq[Sampler] = {
     // their output is reused between the sample and the shuffle pass
-    def barrier(p: SparkPlan): Boolean = p.isInstanceOf[ShuffleExchangeLike] ||
-      Seq("ExistingRDD", "AQEShuffleRead", "ReusedExchange", "BroadcastExchange")
-        .exists(p.nodeName.contains)
+    def barrier(p: SparkPlan): Boolean =
+      isExchange(p) || Seq("ExistingRDD", "AQEShuffleRead", "ReusedExchange").exists(p.nodeName.contains)
     def unprotected(p: SparkPlan): Seq[String] =
       if (barrier(p)) Nil else p.nodeName +: p.children.flatMap(c => unprotected(strip(c)))
     plan.collect {
@@ -117,38 +114,43 @@ object QueryProfile {
     }.filter(_.ops.nonEmpty)
   }
 
-  /** [[Bench.timed]] under its own job group: the seconds and the group's
-    * jobs (JSON, id order, timed by the scheduler's events), or the error. */
+  /** [[Bench.timed]] between two marker jobs: the seconds and every job
+    * whose id lies between the markers' (JSON, id order, wall seconds from
+    * the scheduler's events), or the error. Job ids are handed out at
+    * submission and this main runs one thing at a time, so the bracket
+    * holds exactly the run's jobs, those a query submits from its own
+    * threads (a `Future`'s checkpoint) included. */
   private def timedJobs(spark: SparkSession, sfDir: String,
                         query: Bench.Query): Either[String, (Double, Seq[String])] = {
     val sc = spark.sparkContext
-    val group = s"query-profile-${System.nanoTime()}"
-    val starts = new ConcurrentHashMap[Int, (Long, String)]()
-    val jobs = new ConcurrentHashMap[Int, String]()
-    val ends = new LinkedBlockingQueue[Int]()
+    val events = new LinkedBlockingQueue[SparkListenerEvent]()
     val log = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit =
-        if (Option(s.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          starts.put(s.jobId, (s.time, s.stageInfos.lastOption.fold("?")(_.name)))
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-        Option(starts.remove(e.jobId)).foreach { case (t0, site) =>
-          jobs.put(e.jobId, s"""{"id":${e.jobId},"seconds":${fmt((e.time - t0) / 1e3)},""" +
-            s""""site":"${jsonSafe(site)}"}""")
-        }
-        ends.put(e.jobId)
-      }
+      override def onJobStart(s: SparkListenerJobStart): Unit = events.put(s)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = events.put(e)
+    }
+    def marker(): Int = {
+      val job = sc.parallelize(Seq(0), 1).foreachAsync(_ => ())
+      job.get()
+      job.jobIds.head
     }
     sc.addSparkListener(log)
     try {
-      sc.setJobGroup(group, group)
-      val run = try Bench.timed(spark, sfDir, query) finally sc.clearJobGroup()
+      val first = marker()
+      val run = Bench.timed(spark, sfDir, query)
+      val last = marker()
       // The listener bus delivers events in the order they were posted,
-      // and a job's end is posted before its action returns: once this
-      // marker job's end arrives, so has every event of the timed run.
-      val marker = sc.parallelize(Seq(0), 1).foreachAsync(_ => ()).jobIds.head
-      while (Option(ends.poll(1, TimeUnit.MINUTES)).getOrElse(
-               throw new IllegalStateException(s"job $marker's end never arrived")) != marker) ()
-      run.map(_ -> jobs.asScala.toSeq.sortBy(_._1).map(_._2))
+      // and a job's end is posted before its action returns: once the
+      // closing marker's end arrives, so has every event of the timed run.
+      val seen = Iterator.continually(Option(events.poll(1, TimeUnit.MINUTES)).getOrElse(
+          throw new IllegalStateException(s"job $last's end never arrived")))
+        .takeWhile { case e: SparkListenerJobEnd => e.jobId != last; case _ => true }.toVector
+      val started = seen.collect { case s: SparkListenerJobStart if s.jobId > first => s.jobId -> s }.toMap
+      run.map(_ -> seen.collect { case e: SparkListenerJobEnd if started.contains(e.jobId) => e }
+        .sortBy(_.jobId).map { e =>
+          val s = started(e.jobId)
+          s"""{"id":${e.jobId},"seconds":${fmt((e.time - s.time) / 1e3)},""" +
+            s""""site":"${jsonSafe(s.stageInfos.lastOption.fold("?")(_.name))}"}"""
+        })
     } finally sc.removeSparkListener(log)
   }
 }

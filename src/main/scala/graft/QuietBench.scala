@@ -60,8 +60,6 @@ object QuietBench {
               probeRows: Long = 64L * 1000 * 1000): Measurement = {
     val queries = Bench.selected(Seq("")).filter { case (n, _) => keep(n) }
     Bench.warmUp(spark, sfDir, queries)
-    // min-of-pair probe points: a single probe right after a pass reads
-    // the engine's own settle, not steal
     val ledger = new Bench.ProbeLedger(spark, probeRows)
 
     val mins = scala.collection.mutable.LinkedHashMap.empty[String, Double]

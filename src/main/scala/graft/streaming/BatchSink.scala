@@ -74,7 +74,7 @@ object BatchSink {
     * fails the micro-batch instead of merging against nothing. */
   private def stored(spark: SparkSession, path: String): Option[DataFrame] = {
     val store = new Path(path)
-    if (!store.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(store)) None
+    if (!store.getFileSystem(spark.sessionState.newHadoopConf()).exists(store)) None
     else try Some(spark.read.parquet(path))
     catch { case e: AnalysisException if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None }
   }

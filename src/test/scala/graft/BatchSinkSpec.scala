@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, Logger}
 import org.apache.logging.log4j.core.appender.AbstractAppender
@@ -123,7 +121,7 @@ class BatchSinkSpec extends SparkSpec {
     root.addAppender(capture)
     try StreamRoaring.mergeBatch(events(batches.head.toDF()), tmp("sink_first") + "/words")
     finally root.removeAppender(capture)
-    assert(warnings.isEmpty, s"the first merge logged: ${warnings.asScala.mkString("; ")}")
+    assert(warnings.isEmpty, s"the first merge logged: $warnings")
   }
 
   private lazy val customers: Seq[DataFrame] = Seq(

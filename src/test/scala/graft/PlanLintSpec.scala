@@ -115,7 +115,7 @@ class PlanLintSpec extends SparkSpec {
   test("no graded plan carries a cartesian, an unbounded BNLJ build, an unbounded global window, or a big local scan") {
     val hard = Seq.newBuilder[String] // cartesian / big-local-scan: no allowlist
     val found = scala.collection.mutable.Set.empty[(String, String)]
-    Bench.selected(Seq("")).foreach { case (name, fn) =>
+    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       val plan = fn(spark, SfDir).queryExecution.sparkPlan
       plan.collectWithSubqueries { case n => n }.foreach {
         case j: CartesianProductExec =>

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.Executors
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
@@ -30,14 +34,19 @@ class QueryProfileSpec extends SparkSpec {
 
   test("end-to-end: one parseable line per query, with all its jobs; a failure only in error") {
     val failing: Bench.Query = (s, _) => s.range(3).selectExpr("raise_error('boom') AS x")
+    // a checkpoint on a pool thread that exists before the profile begins
+    val pool = Executors.newSingleThreadExecutor()
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    Await.result(Future(()), 1.minute)
+    val inFuture: Bench.Query = (s, _) => Await.result(Future(s.range(100).toDF().localCheckpoint()), 1.minute)
     // a listener that lags the bus: the profile must still see every job
     val lag = new SparkListener { override def onJobEnd(e: SparkListenerJobEnd): Unit = Thread.sleep(100) }
     spark.sparkContext.addSparkListener(lag)
-    val lines = try (Bench.selected(Seq("q01", "q02")) :+ ("q_fail" -> failing)).map {
+    val lines = try (Bench.selected(Seq("q01", "q02")) ++ Seq("q_future" -> inFuture, "q_fail" -> failing)).map {
       case (name, query) => new ObjectMapper().readTree(
         QueryProfile.profile(spark, "/root/testdata/sf0.001", name, query))
-    } finally spark.sparkContext.removeSparkListener(lag)
-    assert(lines.map(_.get("query").asText) == Seq("q01_fraud_filter", "q02_top10_by_user", "q_fail"))
+    } finally { spark.sparkContext.removeSparkListener(lag); pool.shutdown() }
+    assert(lines.map(_.get("query").asText) == Seq("q01_fraud_filter", "q02_top10_by_user", "q_future", "q_fail"))
     lines.init.foreach { n =>
       assert(n.get("metric").asText == "profile" && n.get("error").isNull, n)
       assert(n.get("seconds").asDouble > 0.0)
@@ -46,6 +55,7 @@ class QueryProfileSpec extends SparkSpec {
       assert(jobs.forall(j => j.get("seconds").asDouble >= 0.0 && j.get("site").asText.nonEmpty))
       assert(jobs.last.get("site").asText.startsWith("save at"), "the final noop action's job")
     }
+    assert(lines(2).get("jobs").toString.contains("localCheckpoint at QueryProfileSpec.scala"), lines(2))
     assert(lines.last.get("error").asText.contains("boom"))
     assert(lines.last.get("seconds").isNull && lines.last.get("njobs").asInt == 0)
   }

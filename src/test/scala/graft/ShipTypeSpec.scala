@@ -28,7 +28,7 @@ class ShipTypeSpec extends SparkSpec {
   }
 
   test("no graded query ships a DecimalType column") {
-    val offenders = Bench.selected(Seq("")).flatMap { case (name, fn) =>
+    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       decimalPaths(StructType(fn(spark, sfDir).schema.fields), name)
     }
     assert(offenders.isEmpty,
