@@ -4,9 +4,10 @@ import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{SQLExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import graft.Bench.{fmt, jsonSafe}
 
@@ -119,7 +120,9 @@ object QueryProfile {
     * the scheduler's events), or the error. Job ids are handed out at
     * submission and this main runs one thing at a time, so the bracket
     * holds exactly the run's jobs, those a query submits from its own
-    * threads (a `Future`'s checkpoint) included. */
+    * threads (a `Future`'s checkpoint) included. A job's site is its SQL
+    * execution's description when it has one: AQE submits stage jobs from
+    * a pool thread, whose own call site is the pool's frame. */
   private def timedJobs(spark: SparkSession, sfDir: String,
                         query: Bench.Query): Either[String, (Double, Seq[String])] = {
     val sc = spark.sparkContext
@@ -127,6 +130,10 @@ object QueryProfile {
     val log = new SparkListener {
       override def onJobStart(s: SparkListenerJobStart): Unit = events.put(s)
       override def onJobEnd(e: SparkListenerJobEnd): Unit = events.put(e)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => events.put(x)
+        case _ =>
+      }
     }
     def marker(): Int = {
       val job = sc.parallelize(Seq(0), 1).foreachAsync(_ => ())
@@ -145,11 +152,16 @@ object QueryProfile {
           throw new IllegalStateException(s"job $last's end never arrived")))
         .takeWhile { case e: SparkListenerJobEnd => e.jobId != last; case _ => true }.toVector
       val started = seen.collect { case s: SparkListenerJobStart if s.jobId > first => s.jobId -> s }.toMap
+      val executions = seen.collect { case x: SparkListenerSQLExecutionStart => x.executionId -> x.description }.toMap
+      def site(s: SparkListenerJobStart): String =
+        Option(s.properties).flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+          .flatMap(id => executions.get(id.toLong))
+          .getOrElse(s.stageInfos.lastOption.fold("?")(_.name))
       run.map(_ -> seen.collect { case e: SparkListenerJobEnd if started.contains(e.jobId) => e }
         .sortBy(_.jobId).map { e =>
           val s = started(e.jobId)
           s"""{"id":${e.jobId},"seconds":${fmt((e.time - s.time) / 1e3)},""" +
-            s""""site":"${jsonSafe(s.stageInfos.lastOption.fold("?")(_.name))}"}"""
+            s""""site":"${jsonSafe(site(s))}"}"""
         })
     } finally sc.removeSparkListener(log)
   }

@@ -38,7 +38,13 @@ object Transaction {
     * malformed input — it yields a non-null struct whose FIELDS are null
     * (only SQL NULL input gives a null struct; verified on this Spark
     * build), so a plain `from_json` cannot tell a thrower from an
-    * incomplete record. `FraudPipeline.parse` drops on `_corrupt`. */
+    * incomplete record. `FraudPipeline.parse` drops on `_corrupt`.
+    *
+    * `from_json` is a `CodegenFallback`: it runs interpreted, and so does
+    * the expression that feeds it. Evaluate it once per row, behind a plan
+    * node the optimizer cannot inline it through (`FraudPipeline.parse`
+    * uses a `Generate`); a filter on its fields otherwise parses each row
+    * again. */
   def parseJsonCorrupt(value: Column): Column =
     from_json(value,
       StructType(schema.fields :+ StructField(CorruptCol, StringType)),

@@ -1460,10 +1460,9 @@ object SketchOps {
       .filter(col("t") > lit(BloomSpendCents))
       .select("uk")
       .localCheckpoint() // consumed by the word build + the truth join
-    val dense = bloomWords(keys)
-      .join(broadcast(
-        keys.sparkSession.range(BloomWords).selectExpr("CAST(id AS INT) AS w")),
-        Seq("w"), "right")
+    // the word range is the preserved side, the built words the broadcast
+    val dense = keys.sparkSession.range(BloomWords).selectExpr("CAST(id AS INT) AS w")
+      .join(broadcast(bloomWords(keys)), Seq("w"), "left")
       .selectExpr("w", "coalesce(word, CAST(0 AS BIGINT)) AS word")
       .agg(sort_array(collect_list(struct(col("w"), col("word")))).as("sw"))
       .selectExpr("transform(sw, s -> s.word) AS words")

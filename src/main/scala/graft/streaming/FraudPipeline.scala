@@ -37,9 +37,18 @@ object FraudPipeline {
     * `Transaction.java:23,28`) — so an amount-less record rides the
     * non-fraud leg instead of vanishing from both. `userId` stays null
     * like Jackson's object default (the reference happily produces a
-    * null Kafka key). */
+    * null Kafka key).
+    *
+    * The parse sits under a one-element `explode`, a `Generate` node, so
+    * each row is parsed once. With a plain projection, Catalyst pushes the
+    * `_corrupt` null-guard below it and inlines the `from_json` into the
+    * filter, so every row is parsed twice; `from_json` is a
+    * `CodegenFallback`, so each parse also pulls the expression that builds
+    * `value` out of whole-stage codegen. A filter on a generator's output
+    * stays above the `Generate`. `FraudPipelineSpec`'s "parse evaluates
+    * from_json once per row" pins the plan. */
   def parse(raw: DataFrame): DataFrame =
-    raw.withColumn("txn", Transaction.parseJsonCorrupt(col("value")))
+    raw.select(explode(array(Transaction.parseJsonCorrupt(col("value")))).as("txn"))
       .filter(col("txn").isNotNull
         && col("txn")(Transaction.CorruptCol).isNull)
       .select(

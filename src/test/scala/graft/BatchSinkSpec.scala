@@ -2,10 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.logging.log4j.{Level, LogManager}
-import org.apache.logging.log4j.core.{LogEvent, Logger}
-import org.apache.logging.log4j.core.appender.AbstractAppender
-import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -110,17 +106,8 @@ class BatchSinkSpec extends SparkSpec {
   }
 
   test("a first day merge into a missing store logs no warning") {
-    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val capture = new AbstractAppender("sink-warnings", null, null, true, Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit = if (e.getLevel.isMoreSpecificThan(Level.WARN))
-        warnings.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
-    }
-    val root = LogManager.getRootLogger.asInstanceOf[Logger]
-    assert(root.isWarnEnabled, "a logger above WARN would hide the warning")
-    capture.start()
-    root.addAppender(capture)
-    try StreamRoaring.mergeBatch(events(batches.head.toDF()), tmp("sink_first") + "/words")
-    finally root.removeAppender(capture)
+    val warnings = warningsOf(
+      StreamRoaring.mergeBatch(events(batches.head.toDF()), tmp("sink_first") + "/words"))
     assert(warnings.isEmpty, s"the first merge logged: $warnings")
   }
 

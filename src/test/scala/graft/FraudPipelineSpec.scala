@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -76,6 +79,62 @@ class FraudPipelineSpec extends SparkSpec {
       query.processAllAvailable()
       val got = spark.table("alerts_test").select("key").as[String].collect().sorted
       assert(got === Array("user_002", "user_183"))
+    } finally query.stop()
+  }
+
+  /** A wire value built by an expression, like perfbench's generator: one
+    * row in a thousand malformed, a tenth above the threshold. */
+  private def generatedWire(n: Long): DataFrame = spark.range(n).select(
+    when(col("id") % 1000 === 999, lit("not json"))
+      .otherwise(format_string("""{"userId":"user_%03d","amount":%s,"timestamp":%d}""",
+        pmod(col("id"), lit(200)),
+        when(col("id") % 10 === 0, lit(10500.0)).otherwise(col("id") % 5000),
+        (col("id") + 1737028300).cast("int")))
+      .as("value"))
+
+  test("parse evaluates from_json once per row, behind a barrier the null-guard cannot cross") {
+    val wire = generatedWire(2000)
+    Seq("parse" -> FraudPipeline.parse(wire), "fraudAlerts" -> FraudPipeline.fraudAlerts(wire))
+      .foreach { case (name, df) =>
+        val plan = df.queryExecution.executedPlan
+        val parses = plan.flatMap(_.expressions.flatMap(_.collect { case j: JsonToStructs => j }))
+        assert(parses.size === 1, s"$name's plan holds ${parses.size} from_json parses:\n$plan")
+        // the projection building `value` stays compiled, not interpreted
+        // by the parse's CodegenFallback
+        val codegen = plan.collect { case w: WholeStageCodegenExec => w }
+          .flatMap(_.collect { case p: ProjectExec => p })
+        assert(codegen.exists(_.output.map(_.name) == Seq("value")),
+          s"$name: no whole-stage-codegen projection produces value:\n$plan")
+      }
+    val (fraud, other) = FraudPipeline.branchFraud(FraudPipeline.parse(wire))
+    assert((fraud.count(), other.count()) === (200L, 1798L))
+  }
+
+  test("parse keeps the reference's drop/keep split on every record kind; the peek counts the alerts") {
+    val kinds = Seq(
+      null,                                                       // null value: dropped
+      """{"userId":"u1","amount":10500.0,"timestamp":1737028300""", // malformed: dropped
+      """{"userId":"u2","amount":"oops","timestamp":1737028301}""", // wrong-typed: dropped
+      """{}""",                                                   // field-less: kept, defaults
+      """{"userId":"u3","timestamp":1737028303}""",               // amount-less: kept, 0.0
+      """{"userId":"u4","amount":10000.0,"timestamp":1737028304}""", // == threshold: kept, not fraud
+      """{"userId":"u5","amount":10000.5,"timestamp":1737028305}""") // fraud
+    val parsed = FraudPipeline.parse(kinds.toDF("value"))
+      .as[(Option[String], Double, Int)].collect().sortBy(_._1)
+    assert(parsed.toSeq === Seq((None, 0.0, 0), (Some("u3"), 0.0, 1737028303),
+      (Some("u4"), 10000.0, 1737028304), (Some("u5"), 10000.5, 1737028305)))
+
+    implicit val sc = spark.sqlContext
+    val mem = MemoryStream[String]
+    val query = FraudPipeline.fraudAlerts(mem.toDF()).writeStream.format("memory")
+      .queryName("alerts_kinds").outputMode("append").start()
+    try {
+      mem.addData(kinds: _*)
+      query.processAllAvailable()
+      val alerts = spark.table("alerts_kinds").select("key").as[String].collect()
+      assert(alerts.toSeq === Seq("u5"))
+      val observed = query.lastProgress.observedMetrics.get("fraud_metrics")
+      assert(observed.getAs[Long]("n_alerts") === alerts.length)
     } finally query.stop()
   }
 

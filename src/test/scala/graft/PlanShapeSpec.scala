@@ -950,6 +950,9 @@ class PlanShapeSpec extends SparkSpec {
       s"unbounded cartesian leaked into q161:\n${exec.take(1200)}")
     assert(q.queryExecution.optimizedPlan.collect { case w: LWindow => w }.isEmpty,
       "q161 must not window")
+    // the broadcast hint sits on the side Spark can build, so it is honored
+    val warnings = warningsOf(SketchOps.bloomPruneCensus(events).collect())
+    assert(!warnings.exists(_.contains("Hint")), s"q161 logged an ignored hint: $warnings")
   }
 
   test("q157 topk cube: summaries are a map-combinable bounded-state aggregate, never a rank window") {

@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -25,4 +29,19 @@ object TestSpark {
 
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** The WARN-or-worse lines (`logger: message`) logged while `body` runs. */
+  def warningsOf(body: => Unit): Seq[String] = {
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("spec-warnings", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = if (e.getLevel.isMoreSpecificThan(Level.WARN))
+        warnings.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    assert(root.isWarnEnabled, "a logger above WARN would hide the warning")
+    capture.start()
+    root.addAppender(capture)
+    try body finally root.removeAppender(capture)
+    warnings.toArray(Array.empty[String]).toSeq
+  }
 }

@@ -5,13 +5,19 @@ Usage (from the repository root):
 
     python3 tools/jfr_perfbench.py --workload NAME [--seed N] [--seconds S]
                                    [--cores N] [--scale full|tiny] [--top K]
+                                   [--window] [--frames a,b,...]
 
 Builds and launches the benchmark JVM exactly as perfbench/run.py does (its
 classpath() and jvm_flags()), with -XX:StartFlightRecording added, runs the
 workload once untraced, and prints:
   - process spawns (jdk.ProcessStart), counted by executable, by thread
     and by the Hadoop or Spark call that started them;
-  - the top-K execution-sample frames (jdk.ExecutionSample, 10 ms period);
+  - the top-K execution-sample frames (jdk.ExecutionSample, 10 ms period)
+    and the samples' shares by thread kind; with --window, only the samples
+    of the measured window (raw.json's window_start_ms to stop_ms), so set-up
+    work such as class loading drops out;
+  - with --frames, per comma-separated substring, the samples whose stack
+    holds a frame containing it (inclusive counts, 64 frames deep);
   - the GC pause total (jdk.GarbageCollection);
   - the run's latency p50/p99 as run.py computes them, for context.
 The recording is kept as .bench_build/perfbench/jfr/<workload>-seed<N>.jfr
@@ -19,6 +25,7 @@ for `jfr print` or JDK Mission Control.
 """
 import argparse
 import collections
+import datetime
 import json
 import os
 import re
@@ -53,7 +60,7 @@ def origin(ev):
 
 def thread_kind(ev):
     """Thread name with ids and numbers folded, so one kind counts once."""
-    t = ev["values"].get("eventThread") or {}
+    t = ev["values"].get("sampledThread") or ev["values"].get("eventThread") or {}
     name = t.get("javaName") or t.get("osName") or "?"
     name = re.sub(r"[0-9a-f]{8}-[0-9a-f-]{27}", "<id>", name)
     return re.sub(r"\d+", "N", name)
@@ -66,6 +73,28 @@ def seconds(text):
         return 0.0
     h, mi, s = m.groups()
     return int(h or 0) * 3600 + int(mi or 0) * 60 + float(s or 0)
+
+
+def epoch_ms(text):
+    """A JFR instant as `jfr print --json` writes it (ISO-8601 with up to
+    nanoseconds and a zone offset or Z) in epoch milliseconds."""
+    m = re.fullmatch(r"(.+T\d\d:\d\d:\d\d)(?:\.(\d+))?(Z|[+-]\d\d:\d\d)", text)
+    if not m:
+        raise ValueError(f"not a JFR instant: {text!r}")
+    whole, frac, zone = m.groups()
+    base = datetime.datetime.fromisoformat(whole + ("+00:00" if zone == "Z" else zone))
+    return base.timestamp() * 1000 + float("0." + (frac or "0")) * 1000
+
+
+def in_window(events, start_ms, stop_ms):
+    """The events that started between start_ms and stop_ms, both included."""
+    return [e for e in events if start_ms <= epoch_ms(e["values"]["startTime"]) <= stop_ms]
+
+
+def inclusive(samples, patterns):
+    """Per pattern, the samples with a frame anywhere on the stack containing it."""
+    return collections.Counter({p: sum(any(p in f for f in frames(e)) for e in samples)
+                                for p in patterns})
 
 
 def table(title, counter, total, top):
@@ -82,7 +111,12 @@ def main():
     ap.add_argument("--cores", type=int, default=min(4, os.cpu_count() or 1))
     ap.add_argument("--scale", choices=("full", "tiny"), default="full")
     ap.add_argument("--top", type=int, default=15)
+    ap.add_argument("--window", action="store_true",
+                    help="only execution samples of the measured window")
+    ap.add_argument("--frames", default="",
+                    help="comma-separated frame substrings to count inclusively")
     a = ap.parse_args()
+    patterns = [p for p in a.frames.split(",") if p]
 
     cp = pb.classpath()
     params = dict(pb.WORKLOADS[a.workload][a.scale])
@@ -112,16 +146,25 @@ def main():
           len(spawns), a.top)
     table("process spawns by origin", collections.Counter(map(origin, spawns)), len(spawns), a.top)
 
-    samples = jfr_events(jfr, "jdk.ExecutionSample", 1)
-    table("execution samples by top frame",
+    with open(args["out"]) as fh:
+        raw = json.load(fh)
+    samples = jfr_events(jfr, "jdk.ExecutionSample", 64 if patterns else 1)
+    scope = "whole run"
+    if a.window:
+        samples = in_window(samples, raw["window_start_ms"], raw["stop_ms"])
+        scope = f"window, {(raw['stop_ms'] - raw['window_start_ms']) / 1000:.1f} s"
+    table(f"execution samples by top frame, {scope}",
           collections.Counter((frames(e) or ["?"])[0] for e in samples), len(samples), a.top)
+    table(f"execution samples by thread kind, {scope}",
+          collections.Counter(map(thread_kind, samples)), len(samples), a.top)
+    if patterns:
+        table(f"execution samples by frame on the stack, {scope}",
+              inclusive(samples, patterns), len(samples), len(patterns))
 
     gcs = jfr_events(jfr, "jdk.GarbageCollection", 1)
     pause = sum(seconds(e["values"].get("sumOfPauses")) for e in gcs)
     print(f"gc: {len(gcs)} collections, {1000 * pause:.0f} ms paused")
 
-    with open(args["out"]) as fh:
-        raw = json.load(fh)
     e2e, _, info = pb.stream_metrics(raw, params)
     print(f"latency p50 {e2e['latency_p50_ms']:.0f} ms, p99 {e2e['latency_p99_ms']:.0f} ms "
           f"over {info['latency_samples']} batches")
