@@ -1,50 +1,46 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder}
+import org.apache.spark.sql.functions.{col, timestamp_seconds}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** The keyed-state lifecycle shared by the processing-time maintainers
-  * ([[VelocityDetector.detect]], [[StreamCusum]], [[StreamAlert]],
-  * [[StreamSprt]], [[StreamFunnel]], [[StreamEncoding]]): group by key,
-  * sort each key's micro-batch rows into fold order, fold them through the
-  * maintainer's pure step, and keep or free the key's state.
+/** The keyed-state lifecycle of every stateful maintainer, on the two
+  * timeout clocks of Spark's keyed state: group by key, run the
+  * maintainer's pure step over each key's micro-batch rows, and keep or
+  * free the key's state. The only `flatMapGroupsWithState` call.
   *
-  * The fold sees `None` for a key with no state and returns the next
-  * state: `Some` stores it and re-arms the TTL, `None` frees the key (the
-  * [[StreamAlert]] latch closing its run). It runs once per key per
-  * micro-batch, not per row, so a maintainer may emit after the whole
-  * batch ([[StreamEncoding]]'s ledger).
-  *
-  * Expiry is a processing-time TTL: `stateTimeout` is a duration string
-  * (the maintainers default to "1 hour"), and a key idle that long is
-  * removed with no output — total state stays bounded by keys active
-  * inside the TTL. `None` keeps state forever, which only specs want: the
-  * timeout wakes the stream in empty micro-batches, which makes
-  * `processAllAvailable` spin, so specs that drive a query pass
-  * `stateTimeout = None` and [[step]] is specced directly for the TTL.
+  * Processing time, [[apply]] ([[VelocityDetector.detect]],
+  * [[StreamCusum]], [[StreamAlert]], [[StreamSprt]], [[StreamFunnel]],
+  * [[StreamEncoding]]): the fold sees `None` for a key with no state and
+  * returns the next state: `Some` stores it and re-arms the TTL, `None`
+  * frees the key (the [[StreamAlert]] latch closing its run). It runs
+  * once per key per micro-batch, not per row, so a maintainer may emit
+  * after the whole batch ([[StreamEncoding]]'s ledger). A key idle for
+  * [[Ttl]] is removed with no output, so total state stays bounded by
+  * keys active inside it. The armed TTL makes the engine run an empty
+  * micro-batch on every trigger, so `processAllAvailable` never returns
+  * on such a query; specs turn `spark.sql.streaming.noDataMicroBatches`
+  * off around them, and [[step]] is specced directly for the expiry.
   *
   * Ordering contract: rows fold in `order` within a micro-batch, and
   * arrival must respect event time across batches (a tail-following keyed
   * stream, which the reference's keyed produce guarantees per user). For
-  * out-of-order replay, buffer until the watermark seals, as
-  * [[VelocityDetector.detectEventTime]] does. */
+  * out-of-order replay, use the event-time clock, [[eventTime]]
+  * ([[VelocityDetector.detectEventTime]], [[StreamHeavyHitters]]). */
 object KeyedFold {
+  val Ttl = "1 hour"
+
   def apply[In, K: Encoder, S: Encoder, Out: Encoder](
-      ds: Dataset[In], key: In => K, order: Ordering[In],
-      stateTimeout: Option[String])(
-      fold: (K, Option[S], Seq[In]) => (Option[S], Seq[Out])): Dataset[Out] = {
-    val timeoutConf =
-      if (stateTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    ds.groupByKey(key).flatMapGroupsWithState[S, Out](OutputMode.Append(), timeoutConf) {
-      (k: K, rows: Iterator[In], state: GroupState[S]) =>
-        step(k, rows, state, order, stateTimeout)(fold)
+      ds: Dataset[In], key: In => K, order: Ordering[In])(
+      fold: (K, Option[S], Seq[In]) => (Option[S], Seq[Out])): Dataset[Out] =
+    ds.groupByKey(key).flatMapGroupsWithState[S, Out](
+        OutputMode.Append(), GroupStateTimeout.ProcessingTimeTimeout()) {
+      (k: K, rows: Iterator[In], state: GroupState[S]) => step(k, rows, state, order)(fold)
     }
-  }
 
   /** One key's micro-batch: expire on timeout, else fold and store. */
   def step[In, K, S, Out](k: K, rows: Iterator[In], state: GroupState[S],
-                          order: Ordering[In], stateTimeout: Option[String])(
+                          order: Ordering[In])(
       fold: (K, Option[S], Seq[In]) => (Option[S], Seq[Out])): Iterator[Out] =
     if (state.hasTimedOut) {
       state.remove()
@@ -54,9 +50,45 @@ object KeyedFold {
       next match {
         case Some(s) =>
           state.update(s)
-          stateTimeout.foreach(state.setTimeoutDuration)
+          state.setTimeoutDuration(Ttl)
         case None => if (state.exists) state.remove()
       }
       out.iterator
     }
+
+  /** An event-time step: (key, state, new rows — none on a timer call,
+    * watermark ms, timed out) ⇒ (the state to keep with its wake time in
+    * event-time ms, or `None` to free the key; the rows to emit). */
+  type EventStep[In, K, S, Out] =
+    (K, Option[S], Iterator[In], Long, Boolean) => (Option[(S, Long)], Iterator[Out])
+
+  /** The data's clock: `tsCol` (epoch seconds) becomes `eventTime`,
+    * watermarked `delaySec` behind the newest event. `.as[In]` keeps
+    * `eventTime` in the plan, so the operator drops rows behind the
+    * watermark (`numRowsDroppedByWatermark`) before the step sees them. */
+  def eventTime[In: Encoder, K: Encoder, S: Encoder, Out: Encoder](
+      ds: Dataset[In], key: In => K, tsCol: String, delaySec: Long)(
+      step: EventStep[In, K, S, Out]): Dataset[Out] =
+    ds.withColumn("eventTime", timestamp_seconds(col(tsCol)))
+      .withWatermark("eventTime", s"$delaySec seconds")
+      .as[In].groupByKey(key)
+      .flatMapGroupsWithState[S, Out](OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
+        (k: K, rows: Iterator[In], state: GroupState[S]) => eventStep(k, rows, state)(step)
+      }
+
+  /** One key's event-time call. A timer never lands at or below the
+    * watermark: Spark rejects one below it, so a wake the watermark has
+    * already reached becomes watermark + 1 and fires once it next moves. */
+  def eventStep[In, K, S, Out](k: K, rows: Iterator[In], state: GroupState[S])(
+      step: EventStep[In, K, S, Out]): Iterator[Out] = {
+    val wmMs = state.getCurrentWatermarkMs()
+    val (next, out) = step(k, state.getOption, rows, wmMs, state.hasTimedOut)
+    next match {
+      case Some((s, wakeMs)) =>
+        state.update(s)
+        state.setTimeoutTimestamp(math.max(wakeMs, wmMs + 1))
+      case None => if (state.exists) state.remove()
+    }
+    out
+  }
 }

@@ -28,12 +28,11 @@ object StreamAlert {
   case class Firing(userId: Long, startUs: Long, fireUs: Long)
 
   def track(events: Dataset[Obs],
-            forUs: Long = graft.ops.RelationalOps.AlertForUs,
-            stateTimeout: Option[String] = Some("1 hour")): Dataset[Firing] = {
+            forUs: Long = graft.ops.RelationalOps.AlertForUs): Dataset[Firing] = {
     val spark = events.sparkSession
     import spark.implicits._
     KeyedFold[Obs, Long, AState, Firing](events, _.userId,
-      Ordering.by(o => (o.us, o.eventId)), stateTimeout) { (userId, st0, rows) =>
+      Ordering.by(o => (o.us, o.eventId))) { (userId, st0, rows) =>
       var st = st0
       val out = Seq.newBuilder[Firing]
       rows.foreach { o =>

@@ -30,12 +30,11 @@ object StreamCusum {
 
   def track(events: Dataset[Obs],
             slack: Long = graft.ops.RelationalOps.CusumSlackCents,
-            alarmAt: Long = graft.ops.RelationalOps.CusumAlarmCents,
-            stateTimeout: Option[String] = Some("1 hour")): Dataset[Point] = {
+            alarmAt: Long = graft.ops.RelationalOps.CusumAlarmCents): Dataset[Point] = {
     val spark = events.sparkSession
     import spark.implicits._
     KeyedFold[Obs, Long, CState, Point](events, _.userId,
-      Ordering.by(o => (o.us, o.eventId)), stateTimeout) { (userId, st0, rows) =>
+      Ordering.by(o => (o.us, o.eventId))) { (userId, st0, rows) =>
       var st = st0.getOrElse(CState(0L, 0L))
       val out = rows.map { o =>
         val p = st.prefix + o.cents - slack

@@ -70,12 +70,11 @@ object StreamEncoding {
         12 * s.hRuns, "hour"))
   }
 
-  def track(obs: Dataset[Obs],
-            stateTimeout: Option[String] = Some("1 hour")): Dataset[Ledger] = {
+  def track(obs: Dataset[Obs]): Dataset[Ledger] = {
     val spark = obs.sparkSession
     import spark.implicits._
     KeyedFold[Obs, Long, EState, Ledger](obs, _.day,
-      Ordering.by(o => (o.us, o.eventId)), stateTimeout) { (day, st0, rows) =>
+      Ordering.by(o => (o.us, o.eventId))) { (day, st0, rows) =>
       var st = st0.getOrElse(EState(0L, 0L,
         Map.empty, Map.empty, Map.empty,
         None, 0L, 0L, None, 0L, None, 0L, 0L))

@@ -21,13 +21,12 @@ object StreamFunnel {
   /** `advanceUs` is the time from the previous stage (0 at stage 1). */
   case class Advance(userId: Long, stage: Int, us: Long, advanceUs: Long)
 
-  def track(events: Dataset[Ev],
-            stateTimeout: Option[String] = Some("1 hour")): Dataset[Advance] = {
+  def track(events: Dataset[Ev]): Dataset[Advance] = {
     val spark = events.sparkSession
     import spark.implicits._
     val stages = graft.ops.RelationalOps.FunnelStages
     KeyedFold[Ev, Long, FState, Advance](events, _.userId,
-      Ordering.by(e => (e.us, e.eventId)), stateTimeout) { (userId, st0, rows) =>
+      Ordering.by(e => (e.us, e.eventId))) { (userId, st0, rows) =>
       var st = st0.getOrElse(FState(-1L, -1L, -1L))
       val out = Seq.newBuilder[Advance]
       // fold in event order — the batch census's min-based stage

@@ -1,8 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.functions.{col, timestamp_seconds}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.ops.SketchOps.MisraGries
 
@@ -19,11 +17,12 @@ import graft.ops.SketchOps.MisraGries
   * survives a 100 TB replay; a per-key count-and-sort would hold the full
   * key universe in state.
   *
-  * Event-time semantics follow [[VelocityDetector.detectEventTime]]: a
-  * window seals when the watermark passes its end (the timeout fires at
-  * watermark-reach, never later), sealed output is emitted once, and
-  * events arriving after their window sealed are dropped by explicit
-  * policy (the standard watermark trade).
+  * Event-time semantics follow [[VelocityDetector.detectEventTime]], on
+  * the same [[KeyedFold.eventTime]] clock: a window seals when the
+  * watermark passes its end (the timer fires at watermark-reach, never
+  * later), sealed output is emitted once, and events arriving after their
+  * window sealed are dropped by explicit policy (the standard watermark
+  * trade).
   *
   * Sketch honesty in the output: MG counts are undercounts with error
   * ≤ n/(capacity+1), so each emitted row carries the bound
@@ -45,8 +44,6 @@ import graft.ops.SketchOps.MisraGries
   */
 object StreamHeavyHitters {
   case class Ev(key: String, timestamp: Long)
-  // not private: the encoder's generated constructor needs public access
-  case class EvT(key: String, timestamp: Long, eventTime: java.sql.Timestamp)
   case class WinState(counts: Map[String, Long], n: Long)
   case class Hitter(windowStart: Long, key: String,
                     minCount: Long, maxCount: Long, n: Long, certain: Boolean)
@@ -60,40 +57,23 @@ object StreamHeavyHitters {
     val spark = events.sparkSession
     import spark.implicits._
     val mg = new MisraGries(capacity)
-    events
-      .withColumn("eventTime", timestamp_seconds(col("timestamp")))
-      .withWatermark("eventTime", s"$watermarkDelaySec seconds")
-      .as[EvT]
-      .groupByKey(e => e.timestamp - java.lang.Math.floorMod(e.timestamp, windowSec))
-      .flatMapGroupsWithState[WinState, Hitter](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (winStart: Long, rows: Iterator[EvT], state: GroupState[WinState]) =>
-          val wmMs = state.getCurrentWatermarkMs()
-          val winEndMs = (winStart + windowSec) * 1000L
-          if (state.hasTimedOut) {
-            // watermark passed the window end: seal, emit once, drop state
-            val st = state.getOption.getOrElse(WinState(Map.empty, 0L))
-            state.remove()
-            emit(winStart, st, capacity, thresholdInv)
-          } else {
-            // rows for an already-sealed window are late past the delay —
-            // dropped by policy (state now empty means the emit happened)
-            val st0 = state.getOption.getOrElse(WinState(Map.empty, 0L))
-            val live = if (wmMs >= winEndMs) Iterator.empty else rows
-            var counts = st0.counts
-            var n = st0.n
-            live.foreach { e => counts = mg.reduce(counts, e.key); n += 1 }
-            if (n == 0L && wmMs >= winEndMs) {
-              // nothing but late data ever reached this window: no state
-              Iterator.empty
-            } else {
-              state.update(WinState(counts, n))
-              // seal exactly at watermark-reach of the window end
-              state.setTimeoutTimestamp(math.max(winEndMs, wmMs + 1))
-              Iterator.empty
-            }
-          }
+    KeyedFold.eventTime[Ev, Long, WinState, Hitter](events,
+      e => e.timestamp - java.lang.Math.floorMod(e.timestamp, windowSec), "timestamp",
+      watermarkDelaySec) { (winStart, st0, rows, wmMs, timedOut) =>
+      val st = st0.getOrElse(WinState(Map.empty, 0L))
+      val winEndMs = (winStart + windowSec) * 1000L
+      // watermark passed the window end: seal, emit once, drop state
+      if (timedOut) (None, emit(winStart, st, capacity, thresholdInv))
+      else {
+        // rows for an already-sealed window are late past the delay —
+        // dropped by policy (state now empty means the emit happened)
+        val live = if (wmMs >= winEndMs) Iterator.empty else rows
+        val st1 = live.foldLeft(st)((s, e) => WinState(mg.reduce(s.counts, e.key), s.n + 1))
+        // nothing but late data ever reached this window: no state; else
+        // seal exactly at watermark-reach of the window end
+        (if (st1.n == 0L) None else Some((st1, winEndMs)), Iterator.empty)
       }
+    }
   }
 
   private def emit(winStart: Long, st: WinState, capacity: Int,

@@ -33,12 +33,11 @@ object StreamSprt {
                       nAtDecision: Long, llrAtDecision: Long)
 
   def track(obs: Dataset[Obs],
-            bound: Long = graft.ops.RelationalOps.SprtBoundMicro,
-            stateTimeout: Option[String] = Some("1 hour")): Dataset[Decision] = {
+            bound: Long = graft.ops.RelationalOps.SprtBoundMicro): Dataset[Decision] = {
     val spark = obs.sparkSession
     import spark.implicits._
     KeyedFold[Obs, (String, Long), SState, Decision](obs, o => (o.rule, o.arm),
-      Ordering.by(o => (o.us, o.eventId)), stateTimeout) { (key, st0, rows) =>
+      Ordering.by(o => (o.us, o.eventId))) { (key, st0, rows) =>
       var st = st0.getOrElse(SState(0L, 0L, decided = false))
       val out = Seq.newBuilder[Decision]
       rows.foreach { o =>

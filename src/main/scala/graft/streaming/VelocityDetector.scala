@@ -1,11 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions.{col, timestamp_seconds}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** Per-user transaction-velocity fraud detection — custom keyed state via
-  * `flatMapGroupsWithState` (the stateful-streaming capability the
+  * [[KeyedFold]] (the stateful-streaming capability the
   * reference lacks entirely: its topology is stateless,
   * `TransactionProcessor.java:25-54`, SURVEY.md §2.D).
   *
@@ -19,15 +17,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Two expiry clocks:
   *  - [[detect]]: processing-time TTL — simplest, correct for a
   *    tail-following production stream; its lifecycle is [[KeyedFold]]'s.
-  *  - [[detectEventTime]]: watermark + event-time TTL — the scale-correct
-  *    variant for replay/backfill, where state expiry must follow the
+  *  - [[detectEventTime]]: watermark + event-time TTL on
+  *    [[KeyedFold.eventTime]] — the scale-correct variant for
+  *    replay/backfill, where state expiry must follow the
   *    DATA's clock (a backfill at 1000× speed would otherwise never expire
   *    state, and a paused stream would expire it spuriously).
   */
 object VelocityDetector {
   case class Txn(userId: String, amount: Double, timestamp: Long)
-  case class TxnEv(userId: String, amount: Double, timestamp: Long,
-                   eventTime: java.sql.Timestamp)
   case class UserState(recentTs: List[Long], n: Long, sumAmount: Double)
   case class Alert(userId: String, kind: String, amount: Double, timestamp: Long, detail: String)
 
@@ -56,14 +53,13 @@ object VelocityDetector {
     (alerts, st)
   }
 
-  /** @param stateTimeout processing-time TTL for idle-user state, as
-    *   [[KeyedFold]] documents. */
-  def detect(txns: Dataset[Txn], maxTxns: Int = 3, windowSec: Long = 60,
-             stateTimeout: Option[String] = Some("1 hour")): Dataset[Alert] = {
+  /** Processing-time variant; idle-user state expires after
+    * [[KeyedFold.Ttl]]. */
+  def detect(txns: Dataset[Txn], maxTxns: Int = 3, windowSec: Long = 60): Dataset[Alert] = {
     val spark = txns.sparkSession
     import spark.implicits._
     KeyedFold[Txn, String, UserState, Alert](txns, _.userId,
-      Ordering.by(_.timestamp), stateTimeout) { (userId, st0, rows) =>
+      Ordering.by(_.timestamp)) { (userId, st0, rows) =>
       val (alerts, st1) = advance(userId, rows,
         st0.getOrElse(UserState(Nil, 0L, 0.0)), maxTxns, windowSec)
       (Some(st1), alerts)
@@ -86,47 +82,36 @@ object VelocityDetector {
     *
     * State expiry also follows the data clock: a key with an empty buffer
     * expires `stateTtlSec` after its last event; a key with sealed-but-
-    * unprocessed events is woken by a timeout instead of waiting for new
-    * data, and the timeout never regresses below last-seen + TTL because
+    * unprocessed events is woken by a timer instead of waiting for new
+    * data, and the timer never regresses below last-seen + TTL because
     * `lastSeen` is monotone in state. */
   def detectEventTime(txns: Dataset[Txn], maxTxns: Int = 3, windowSec: Long = 60,
                       stateTtlSec: Long = 3600,
                       watermarkDelaySec: Long = 30): Dataset[Alert] = {
     val spark = txns.sparkSession
     import spark.implicits._
-    txns
-      .withColumn("eventTime", timestamp_seconds(col("timestamp")))
-      .withWatermark("eventTime", s"$watermarkDelaySec seconds")
-      .as[TxnEv]
-      .groupByKey(_.userId)
-      .flatMapGroupsWithState[EvState, Alert](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (userId: String, rows: Iterator[TxnEv], state: GroupState[EvState]) =>
-          val wmMs = state.getCurrentWatermarkMs()
-          val st0 = state.getOption.getOrElse(EvState(Nil, UserState(Nil, 0L, 0.0), Long.MinValue))
-          val buf = st0.buffer ++ rows.map(t => Txn(t.userId, t.amount, t.timestamp))
-          // the watermark SEALS a prefix of event time: fold exactly that
-          // prefix, in event order — batch boundaries can't be observed
-          val (ready, pending) = buf.partition(_.timestamp * 1000L <= wmMs)
-          val (alerts, core1) = advance(userId,
-            ready.sortBy(t => (t.timestamp, t.amount)), st0.core, maxTxns, windowSec)
-          val lastSeen = (st0.lastSeen +: buf.map(_.timestamp)).max
-          if (state.hasTimedOut && buf.isEmpty) {
-            state.remove() // idle past TTL, nothing left to process
-            Iterator.empty
-          } else {
-            state.update(EvState(pending, core1, lastSeen))
-            // wake when the earliest pending event can be sealed — the event
-            // at ts is sealable once the watermark REACHES ts (the watermark
-            // already embeds the delay; adding it again would fire every
-            // no-further-traffic alert one full delay late). With an empty
-            // buffer, expire TTL after the newest event ever seen.
-            val next =
-              if (pending.nonEmpty) pending.map(_.timestamp).min * 1000L + 1
-              else (lastSeen + stateTtlSec) * 1000L
-            state.setTimeoutTimestamp(math.max(next, wmMs + 1))
-            alerts.iterator
-          }
+    KeyedFold.eventTime[Txn, String, EvState, Alert](txns, _.userId, "timestamp",
+      watermarkDelaySec) { (userId, st0, rows, wmMs, timedOut) =>
+      val st = st0.getOrElse(EvState(Nil, UserState(Nil, 0L, 0.0), Long.MinValue))
+      val buf = st.buffer ++ rows
+      if (timedOut && buf.isEmpty) (None, Iterator.empty) // idle past TTL
+      else {
+        // the watermark SEALS a prefix of event time: fold exactly that
+        // prefix, in event order — batch boundaries can't be observed
+        val (ready, pending) = buf.partition(_.timestamp * 1000L <= wmMs)
+        val (alerts, core1) = advance(userId,
+          ready.sortBy(t => (t.timestamp, t.amount)), st.core, maxTxns, windowSec)
+        val lastSeen = (st.lastSeen +: buf.map(_.timestamp)).max
+        // wake when the earliest pending event can be sealed — the event
+        // at ts is sealable once the watermark REACHES ts (the watermark
+        // already embeds the delay; adding it again would fire every
+        // no-further-traffic alert one full delay late). With an empty
+        // buffer, expire TTL after the newest event ever seen.
+        val wakeMs =
+          if (pending.nonEmpty) pending.map(_.timestamp).min * 1000L + 1
+          else (lastSeen + stateTtlSec) * 1000L
+        (Some((EvState(pending, core1, lastSeen), wakeMs)), alerts.iterator)
       }
+    }
   }
 }

@@ -30,6 +30,20 @@ object TestSpark {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
 
+  /** Runs `body`, which starts processing-time keyed queries, with empty
+    * micro-batches off on `session`. Such a query holds an armed TTL
+    * ([[graft.streaming.KeyedFold.Ttl]]), and the engine runs an empty
+    * micro-batch on every trigger to check it, so `processAllAvailable`
+    * would never return. A query reads the setting when it starts.
+    * Event-time queries keep Spark's default: their timers fire in those
+    * batches. */
+  def withoutEmptyBatches[T](session: SparkSession)(body: => T): T = {
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val before = session.conf.getOption(key)
+    session.conf.set(key, "false")
+    try body finally before.fold(session.conf.unset(key))(session.conf.set(key, _))
+  }
+
   /** The WARN-or-worse lines (`logger: message`) logged while `body` runs. */
   def warningsOf(body: => Unit): Seq[String] = {
     val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()

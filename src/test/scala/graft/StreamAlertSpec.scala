@@ -29,12 +29,11 @@ class StreamAlertSpec extends SparkSpec {
     val mem = MemoryStream[StreamAlert.Obs]
     val out = Files.createTempDirectory("alerts").toString
     val ck = Files.createTempDirectory("alerts_ck").toString
-    // stateTimeout = None: a processing-time timeout makes the engine
-    // free-run empty micro-batches to evaluate it, which a test sink
-    // turns into a runaway metadata log — the TTL is a production dial
-    val q = StreamAlert.track(mem.toDS(), stateTimeout = None).writeStream
+    // empty micro-batches off: the armed TTL would otherwise make the
+    // engine free-run them, and processAllAvailable would never return
+    val q = withoutEmptyBatches(spark)(StreamAlert.track(mem.toDS()).writeStream
       .format("parquet").option("path", out)
-      .option("checkpointLocation", ck).start()
+      .option("checkpointLocation", ck).start())
     try {
       rows.grouped((rows.length + 6) / 7).foreach { c =>
         mem.addData(c.toIndexedSeq); q.processAllAvailable()
@@ -58,9 +57,9 @@ class StreamAlertSpec extends SparkSpec {
       }
       val out = Files.createTempDirectory("alerts2").toString
       val ck = Files.createTempDirectory("alerts2_ck").toString
-      val q = StreamAlert.track(mem.toDS(), stateTimeout = None).writeStream
+      val q = withoutEmptyBatches(spark)(StreamAlert.track(mem.toDS()).writeStream
         .format("parquet").option("path", out)
-        .option("checkpointLocation", ck).start()
+        .option("checkpointLocation", ck).start())
       try {
         // one observation per micro-batch: every latch carry is cross-batch
         recs.foreach { r => mem.addData(r); q.processAllAvailable() }

@@ -26,9 +26,9 @@ class StreamCusumSpec extends SparkSpec {
     val mem = MemoryStream[StreamCusum.Obs]
     val out = Files.createTempDirectory("cusum").toString
     val ck = Files.createTempDirectory("cusum_ck").toString
-    val q = StreamCusum.track(mem.toDS(), stateTimeout = None).writeStream
+    val q = withoutEmptyBatches(spark)(StreamCusum.track(mem.toDS()).writeStream
       .format("parquet").option("path", out)
-      .option("checkpointLocation", ck).start()
+      .option("checkpointLocation", ck).start())
     try {
       // 7 chunks cut users' series mid-drift: the (prefix, minPrefix)
       // fold state must carry the statistic across micro-batches
@@ -52,9 +52,9 @@ class StreamCusumSpec extends SparkSpec {
     val mem = MemoryStream[StreamCusum.Obs]
     val out = Files.createTempDirectory("cusum2").toString
     val ck = Files.createTempDirectory("cusum2_ck").toString
-    val q = StreamCusum.track(mem.toDS(), stateTimeout = None).writeStream
+    val q = withoutEmptyBatches(spark)(StreamCusum.track(mem.toDS()).writeStream
       .format("parquet").option("path", out)
-      .option("checkpointLocation", ck).start()
+      .option("checkpointLocation", ck).start())
     try {
       obs.foreach { o => mem.addData(o); q.processAllAvailable() }
       val got = spark.read.parquet(out).as[StreamCusum.Point].collect()

@@ -24,9 +24,9 @@ class StreamEncodingSpec extends SparkSpec {
     val mem = MemoryStream[StreamEncoding.Obs]
     val out = Files.createTempDirectory("enc").toString
     val ck = Files.createTempDirectory("enc_ck").toString
-    val q = StreamEncoding.track(mem.toDS(), stateTimeout = None).writeStream
+    val q = withoutEmptyBatches(spark)(StreamEncoding.track(mem.toDS()).writeStream
       .format("parquet").option("path", out)
-      .option("checkpointLocation", ck).start()
+      .option("checkpointLocation", ck).start())
     try {
       rows.grouped((rows.length + chunks - 1) / chunks).foreach { c =>
         mem.addData(c.toIndexedSeq); q.processAllAvailable()

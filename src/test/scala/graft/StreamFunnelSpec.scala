@@ -15,9 +15,9 @@ class StreamFunnelSpec extends SparkSpec {
         "unix_micros(ts) AS us", "event_id AS eventId")
       .as[Ev].collect().sortBy(e => (e.us, e.eventId))
     val mem = MemoryStream[Ev]
-    val q = StreamFunnel.track(mem.toDS(), stateTimeout = None)
+    val q = withoutEmptyBatches(spark)(StreamFunnel.track(mem.toDS())
       .writeStream.format("memory").queryName("funnel_test")
-      .outputMode("append").start()
+      .outputMode("append").start())
     try {
       // ts-ordered arrival split across three micro-batches — the
       // tail-following contract; state must carry stages across batches
@@ -48,9 +48,9 @@ class StreamFunnelSpec extends SparkSpec {
   test("ordered-strictness holds in-flight: simultaneous and pre-view clicks never advance") {
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[Ev]
-    val q = StreamFunnel.track(mem.toDS(), stateTimeout = None)
+    val q = withoutEmptyBatches(spark)(StreamFunnel.track(mem.toDS())
       .writeStream.format("memory").queryName("funnel_edge")
-      .outputMode("append").start()
+      .outputMode("append").start())
     try {
       mem.addData(
         Ev(2L, "click", 5L, 1L), Ev(2L, "view", 10L, 2L),    // click before view

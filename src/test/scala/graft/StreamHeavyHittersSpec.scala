@@ -59,6 +59,33 @@ class StreamHeavyHittersSpec extends SparkSpec {
       s"true count 10 outside reported bounds: $h")
   }
 
+  test("a row behind the watermark never reaches the step — counted as dropped, no hitter changes") {
+    implicit val sc = spark.sqlContext
+    /** The hitters and the operator's late-row count; `extra` rides in
+      * the batch after the watermark has passed 47 s for two batches,
+      * while window [40, 50) is still open. */
+    def run(extra: Seq[Ev], name: String): (Seq[Hitter], Long) = {
+      val mem = MemoryStream[Ev]
+      val q = StreamHeavyHitters.detect(mem.toDS(), windowSec = 10, capacity = 4,
+        thresholdInv = 3, watermarkDelaySec = 5)
+        .writeStream.format("memory").queryName(name).outputMode("append").start()
+      try {
+        Seq(Seq(Ev("a", 41), Ev("a", 42), Ev("b", 43)), Seq(Ev("c", 52)), Seq(Ev("c", 53)),
+          Ev("c", 54) +: extra, Seq(Ev("sentinel", 100000)), Seq(Ev("sentinel", 100001)))
+          .foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+        (spark.table(name).as[Hitter].collect().toSeq.filterNot(_.key == "sentinel")
+          .sortBy(h => (h.windowStart, h.key)),
+          q.recentProgress.flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum)
+      } finally q.stop()
+    }
+    val (onTime, onTimeDropped) = run(Nil, "hh_late_none")
+    // counted, b@44 would lift b over n/3 in window [40, 50)
+    val (late, lateDropped) = run(Seq(Ev("b", 44)), "hh_late_one")
+    assert(onTime.map(h => (h.windowStart, h.key)) === Seq((40L, "a"), (50L, "c")))
+    assert(late === onTime, "a late row must not change the hitters")
+    assert(lateDropped - onTimeDropped === 1L, "the operator drops the late row")
+  }
+
   test("events later than a sealed window are dropped by policy, not recounted") {
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[Ev]

@@ -45,9 +45,9 @@ class StreamSprtSpec extends SparkSpec {
     val mem = MemoryStream[StreamSprt.Obs]
     val out = Files.createTempDirectory("sprt").toString
     val ck = Files.createTempDirectory("sprt_ck").toString
-    val q = StreamSprt.track(mem.toDS(), stateTimeout = None).writeStream
+    val q = withoutEmptyBatches(spark)(StreamSprt.track(mem.toDS()).writeStream
       .format("parquet").option("path", out)
-      .option("checkpointLocation", ck).start()
+      .option("checkpointLocation", ck).start())
     try {
       // 7 chunks cut every walk mid-drift: the (llr, n, decided) fold
       // state must carry the evidence across micro-batches
@@ -73,9 +73,9 @@ class StreamSprtSpec extends SparkSpec {
       } // down = -2·bound: one miss decides h0 from anywhere in (−A, A)
       val out = Files.createTempDirectory("sprt2").toString
       val ck = Files.createTempDirectory("sprt2_ck").toString
-      val q = StreamSprt.track(mem.toDS(), stateTimeout = None).writeStream
+      val q = withoutEmptyBatches(spark)(StreamSprt.track(mem.toDS()).writeStream
         .format("parquet").option("path", out)
-        .option("checkpointLocation", ck).start()
+        .option("checkpointLocation", ck).start())
       try {
         // one outcome per micro-batch: every carry is cross-batch
         obs.foreach { o => mem.addData(o); q.processAllAvailable() }

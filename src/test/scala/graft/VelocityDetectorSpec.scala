@@ -11,9 +11,9 @@ class VelocityDetectorSpec extends SparkSpec {
   test("velocity alert fires on >3 txns in 60s for one user, state persists across batches") {
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[Txn]
-    val alerts = VelocityDetector.detect(mem.toDS(), stateTimeout = None)
-    val q = alerts.writeStream.format("memory").queryName("velocity_test")
-      .outputMode("append").start()
+    val alerts = VelocityDetector.detect(mem.toDS())
+    val q = withoutEmptyBatches(spark)(alerts.writeStream.format("memory")
+      .queryName("velocity_test").outputMode("append").start())
     try {
       // batch 1: 3 txns in-window — no alert yet
       mem.addData(Txn("u1", 10, 100), Txn("u1", 11, 110), Txn("u1", 12, 120))
@@ -111,12 +111,38 @@ class VelocityDetectorSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("event-time: a row behind the watermark never reaches the step — counted as dropped, no alert changes") {
+    implicit val sc = spark.sqlContext
+    /** The alerts and the operator's late-row count; `extra` rides in
+      * the batch after the watermark has passed 170 s for two batches. */
+    def run(extra: Seq[Txn], name: String): (Seq[Alert], Long) = {
+      val mem = MemoryStream[Txn]
+      val q = VelocityDetector.detectEventTime(mem.toDS(), watermarkDelaySec = 30)
+        .writeStream.format("memory").queryName(name).outputMode("append").start()
+      try {
+        Seq(Seq(Txn("u1", 10, 100), Txn("u1", 11, 110), Txn("u1", 12, 120), Txn("u1", 13, 130)),
+          Seq(Txn("u2", 1, 200)), Seq(Txn("u2", 1, 201)), Txn("u3", 1, 202) +: extra,
+          Seq(Txn("sentinel", 1, 100000)), Seq(Txn("sentinel", 1, 100001)))
+          .foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+        (spark.table(name).as[Alert].collect().toSeq.filterNot(_.userId == "sentinel")
+          .sortBy(a => (a.userId, a.timestamp, a.kind)),
+          q.recentProgress.flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum)
+      } finally q.stop()
+    }
+    val (onTime, onTimeDropped) = run(Nil, "ev_late_none")
+    // folded, u1@105 for 5000 would add a velocity and a deviation alert
+    val (late, lateDropped) = run(Seq(Txn("u1", 5000, 105)), "ev_late_one")
+    assert(onTime.exists(_.kind == "velocity"), "the fixture must alert")
+    assert(late === onTime, "a late row must not change the alerts")
+    assert(lateDropped - onTimeDropped === 1L, "the operator drops the late row")
+  }
+
   test("deviation alert fires on 3x the running mean after warm-up") {
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[Txn]
-    val alerts = VelocityDetector.detect(mem.toDS(), maxTxns = 99, stateTimeout = None)
-    val q = alerts.writeStream.format("memory").queryName("deviation_test")
-      .outputMode("append").start()
+    val alerts = VelocityDetector.detect(mem.toDS(), maxTxns = 99)
+    val q = withoutEmptyBatches(spark)(alerts.writeStream.format("memory")
+      .queryName("deviation_test").outputMode("append").start())
     try {
       mem.addData(Txn("u1", 100, 0), Txn("u1", 110, 1000), Txn("u1", 90, 2000))
       q.processAllAvailable()
