@@ -2,8 +2,9 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.FlatMapGroupsWithState
 import org.apache.spark.sql.functions.{broadcast, col}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, StreamingQuery, Trigger}
 
 import graft.io.LocalFs
 
@@ -23,20 +24,51 @@ import graft.io.LocalFs
   *
   * Exactly-once is the replayable source plus these idempotent writes
   * (Structured Streaming's sink contract); the checkpoint logs, state
-  * stores and sink commit run on [[LocalFs]], which [[start]] installs.
-  * A store maintainer is a delta over one static batch on one of the two
-  * bases below, [[LeafStore]] or [[DayStore]]; they alone know how a
-  * maintainer lands and starts a micro-batch. */
+  * stores and sink commit run on [[LocalFs]], which both entry points
+  * install. A store maintainer is a delta over one static batch on one of
+  * the two bases below, [[LeafStore]] or [[DayStore]]; they alone know how
+  * a maintainer lands and starts a micro-batch.
+  *
+  * Two entry points differ only in the trigger:
+  *  - [[start]] ticks every second. The store maintainers start here, and
+  *    so must any query holding a processing-time TTL
+  *    ([[KeyedFold.apply]]): an armed TTL makes the engine run an empty
+  *    micro-batch on every trigger, so the tick bounds that idle work.
+  *  - [[startBackToBack]] starts the next micro-batch as soon as the last
+  *    one ends (Spark's default trigger), as Kafka Streams pushes each
+  *    polled record straight through. The paper's alert sink starts here,
+  *    so its throughput is set by the batch, not by a clock. With no new
+  *    input it polls the source and runs nothing, except one no-data
+  *    batch per watermark move for event-time state. */
 object BatchSink {
 
   /** Start `each` on every micro-batch of `stream` (with its batch id),
     * on a 1 s processing-time trigger, checkpointed at `checkpoint`. */
   def start(stream: DataFrame, checkpoint: String)(
+      each: (DataFrame, Long) => Unit): StreamingQuery =
+    run(stream, checkpoint, Trigger.ProcessingTime("1 second"))(each)
+
+  /** [[start]] with each micro-batch starting as soon as the last one
+    * ends. Refuses a stream holding processing-time keyed state, which
+    * would run an empty micro-batch (an offset-log entry, a commit and a
+    * state version) back to back while its input is idle. */
+  def startBackToBack(stream: DataFrame, checkpoint: String)(
+      each: (DataFrame, Long) => Unit): StreamingQuery = {
+    val ticking = stream.queryExecution.analyzed.exists {
+      case f: FlatMapGroupsWithState => f.timeout == GroupStateTimeout.ProcessingTimeTimeout()
+      case _ => false
+    }
+    require(!ticking, "a processing-time timeout runs an empty micro-batch on every " +
+      "trigger; start this stream with BatchSink.start, whose 1 s trigger bounds them")
+    run(stream, checkpoint, Trigger.ProcessingTime(0L))(each)
+  }
+
+  private def run(stream: DataFrame, checkpoint: String, trigger: Trigger)(
       each: (DataFrame, Long) => Unit): StreamingQuery = {
     LocalFs.install(stream.sparkSession)
     stream.writeStream
       .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime("1 second"))
+      .trigger(trigger)
       .foreachBatch(each)
       .start()
   }

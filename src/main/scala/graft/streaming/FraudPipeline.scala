@@ -170,7 +170,11 @@ object FraudPipeline {
     * own `batch_id=N` leaf, so a batch re-delivered after a failure
     * replaces itself instead of duplicating — upgrading the reference's
     * at-least-once auto-commit consumer (`FraudAlertConsumer.java:42`) to
-    * effective exactly-once. */
+    * effective exactly-once. Micro-batches run back to back
+    * ([[BatchSink.startBackToBack]]), as the reference's topology handles
+    * each record once polled: `alerts` may hold [[fraudAlerts]] or
+    * event-time keyed state ([[VelocityDetector.detectEventTime]]), not a
+    * processing-time TTL ([[VelocityDetector.detect]]), which is refused. */
   def startAlertSink(alerts: DataFrame, path: String, checkpoint: String): StreamingQuery =
-    BatchSink.start(alerts, checkpoint)(BatchSink.write(_, _, path))
+    BatchSink.startBackToBack(alerts, checkpoint)(BatchSink.write(_, _, path))
 }

@@ -18,9 +18,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * after the whole batch ([[StreamEncoding]]'s ledger). A key idle for
   * [[Ttl]] is removed with no output, so total state stays bounded by
   * keys active inside it. The armed TTL makes the engine run an empty
-  * micro-batch on every trigger, so `processAllAvailable` never returns
-  * on such a query; specs turn `spark.sql.streaming.noDataMicroBatches`
-  * off around them, and [[step]] is specced directly for the expiry.
+  * micro-batch on every trigger, so such a query starts on the ticking
+  * [[BatchSink.start]] ([[BatchSink.startBackToBack]] refuses it), and
+  * `processAllAvailable` never returns on it; specs turn
+  * `spark.sql.streaming.noDataMicroBatches` off around them, and [[step]]
+  * is specced directly for the expiry. [[eventTime]] runs a no-data
+  * batch only when the watermark moves, so it may run back to back.
   *
   * Ordering contract: rows fold in `order` within a micro-batch, and
   * arrival must respect event time across batches (a tail-following keyed

@@ -5,7 +5,7 @@ Usage (from the repository root):
 
     python3 tools/jfr_perfbench.py --workload NAME [--seed N] [--seconds S]
                                    [--cores N] [--scale full|tiny] [--top K]
-                                   [--window] [--frames a,b,...]
+                                   [--window] [--frames a,b,...] [--alloc]
 
 Builds and launches the benchmark JVM exactly as perfbench/run.py does (its
 classpath() and jvm_flags()), with -XX:StartFlightRecording added, runs the
@@ -18,6 +18,9 @@ workload once untraced, and prints:
     work such as class loading drops out;
   - with --frames, per comma-separated substring, the samples whose stack
     holds a frame containing it (inclusive counts, 64 frames deep);
+  - with --alloc, the measured window's allocation (jdk.ObjectAllocationSample
+    weight, in MB): its total and per committed batch, by top frame, and,
+    with --frames, by frame on the stack (inclusive, so shares overlap);
   - the GC pause total (jdk.GarbageCollection);
   - the run's latency p50/p99 as run.py computes them, for context.
 The recording is kept as .bench_build/perfbench/jfr/<workload>-seed<N>.jfr
@@ -97,10 +100,24 @@ def inclusive(samples, patterns):
                                 for p in patterns})
 
 
-def table(title, counter, total, top):
-    print(f"{title} ({total})")
+def alloc_weight(samples, patterns):
+    """Allocation samples' weight in bytes: (total, by top frame, by
+    pattern). A sample counts for a pattern when a frame anywhere on its
+    stack contains it, so the pattern shares overlap."""
+    by_top, by_pattern = collections.Counter(), collections.Counter({p: 0 for p in patterns})
+    for e in samples:
+        weight, fs = int(e["values"].get("weight") or 0), frames(e)
+        by_top[(fs or ["?"])[0]] += weight
+        for p in patterns:
+            if any(p in f for f in fs):
+                by_pattern[p] += weight
+    return sum(by_top.values()), by_top, by_pattern
+
+
+def table(title, counter, total, top, fmt="{:7d}"):
+    print(f"{title} ({fmt.format(total).strip()})")
     for key, n in counter.most_common(top):
-        print(f"  {n:7d}  {100.0 * n / max(total, 1):5.1f}%  {key}")
+        print(f"  {fmt.format(n)}  {100.0 * n / max(total, 1):5.1f}%  {key}")
 
 
 def main():
@@ -115,6 +132,8 @@ def main():
                     help="only execution samples of the measured window")
     ap.add_argument("--frames", default="",
                     help="comma-separated frame substrings to count inclusively")
+    ap.add_argument("--alloc", action="store_true",
+                    help="the measured window's allocation weight by frame")
     a = ap.parse_args()
     patterns = [p for p in a.frames.split(",") if p]
 
@@ -161,11 +180,23 @@ def main():
         table(f"execution samples by frame on the stack, {scope}",
               inclusive(samples, patterns), len(samples), len(patterns))
 
+    e2e, _, info = pb.stream_metrics(raw, params)
+    if a.alloc:
+        allocs = in_window(jfr_events(jfr, "jdk.ObjectAllocationSample", 64 if patterns else 1),
+                           raw["window_start_ms"], raw["stop_ms"])
+        total, by_top, by_pattern = alloc_weight(allocs, patterns)
+        mb = lambda c: collections.Counter({k: v / 2 ** 20 for k, v in c.items()})
+        n = info["window_batches"]
+        table(f"allocated MB by top frame, window, {total / 2 ** 20 / max(n, 1):.0f} MB per batch "
+              f"over {n} batches", mb(by_top), total / 2 ** 20, a.top, "{:9.1f}")
+        if patterns:
+            table("allocated MB by frame on the stack, window", mb(by_pattern),
+                  total / 2 ** 20, len(patterns), "{:9.1f}")
+
     gcs = jfr_events(jfr, "jdk.GarbageCollection", 1)
     pause = sum(seconds(e["values"].get("sumOfPauses")) for e in gcs)
     print(f"gc: {len(gcs)} collections, {1000 * pause:.0f} ms paused")
 
-    e2e, _, info = pb.stream_metrics(raw, params)
     print(f"latency p50 {e2e['latency_p50_ms']:.0f} ms, p99 {e2e['latency_p99_ms']:.0f} ms "
           f"over {info['latency_samples']} batches")
 

@@ -16,6 +16,12 @@ def sample(start, stack=(), thread="Executor task launch worker for task 12.0 in
                                                  for t, m in stack]}}}
 
 
+def alloc(start, weight, stack=()):
+    ev = sample(start, stack)
+    ev["values"]["weight"] = weight
+    return ev
+
+
 class WindowTest(unittest.TestCase):
     def test_epoch_ms_reads_nanoseconds_and_zones(self):
         self.assertAlmostEqual(jp.epoch_ms("1970-01-01T00:00:01.500000001Z"), 1500.000001, places=5)
@@ -40,6 +46,23 @@ class WindowTest(unittest.TestCase):
     def test_thread_kind_folds_sampled_thread_numbers(self):
         self.assertEqual(jp.thread_kind(sample("1970-01-01T00:00:01Z")),
                          "Executor task launch worker for task N.N in stage N.N")
+
+
+
+class AllocTest(unittest.TestCase):
+    def test_alloc_weight_sums_by_top_frame_and_by_frame_on_the_stack(self):
+        copy = ("java/util/Arrays", "copyOf")
+        parse = ("org/apache/spark/sql/catalyst/expressions/JsonToStructs", "eval")
+        write = ("org/apache/spark/sql/execution/datasources/FileFormatWriter", "write")
+        t = "1970-01-01T00:00:01Z"
+        samples = [alloc(t, 100, [copy, parse]), alloc(t, 40, [copy, write]),
+                   alloc(t, 7, [parse, parse]), alloc(t, 3, []), alloc(t, None, [copy])]
+        total, by_top, by_pattern = jp.alloc_weight(samples, ["JsonToStructs", "Writer", "Nowhere"])
+        self.assertEqual(total, 150)
+        self.assertEqual(by_top, {"java.util.Arrays.copyOf": 140,
+                                  "org.apache.spark.sql.catalyst.expressions.JsonToStructs.eval": 7,
+                                  "?": 3})
+        self.assertEqual(by_pattern, {"JsonToStructs": 107, "Writer": 40, "Nowhere": 0})
 
 
 if __name__ == "__main__":
