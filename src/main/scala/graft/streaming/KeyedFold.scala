@@ -29,7 +29,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * arrival must respect event time across batches (a tail-following keyed
   * stream, which the reference's keyed produce guarantees per user). For
   * out-of-order replay, use the event-time clock, [[eventTime]]
-  * ([[VelocityDetector.detectEventTime]], [[StreamHeavyHitters]]). */
+  * ([[VelocityDetector.detectEventTime]], [[StreamHeavyHitters]]).
+  *
+  * State type: a state `S` with a `Seq`/`List`/`Array`/`Map` field
+  * decodes through `MapObjects`, whose lambda variables Spark renames each
+  * time it re-resolves the state deserializer, once per micro-batch. The
+  * decoder's generated source then differs in every batch and is compiled
+  * again there, on one task while the others wait on `CodeGenerator`'s
+  * compile lock. Flat fields and `Array[Byte]` (`BinaryType`) compile
+  * once per JVM, so [[VelocityDetector.EvState]] packs its buffer into
+  * bytes. */
 object KeyedFold {
   val Ttl = "1 hour"
 

@@ -30,9 +30,10 @@ object VelocityDetector {
 
   /** The per-user state machine, shared by both expiry variants: fold a
     * batch of transactions (sorted by event time) through the state,
-    * emitting velocity/deviation alerts. */
-  private def advance(userId: String, txns: Seq[Txn], st0: UserState,
-                      maxTxns: Int, windowSec: Long): (Seq[Alert], UserState) = {
+    * emitting velocity/deviation alerts. Package-visible so the batch
+    * twin of [[detectEventTime]] can fold it over a static input. */
+  private[graft] def advance(userId: String, txns: Seq[Txn], st0: UserState,
+                             maxTxns: Int, windowSec: Long): (Seq[Alert], UserState) = {
     var st = st0
     val alerts = txns.flatMap { t =>
       val recent = (t.timestamp :: st.recentTs).filter(_ > t.timestamp - windowSec)
@@ -66,9 +67,32 @@ object VelocityDetector {
     }
   }
 
-  /** Buffered per-key event-time state: not-yet-sealed events, the folded
-    * detector state, and the max event time ever seen. */
-  case class EvState(buffer: List[Txn], core: UserState, lastSeen: Long)
+  /** Buffered per-key event-time state: the not-yet-sealed events and the
+    * detector's recent timestamps packed into bytes ([[pack]]), its two
+    * running moments, and the max event time ever seen. A `BinaryType`
+    * column decodes without `MapObjects`, so the state's decoder compiles
+    * once per JVM; a `List` field would recompile it every micro-batch
+    * (see [[KeyedFold]]). */
+  case class EvState(packed: Array[Byte], n: Long, sumAmount: Double, lastSeen: Long)
+
+  /** `pending.size`, then its `(timestamp, amount)` pairs, then `recentTs`. */
+  private def pack(pending: Seq[Txn], recentTs: List[Long]): Array[Byte] = {
+    val b = java.nio.ByteBuffer.allocate(4 + 16 * pending.size + 8 * recentTs.size)
+    b.putInt(pending.size)
+    pending.foreach(t => b.putLong(t.timestamp).putDouble(t.amount))
+    recentTs.foreach(b.putLong)
+    b.array()
+  }
+
+  /** [[pack]]'s inverse: the pending events of `userId` and `recentTs`. */
+  private def unpack(userId: String, packed: Array[Byte]): (List[Txn], List[Long]) = {
+    val b = java.nio.ByteBuffer.wrap(packed)
+    val pending = List.fill(b.getInt()) {
+      val ts = b.getLong()
+      Txn(userId, b.getDouble(), ts)
+    }
+    (pending, List.fill(b.remaining / 8)(b.getLong()))
+  }
 
   /** Event-time variant, replay-invariant ACROSS micro-batches: incoming
     * events are BUFFERED in state and folded through the detector only
@@ -92,15 +116,17 @@ object VelocityDetector {
     import spark.implicits._
     KeyedFold.eventTime[Txn, String, EvState, Alert](txns, _.userId, "timestamp",
       watermarkDelaySec) { (userId, st0, rows, wmMs, timedOut) =>
-      val st = st0.getOrElse(EvState(Nil, UserState(Nil, 0L, 0.0), Long.MinValue))
-      val buf = st.buffer ++ rows
+      val st = st0.getOrElse(EvState(pack(Nil, Nil), 0L, 0.0, Long.MinValue))
+      val (buffer, recentTs) = unpack(userId, st.packed)
+      val buf = buffer ++ rows
       if (timedOut && buf.isEmpty) (None, Iterator.empty) // idle past TTL
       else {
         // the watermark SEALS a prefix of event time: fold exactly that
         // prefix, in event order — batch boundaries can't be observed
         val (ready, pending) = buf.partition(_.timestamp * 1000L <= wmMs)
         val (alerts, core1) = advance(userId,
-          ready.sortBy(t => (t.timestamp, t.amount)), st.core, maxTxns, windowSec)
+          ready.sortBy(t => (t.timestamp, t.amount)), UserState(recentTs, st.n, st.sumAmount),
+          maxTxns, windowSec)
         val lastSeen = (st.lastSeen +: buf.map(_.timestamp)).max
         // wake when the earliest pending event can be sealed — the event
         // at ts is sealable once the watermark REACHES ts (the watermark
@@ -110,7 +136,8 @@ object VelocityDetector {
         val wakeMs =
           if (pending.nonEmpty) pending.map(_.timestamp).min * 1000L + 1
           else (lastSeen + stateTtlSec) * 1000L
-        (Some((EvState(pending, core1, lastSeen), wakeMs)), alerts.iterator)
+        (Some((EvState(pack(pending, core1.recentTs), core1.n, core1.sumAmount, lastSeen), wakeMs)),
+          alerts.iterator)
       }
     }
   }

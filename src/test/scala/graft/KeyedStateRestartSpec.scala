@@ -21,7 +21,10 @@ import graft.streaming._
   * out-of-order rows, one duplicate row, and a row that only the restored
   * watermark drops as late; sentinel batches seal what is buffered. The
   * processing-time laws also hold the batch twin: the restarted sink
-  * equals the maintainer over every fixture row as one static Dataset. */
+  * equals the maintainer over every fixture row as one static Dataset.
+  * So do the two `detectEventTime` laws, on [[velocityTwin]]; their
+  * fixture seals one key's rows in a call where amount order is not time
+  * order, and one row exactly at the final watermark. */
 class KeyedStateRestartSpec extends SparkSpec {
   import spark.implicits._
 
@@ -72,10 +75,31 @@ class KeyedStateRestartSpec extends SparkSpec {
     restarted
   }
 
-  /** The law on the event-time clock. */
+  /** The law on the event-time clock, plus, when given, the batch twin:
+    * the restarted sink equals `twin` over the fixture. */
   def restartLaw[In: Encoder, Out: Encoder](run: Dataset[In] => Dataset[Out],
-      batches: Seq[Seq[In]], k: Int)(provider: String): Unit =
-    checkLaw(withProvider(provider), run, batches, k)
+      batches: Seq[Seq[In]], k: Int, twin: Option[SparkSession => Seq[Out]] = None)(
+      provider: String): Unit = {
+    val session = withProvider(provider)
+    val restarted = checkLaw(session, run, batches, k)
+    twin.foreach(t => assert(bag(t(session)) === bag(restarted),
+      "the restarted sink must equal the batch twin"))
+  }
+
+  /** `detectEventTime`'s batch twin: the rows the operator accepts (those
+    * later than their batch's watermark, the newest event time of the
+    * batches before it minus the delay), per key in `(timestamp, amount)`
+    * order, sealed at the final watermark and folded through the
+    * detector's step from empty state. */
+  private def velocityTwin(batches: Seq[Seq[VelocityDetector.Txn]]): Seq[VelocityDetector.Alert] = {
+    val wms = batches.scanLeft(0L)((wm, b) => (wm +: b.map(_.timestamp - 30)).max)
+    batches.zip(wms).flatMap { case (b, wm) => b.filter(_.timestamp > wm) }
+      .groupBy(_.userId).toSeq.flatMap { case (user, txns) =>
+        VelocityDetector.advance(user,
+          txns.filter(_.timestamp <= wms.last).sortBy(t => (t.timestamp, t.amount)),
+          VelocityDetector.UserState(Nil, 0L, 0.0), maxTxns = 3, windowSec = 60)._1
+      }
+  }
 
   /** The law on the processing-time clock, with empty micro-batches off
     * (`withoutEmptyBatches`), plus the batch twin: the restarted sink
@@ -102,27 +126,37 @@ class KeyedStateRestartSpec extends SparkSpec {
   private val velocityEventTime = {
     import VelocityDetector.Txn
     Seq(
+      // u5's rows seal in one call, where amount order is not time order
       Seq(Txn("u1", 10, 100), Txn("u1", 11, 130), Txn("u1", 12, 110),
-        Txn("u2", 50, 100)),
+        Txn("u2", 50, 100), Txn("u5", 100, 10), Txn("u5", 1, 20), Txn("u5", 2, 30),
+        Txn("u5", 3, 40)),
       // u1@110 again: the one duplicate row
       Seq(Txn("u1", 13, 140), Txn("u2", 60, 120), Txn("u2", 55, 110),
         Txn("u1", 12, 110)),
       // u1@105 is behind the restored watermark (140 − 30): dropped late
       Seq(Txn("u1", 14, 150), Txn("u2", 400, 160), Txn("u1", 9, 105)),
-      Seq(Txn("sentinel", 1, 100000)),
-      Seq(Txn("sentinel", 1, 100001)))
+      Seq(Txn("sentinel", 1, 100000), Txn("u4", 10, 99950), Txn("u4", 11, 99955),
+        Txn("u4", 12, 99960)),
+      // u4@99971 sits exactly on the final watermark (100001 − 30); the
+      // next batch's u4 row seals it
+      Seq(Txn("sentinel", 1, 100001), Txn("u4", 1000, 99971)),
+      Seq(Txn("u4", 1, 99990)))
+  }
+
+  /** JSON wire values through [[FraudPipeline.parse]], as perfbench's
+    * `velocity_state` parses them. */
+  private def wireTxns(wire: Dataset[String]): Dataset[VelocityDetector.Txn] = {
+    import wire.sparkSession.implicits._
+    FraudPipeline.parse(wire.toDF("value"))
+      .withColumn("timestamp", col("timestamp").cast("long"))
+      .as[VelocityDetector.Txn]
   }
 
   /** The benchmarked stateful path, composed as perfbench's
-    * `velocity_state` composes it: JSON wire values through
-    * [[FraudPipeline.parse]] into [[VelocityDetector.detectEventTime]]. */
-  private def wireVelocity(wire: Dataset[String]): Dataset[VelocityDetector.Alert] = {
-    import wire.sparkSession.implicits._
-    VelocityDetector.detectEventTime(
-      FraudPipeline.parse(wire.toDF("value"))
-        .withColumn("timestamp", col("timestamp").cast("long"))
-        .as[VelocityDetector.Txn])
-  }
+    * `velocity_state` composes it: [[wireTxns]] into
+    * [[VelocityDetector.detectEventTime]]. */
+  private def wireVelocity(wire: Dataset[String]): Dataset[VelocityDetector.Alert] =
+    VelocityDetector.detectEventTime(wireTxns(wire))
 
   /** `velocityEventTime` on the wire, with the records a wire carries
     * besides: malformed JSON and a wrong-typed `amount` (both dropped by
@@ -199,9 +233,11 @@ class KeyedStateRestartSpec extends SparkSpec {
     "VelocityDetector.detect" -> processingTimeLaw((ds: Dataset[VelocityDetector.Txn]) =>
       VelocityDetector.detect(ds), velocity, 2),
     "VelocityDetector.detectEventTime" -> restartLaw((ds: Dataset[VelocityDetector.Txn]) =>
-      VelocityDetector.detectEventTime(ds), velocityEventTime, 2),
+      VelocityDetector.detectEventTime(ds), velocityEventTime, 2,
+      Some((_: SparkSession) => velocityTwin(velocityEventTime))),
     "FraudPipeline.parse → VelocityDetector.detectEventTime, wire records" ->
-      restartLaw(wireVelocity, wireVelocityEventTime, 2),
+      restartLaw(wireVelocity, wireVelocityEventTime, 2, Some((session: SparkSession) =>
+        velocityTwin(wireVelocityEventTime.map(b => wireTxns(session.createDataset(b)).collect().toSeq)))),
     "StreamHeavyHitters.detect" -> restartLaw((ds: Dataset[StreamHeavyHitters.Ev]) =>
       StreamHeavyHitters.detect(ds, windowSec = 10, capacity = 4, thresholdInv = 3,
         watermarkDelaySec = 5), heavyHitters, 2),

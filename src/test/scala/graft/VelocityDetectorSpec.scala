@@ -1,9 +1,20 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import java.nio.file.{Files, Paths}
 
-import graft.streaming.VelocityDetector
-import graft.streaming.VelocityDetector.{Alert, Txn}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{Dataset, Encoder}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQueryException
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+
+import graft.streaming.{KeyedFold, VelocityDetector}
+import graft.streaming.VelocityDetector.{Alert, EvState, Txn, UserState}
+
+object VelocityDetectorSpec {
+  /** `detectEventTime`'s state before it was packed into bytes. */
+  case class ListEvState(buffer: List[Txn], core: UserState, lastSeen: Long)
+}
 
 class VelocityDetectorSpec extends SparkSpec {
   import spark.implicits._
@@ -151,5 +162,75 @@ class VelocityDetectorSpec extends SparkSpec {
       val got = spark.table("deviation_test").as[Alert].collect()
       assert(got.length === 1 && got.head.kind === "deviation")
     } finally q.stop()
+  }
+
+  test("event-time state holds no array or map column, so its decoder has no MapObjects") {
+    def nested(t: DataType): Seq[DataType] = t match {
+      case s: StructType => s.fields.toSeq.flatMap(f => f.dataType +: nested(f.dataType))
+      case other => Seq(other)
+    }
+    val types = nested(implicitly[Encoder[EvState]].schema)
+    assert(!types.exists(t => t.isInstanceOf[ArrayType] || t.isInstanceOf[MapType]), types)
+  }
+
+  test("event-time keyed state compiles at most one class per steady micro-batch") {
+    implicit val sc = spark.sqlContext
+    val mem = MemoryStream[Txn]
+    val q = VelocityDetector.detectEventTime(mem.toDS(), watermarkDelaySec = 30)
+      .writeStream.format("memory").queryName("ev_compiles").outputMode("append").start()
+    // every batch moves the watermark 60 s, so each also seals and wakes keys
+    def batch(i: Int): Unit = {
+      mem.addData((0 until 40).map(r => Txn(s"u${r % 8}", 10 + r % 5, 1000 + 60 * i + r)): _*)
+      q.processAllAvailable()
+    }
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val (warmBatch, warmCompiles) = try {
+      (0 until 3).foreach(batch) // the first batches compile the query's own classes
+      val warm = (q.lastProgress.batchId, compiles.getCount)
+      (3 until 9).foreach(batch)
+      warm
+    } finally q.stop()
+    val steady = q.recentProgress.count(p => p.batchId > warmBatch && p.numInputRows > 0)
+    val added = compiles.getCount - warmCompiles
+    assert(steady === 6)
+    // the one is Spark's late-row predicate, whose watermark literal
+    // changes with every batch; a List-based state's decoder recompiled in
+    // each batch, the no-data ones too (18 over these 6)
+    assert(added <= steady, s"$added compiles over $steady steady batches with input")
+  }
+
+  test("a checkpoint of the List-based event-time state fails the restart loudly, sink untouched") {
+    import VelocityDetectorSpec.ListEvState
+    implicit val sc = spark.sqlContext
+    val mem = MemoryStream[Txn]
+    val out = Files.createTempDirectory("ev_list_out").toString
+    val ck = Files.createTempDirectory("ev_list_ck").toString
+    def start(run: Dataset[Txn] => Dataset[Alert]) = run(mem.toDS()).writeStream
+      .format("parquet").option("path", out).option("checkpointLocation", ck).start()
+    def sink(): Seq[Alert] = spark.read.schema(implicitly[Encoder[Alert]].schema).parquet(out)
+      .as[Alert].collect().toSeq.sortBy(a => (a.userId, a.timestamp))
+    // the state type `detectEventTime` stored before: buffer every row
+    val old = start(ds => KeyedFold.eventTime[Txn, String, ListEvState, Alert](ds, _.userId,
+      "timestamp", 30) { (userId, st0, rows, _, _) =>
+      val st = st0.getOrElse(ListEvState(Nil, UserState(Nil, 0L, 0.0), Long.MinValue))
+      val seen = rows.toList
+      (Some((st.copy(buffer = st.buffer ++ seen), Long.MaxValue / 2)),
+        seen.iterator.map(t => Alert(userId, "seen", t.amount, t.timestamp, "")))
+    })
+    try {
+      mem.addData(Txn("u1", 10, 100), Txn("u2", 20, 110)); old.processAllAvailable()
+      mem.addData(Txn("u1", 11, 200)); old.processAllAvailable()
+    } finally old.stop()
+    val before = sink()
+    val commits = Files.list(Paths.get(ck, "commits")).count()
+    assert(before.size === 3)
+    mem.addData(Txn("u1", 12, 300))
+    val restarted = start(VelocityDetector.detectEventTime(_))
+    val e = intercept[StreamingQueryException] {
+      try restarted.processAllAvailable() finally restarted.stop()
+    }
+    assert(e.getMessage.contains("STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"), e.getMessage)
+    assert(sink() === before, "a refused restart must leave the sink as it was")
+    assert(Files.list(Paths.get(ck, "commits")).count() === commits)
   }
 }

@@ -6,6 +6,7 @@ Usage (from the repository root):
     python3 tools/jfr_perfbench.py --workload NAME [--seed N] [--seconds S]
                                    [--cores N] [--scale full|tiny] [--top K]
                                    [--window] [--frames a,b,...] [--alloc]
+                                   [--waits]
 
 Builds and launches the benchmark JVM exactly as perfbench/run.py does (its
 classpath() and jvm_flags()), with -XX:StartFlightRecording added, runs the
@@ -21,6 +22,11 @@ workload once untraced, and prints:
   - with --alloc, the measured window's allocation (jdk.ObjectAllocationSample
     weight, in MB): its total and per committed batch, by top frame, and,
     with --frames, by frame on the stack (inclusive, so shares overlap);
+  - with --waits, the measured window's time that task threads spent in
+    jdk.JavaMonitorWait and jdk.ThreadPark (events of 10 ms and longer), by
+    event and by the first Spark frame on the stack, so a lock that tasks
+    queue on (such as CodeGenerator's compile lock, KeyLock.acquireLock)
+    shows by name;
   - the GC pause total (jdk.GarbageCollection);
   - the run's latency p50/p99 as run.py computes them, for context.
 The recording is kept as .bench_build/perfbench/jfr/<workload>-seed<N>.jfr
@@ -114,6 +120,20 @@ def alloc_weight(samples, patterns):
     return sum(by_top.values()), by_top, by_pattern
 
 
+def task_waits(events):
+    """Milliseconds that task threads spent in the wait events, keyed by
+    "<event> <first Spark frame>", the frame that waited ("?" when no
+    Spark frame is on the stack, as on an idle executor-pool thread waiting
+    for its next task). Other threads' waits are left out."""
+    by = collections.Counter()
+    for e in events:
+        if thread_kind(e).startswith("Executor task launch worker"):
+            spark = next((f for f in frames(e) if f.startswith("org.apache.spark")
+                          and "$$Lambda" not in f), "?")
+            by[f"{e['type'].split('.')[-1]} {spark}"] += 1000 * seconds(e["values"].get("duration"))
+    return by
+
+
 def table(title, counter, total, top, fmt="{:7d}"):
     print(f"{title} ({fmt.format(total).strip()})")
     for key, n in counter.most_common(top):
@@ -134,6 +154,8 @@ def main():
                     help="comma-separated frame substrings to count inclusively")
     ap.add_argument("--alloc", action="store_true",
                     help="the measured window's allocation weight by frame")
+    ap.add_argument("--waits", action="store_true",
+                    help="the measured window's task-thread monitor waits and parks")
     a = ap.parse_args()
     patterns = [p for p in a.frames.split(",") if p]
 
@@ -192,6 +214,12 @@ def main():
         if patterns:
             table("allocated MB by frame on the stack, window", mb(by_pattern),
                   total / 2 ** 20, len(patterns), "{:9.1f}")
+
+    if a.waits:
+        waits = task_waits(in_window(jfr_events(jfr, "jdk.JavaMonitorWait,jdk.ThreadPark", 64),
+                                     raw["window_start_ms"], raw["stop_ms"]))
+        table("task-thread wait ms by event and first Spark frame, window", waits,
+              sum(waits.values()), a.top, "{:9.1f}")
 
     gcs = jfr_events(jfr, "jdk.GarbageCollection", 1)
     pause = sum(seconds(e["values"].get("sumOfPauses")) for e in gcs)

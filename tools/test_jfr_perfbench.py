@@ -65,5 +65,33 @@ class AllocTest(unittest.TestCase):
         self.assertEqual(by_pattern, {"JsonToStructs": 107, "Writer": 40, "Nowhere": 0})
 
 
+class WaitsTest(unittest.TestCase):
+    def test_task_waits_sum_task_threads_by_event_and_first_spark_frame(self):
+        lock = [("java/lang/Object", "wait"), ("org/apache/spark/util/KeyLock", "acquireLock"),
+                ("org/apache/spark/sql/catalyst/expressions/codegen/CodeGenerator$", "compile")]
+        park = [("jdk/internal/misc/Unsafe", "park"),
+                ("org/apache/spark/storage/ShuffleBlockFetcherIterator", "next")]
+
+        def wait(kind, duration, stack, thread="Executor task launch worker for task 3.0 in stage 7.0"):
+            ev = sample("1970-01-01T00:00:01Z", stack, thread)
+            ev["type"], ev["values"]["duration"] = kind, duration
+            ev["values"]["eventThread"] = ev["values"].pop("sampledThread")
+            return ev
+
+        events = [wait("jdk.JavaMonitorWait", "PT0.025S", lock),
+                  wait("jdk.JavaMonitorWait", "PT0.0105S", lock),
+                  wait("jdk.ThreadPark", "PT0.5S", park),
+                  wait("jdk.ThreadPark", "PT0.012S", [("java/lang/Thread", "sleep")]),
+                  wait("jdk.JavaMonitorWait", "PT3S", lock, thread="stream execution thread for q")]
+        waits = jp.task_waits(events)
+        self.assertEqual(set(waits), {"JavaMonitorWait org.apache.spark.util.KeyLock.acquireLock",
+                                      "ThreadPark org.apache.spark.storage.ShuffleBlockFetcherIterator.next",
+                                      "ThreadPark ?"})
+        self.assertAlmostEqual(waits["JavaMonitorWait org.apache.spark.util.KeyLock.acquireLock"], 35.5)
+        self.assertAlmostEqual(
+            waits["ThreadPark org.apache.spark.storage.ShuffleBlockFetcherIterator.next"], 500.0)
+        self.assertAlmostEqual(waits["ThreadPark ?"], 12.0)
+
+
 if __name__ == "__main__":
     unittest.main()
