@@ -89,12 +89,20 @@ object SparkEntry {
           if (dir.exists) rm(dir)
         }
         val (a, b) = graft.ops.ProfileOps.tableDiffSides(Tables.orders(s, d))
-        graft.sources.SourceSinks.writeBucketed(a, ta, "k")
-        graft.sources.SourceSinks.writeBucketed(b, tb, "k")
+        writeBucketed(a, ta, "k")
+        writeBucketed(b, tb, "k")
       }
     }
     (s.table(ta), s.table(tb))
   }
+
+  /** Bucketed + sorted managed table: one shuffle at write time, zero at
+    * every subsequent join/agg on `bucketCol`. */
+  private[graft] def writeBucketed(df: DataFrame, table: String, bucketCol: String,
+                                   buckets: Int = 8): Unit =
+    df.write.mode("overwrite")
+      .bucketBy(buckets, bucketCol).sortBy(bucketCol)
+      .format("parquet").saveAsTable(table)
 
   /** private[graft]: [[Catalog.registerOpViews]] roots its pair/cluster
     * views on these parquet snapshots too — registration stays cheap on

@@ -44,28 +44,6 @@ object FraudScorer {
       .fit(assembled)
   }
 
-  /** Held-out evaluation: train on ~80% of events, report AUC on the
-    * rest. The fold assignment is [[graft.ops.PipelineOps.md5Bucket]] —
-    * the SAME definition the corpus split uses, a pure function of
-    * event_id, never `rand()` — so retries, re-runs, and repartitioning
-    * produce the identical SPLIT. The metric is reproducible for a fixed
-    * partitioning; across different partition counts L-BFGS's gradient
-    * aggregation sums doubles in a different combine shape, so the last
-    * bits of the coefficients (and, for near-tied scores, the AUC) may
-    * shift — inherent to distributed double aggregation, not the split. */
-  def trainAndEvaluate(events: DataFrame): (LogisticRegressionModel, Double) = {
-    val bucket = graft.ops.PipelineOps.md5Bucket(col("event_id"))
-    val model = train(events.filter(bucket < graft.ops.PipelineOps.TrainCut))
-    val held = new VectorAssembler()
-      .setInputCols(FeatureCols.toArray).setOutputCol("features")
-      .transform(featurize(events.filter(bucket >= graft.ops.PipelineOps.TrainCut)))
-    val auc = new org.apache.spark.ml.evaluation.BinaryClassificationEvaluator()
-      .setLabelCol("label").setRawPredictionCol("rawPrediction")
-      .setMetricName("areaUnderROC")
-      .evaluate(model.transform(held))
-    (model, auc)
-  }
-
   /** Inference as a pure transform — usable on a batch DF or inside
     * `foreachBatch` on a stream. */
   def score(model: LogisticRegressionModel, events: DataFrame): DataFrame = {

@@ -15,19 +15,10 @@ case class MediaMeta(mime: String, width: Int, height: Int, durationMs: Long)
   * the heavy bytes for metadata-only queries). */
 case class MediaRecord(media_id: Long, kind: String, bytes: Array[Byte], meta: MediaMeta)
 
-/** Fixed-size feature vector extracted from a payload. */
-case class MediaFeatures(media_id: Long, kind: String, dim: Int, features: Array[Float])
-
-/** Decoded-image facts: true dimensions + an order-stable pixel checksum. */
-case class ImageStats(media_id: Long, width: Int, height: Int, pixel_checksum: Long)
-
 /** One fully-decoded record: features for every kind, decode facts for
   * images (None for the stubbed kinds / undecodable payloads). */
 case class MediaDecoded(media_id: Long, kind: String, features: Array[Float],
                         width: Option[Int], height: Option[Int], checksum: Option[Long])
-
-/** One sampled frame of a "video" payload: real PNG bytes of that frame. */
-case class MediaFrame(media_id: Long, frame_no: Int, frame_bytes: Array[Byte])
 
 /** Decoded-video facts: frame count + dimensions from the real per-frame
   * decode, and an ORDER-SENSITIVE fold of the per-frame pixel checksums
@@ -58,8 +49,7 @@ case class AudioStats(doc_id: Long, sample_rate: Long, n_samples: Long,
   *    touching the dataflow around it.
   *
   * Scale notes: decode runs per-partition with no shuffle; feature
-  * extraction is embarrassingly parallel; `frameSample` is a flatMap (1→N)
-  * that never materializes more than one record's frames in memory.
+  * extraction is embarrassingly parallel.
   */
 object MediaOps {
 
@@ -284,17 +274,6 @@ object MediaOps {
       }
   }
 
-  /** REAL image features: decode the PNG with ImageIO, bucket the raster
-    * into `dim` cells row-major, mean luminance per cell in [0, 1].
-    * Payloads ImageIO cannot decode yield the zero vector (the corpus
-    * contract is "image payloads are decodable"; the null-feature
-    * fallback keeps a corrupt record from killing a 100 TB job,
-    * mirroring the tolerant JSON parse of the streaming leg). */
-  private[multimodal] def imageFeatures(bytes: Array[Byte], dim: Int): Array[Float] = {
-    val img = javax.imageio.ImageIO.read(new ByteArrayInputStream(bytes))
-    if (img == null) new Array[Float](dim) else featuresOf(img, dim)
-  }
-
   /** REAL audio features: decode the PCM via the JDK WAVE reader, bucket
     * the unsigned 16-bit samples into `dim` cells by sample index, mean
     * amplitude per cell in [0, 1]. Zero vector if undecodable. */
@@ -365,42 +344,6 @@ object MediaOps {
     out
   }
 
-  /** Feature extraction: per-partition batch over the payload column.
-    * `mapPartitions` (not per-row UDF) so decoder/model init amortizes once
-    * per partition — the Spark idiom for expensive per-record libraries.
-    * All three kinds decode for real (pure JDK codecs). */
-  def decodeFeatures(media: Dataset[MediaRecord], dim: Int = 16): Dataset[MediaFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { it =>
-      // (real impl: init heavier codecs once here; the JDK ones are static)
-      it.map { m =>
-        val f = m.kind match {
-          case "image" => imageFeatures(m.bytes, dim)
-          case "audio" => audioFeatures(m.bytes, dim)
-          case "video" => decodeVideo(m.bytes)
-            .map(videoFeaturesOf(_, dim)).getOrElse(new Array[Float](dim))
-          case _ => new Array[Float](dim)
-        }
-        MediaFeatures(m.media_id, m.kind, dim, f)
-      }
-    }
-  }
-
-  /** Decoded-image facts via the REAL decoder: true raster dimensions and
-    * an order-stable pixel checksum per image. */
-  def imageStats(media: Dataset[MediaRecord]): Dataset[ImageStats] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.filter(_.kind == "image").mapPartitions { it =>
-      it.flatMap { m =>
-        val img = javax.imageio.ImageIO.read(new ByteArrayInputStream(m.bytes))
-        if (img == null) None
-        else Some(ImageStats(m.media_id, img.getWidth, img.getHeight, pixelChecksum(img)))
-      }
-    }
-  }
-
   /** Decoded-audio facts via the REAL decoder: `javax.sound.sampled` (the
     * JDK's built-in WAVE reader) parses the RIFF header into an
     * `AudioFormat` and streams the PCM frames; the checksum folds the
@@ -438,11 +381,9 @@ object MediaOps {
     * the Spark side decodes actual RIFF bytes with the JDK's WAVE reader,
     * while the oracle recomputes every column WITHOUT a decoder from the
     * (doc_id, n_chars)-pure sample function — a hash match proves the
-    * encode → header parse → PCM decode → checksum path is the identity. */
-  def audioFeatureStats(spark: SparkSession, docs: DataFrame): DataFrame =
-    audioStats(fromDocumentsOf(docs, Some("audio"))).toDF().orderBy("doc_id")
-
-  /** [[audioFeatureStats]] over an ALREADY-synthesized media table (the
+    * encode → header parse → PCM decode → checksum path is the identity.
+    *
+    * It reads an ALREADY-synthesized media table (the
     * parquet corpus snapshot `SparkEntry.mediaShared` materializes): the
     * modality filter runs as an untyped `kind = 'audio'` predicate BEFORE
     * the typed decode, so it reaches the parquet scan — the payload bytes
@@ -456,34 +397,12 @@ object MediaOps {
       .toDF().orderBy("doc_id")
   }
 
-  /** Frame sampling: split each "video" payload on its REAL frame
-    * boundaries and emit every `stride`-th frame's PNG bytes — 1→N
-    * flatMap, no shuffle, no decode (the container's length prefixes
-    * locate frames without rasterizing them — keyframe extraction's
-    * cheap path). Malformed containers yield no frames. */
-  def frameSample(media: Dataset[MediaRecord], stride: Int = 1): Dataset[MediaFrame] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.filter(_.kind == "video").flatMap { m =>
-      try {
-        val in = new java.io.DataInputStream(new ByteArrayInputStream(m.bytes))
-        val nf = in.readInt()
-        (0 until nf).flatMap { f =>
-          val len = in.readInt()
-          val buf = new Array[Byte](len)
-          in.readFully(buf)
-          if (f % stride == 0) Some(MediaFrame(m.media_id, f, buf)) else None
-        }
-      } catch { case _: Exception => Seq.empty }
-    }
-  }
-
   /** Nearest-neighbor sample of a decoded raster onto a `side`×`side`
     * grid, row-major — source pixel (tx·W DIV side, ty·H DIV side), the
     * classic integer NN map (exactly reproducible by the decoder-free
     * oracle; dimensions smaller than the grid duplicate rows/columns,
-    * which IS nearest-neighbor upsampling). Shared by [[resize]] and
-    * [[thumbnailCensus]]. */
+    * which IS nearest-neighbor upsampling). Shared by [[thumbnailCensus]]
+    * and the perceptual hashes. */
   private[graft] def nnSample(img: BufferedImage, w: Int, h: Int): Array[Long] = {
     val out = new Array[Long](w * h)
     var t = 0
@@ -494,41 +413,6 @@ object MediaOps {
       t += 1
     }
     out
-  }
-
-  /** REAL raster resize: decode the PNG, nearest-neighbor sample onto
-    * the scaled grid, RE-ENCODE through the same pure-JDK PNG writer —
-    * payload and typed metadata stay consistent, unlike the
-    * metadata-only stub this replaced. Non-image kinds and images
-    * already within `maxSide` pass through untouched (no decode paid);
-    * undecodable payloads pass through unchanged (a corrupt record must
-    * not kill the job — the q50 tolerance contract). */
-  def resize(media: Dataset[MediaRecord], maxSide: Int): Dataset[MediaRecord] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.map { m =>
-      val s = math.max(m.meta.width, m.meta.height)
-      if (m.kind != "image" || s <= maxSide) m
-      else {
-        val img = javax.imageio.ImageIO.read(new ByteArrayInputStream(m.bytes))
-        if (img == null) m
-        else {
-          val nw = math.max(1, img.getWidth * maxSide / s)
-          val nh = math.max(1, img.getHeight * maxSide / s)
-          val px = nnSample(img, nw, nh)
-          val out = new BufferedImage(nw, nh, BufferedImage.TYPE_INT_RGB)
-          var t = 0
-          while (t < px.length) {
-            out.setRGB(t % nw, t / nw, px(t).toInt)
-            t += 1
-          }
-          val bos = new ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(out, "png", bos)
-          MediaRecord(m.media_id, m.kind, bos.toByteArray,
-            m.meta.copy(width = nw, height = nh))
-        }
-      }
-    }
   }
 
   /** q207's thumbnail grid side. */
@@ -1024,10 +908,7 @@ object MediaOps {
     }
   }
 
-  def videoFeatureStats(spark: SparkSession, docs: DataFrame): DataFrame =
-    videoStats(fromDocumentsOf(docs, Some("video"))).toDF().orderBy("doc_id")
-
-  /** [[videoFeatureStats]] over an already-synthesized media table (see
+  /** [[videoStats]] over an already-synthesized media table (see
     * [[audioFeatureStatsOf]]) — `kind = 'video'` pushed to the parquet
     * scan; the per-frame ImageIO decode stays the measured cost. */
   def videoFeatureStatsOf(media: DataFrame): DataFrame = {
@@ -1050,11 +931,9 @@ object MediaOps {
     * raster is a pure integer function of (doc_id, x, y), so the oracle
     * recomputes width/height/checksum WITHOUT a PNG decoder ([[oracles]]) —
     * a hash match proves the encode → ImageIO decode → checksum path is the
-    * identity on that function (PNG losslessness included). */
-  def mediaFeatureStats(spark: SparkSession, docs: DataFrame): DataFrame =
-    statsOfDecoded(decodeAll(fromDocuments(docs)))
-
-  /** [[mediaFeatureStats]] over an already-synthesized media table (see
+    * identity on that function (PNG losslessness included).
+    *
+    * It reads an already-synthesized media table (see
     * [[audioFeatureStatsOf]]): all three modalities are consumed, so no
     * kind predicate — the snapshot read replaces the per-query payload
     * synthesis; the single-decode combined pass stays the measured cost. */
@@ -1074,7 +953,7 @@ object MediaOps {
         expr("bit_xor(checksum)").as("pixel_checksum_xor"))
       .orderBy("kind")
 
-  /** DuckDB oracle for [[mediaFeatureStats]] — computed, not literal.
+  /** DuckDB oracle for [[mediaFeatureStatsOf]] — computed, not literal.
     *
     * [[pngBytes]] fills pixel (x, y) with
     * `rgb = ((seed*6364136223846793005 + (x*31 + y*131 + 17)*2654435761) >>> 16) & 0xFFFFFF`

@@ -209,21 +209,6 @@ object BpeOps {
       .orderBy("merge_rank")
   }
 
-  /** q79 — APPLY the learned merges: tokenize every document with the q77
-    * vocabulary and report per-doc BPE token counts — the token counting a
-    * packing budget (q73) actually needs (whitespace counts overestimate
-    * subword corpora; a real pipeline packs by tokenizer tokens).
-    *
-    * Shape: learning runs once (bounded, q77's loop); application is ONE
-    * row-local projection — each word is wrapped, the `numMerges` learned
-    * replaces fold over it IN RANK ORDER inside a `transform` lambda
-    * (never across word boundaries — a cross-word "(a)(b)" join of two
-    * adjacent words must not merge), and the token count is the '('
-    * count of the result. No shuffle, no UDF: nested codegen'd string
-    * primitives, fused into the scan at any corpus size. */
-  def bpeTokenCounts(docs: DataFrame, numMerges: Int = NumMerges): DataFrame =
-    applyMerges(docs, learnMerges(docs, numMerges))
-
   /** The application half, against an already-learned merge list (the
     * pipeline artifact a corpus build persists next to the vocab).
     * `extra` names document columns carried through unchanged (q96's

@@ -694,34 +694,14 @@ object DedupOps {
     * per doc selects the fingerprints ROW-LOCALLY, so neither the
     * character-position explode nor the selections ever shuffle (the
     * windowed form paid a corpus-sized window sort + a global distinct;
-    * the windowed twin + checkpoint measured 5.1 s, this form 3.0 s at sf0.1). One definition feeds [[winnowPairs]]
-    * and the tests; [[winnowFingerprintsWindowed]] is the composed twin
-    * the spec proves bit-equal (and the shape the DuckDB oracle runs). */
+    * the windowed twin + checkpoint measured 5.1 s, this form 3.0 s at
+    * sf0.1). One definition feeds [[winnowPairs]] and the tests;
+    * `DedupOpsSpec`'s windowed `MIN(struct(h, -p))` form is the composed
+    * twin it proves bit-equal (and the shape the DuckDB oracle runs). */
   def winnowFingerprints(docs: DataFrame): DataFrame = {
     graft.expressions.GraftFunctions.register(docs.sparkSession)
     docs.selectExpr("doc_id",
       s"explode(graft_winnow(text, $WinnowK, $WinnowW)) AS h")
-  }
-
-  /** Composed-operator twin of [[winnowFingerprints]] — windowed
-    * `MIN(struct(h, -p))` with the rightmost tie-break, exactly the oracle's
-    * formulation. Kept as the spec cross-check (the q124 trisum precedent);
-    * not the shipped path. */
-  private[graft] def winnowFingerprintsWindowed(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val hashed = docs.where(s"length(text) >= $WinnowK")
-      .selectExpr("doc_id", "text",
-        s"explode(sequence(1, length(text) - ${WinnowK - 1})) AS p")
-      .selectExpr("doc_id", "p",
-        s"CAST(conv(substring(md5(substring(text, p, $WinnowK)), 1, 15), 16, 10) AS BIGINT) AS h")
-    val win = Window.partitionBy("doc_id").orderBy("p")
-      .rowsBetween(-(WinnowW - 1), 0)
-    hashed
-      .withColumn("s", min(struct(col("h"), (-col("p")).as("np"))).over(win))
-      .where(col("p") >= WinnowW) // full windows only — partial prefixes
-                                  // would break cross-length determinism
-      .select(col("doc_id"), col("s.h").as("h"))
-      .distinct()
   }
 
   def winnowPairs(docs: DataFrame): DataFrame = {
@@ -928,14 +908,10 @@ object DedupOps {
     checked.reduce(_.unionByName(_)).orderBy("name_a", "name_b")
   }
 
-  /** q177's pair stage pre-checkpoint (the topkStored pattern) for the
-    * plan guard. */
-  private[graft] def editLinkageD2PairsCandidates(customer: DataFrame): DataFrame =
-    editLinkageD2Branches(customer).reduce(_.unionByName(_))
-
   /** The six structurally-disjoint candidate branches, each tagged with
     * its certified distance — built once, checkpointed concurrently by
-    * [[editLinkageD2Pairs]], unioned lazily by the plan guard. */
+    * [[editLinkageD2Pairs]], unioned lazily by `PlanShapeSpec`'s plan
+    * guard. */
   private[graft] def editLinkageD2Branches(customer: DataFrame): Seq[DataFrame] = {
     graft.expressions.GraftFunctions.register(customer.sparkSession)
     val names = customer.selectExpr("c_name AS name")

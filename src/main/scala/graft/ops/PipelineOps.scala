@@ -18,8 +18,8 @@ object PipelineOps {
 
   /** First md5 byte of a stable key, as 0–255 — THE deterministic bucket
     * primitive, shared by [[splitAssign]] and the ML train/test fold
-    * (`FraudScorer.trainAndEvaluate`) so the split recipe has exactly one
-    * definition. */
+    * (`FraudScorerSpec`'s held-out split) so the split recipe has exactly
+    * one definition. */
   def md5Bucket(key: Column): Column =
     conv(substring(md5(key.cast("string")), 1, 2), 16, 10).cast("long")
 
@@ -74,13 +74,13 @@ object PipelineOps {
     *
     * Scale shape: shard assignment is row-local; the manifest is ONE
     * map-combinable aggregate with `nShards` output rows. The actual
-    * write is `SourceSinks`' partitioned writer keyed on this column —
-    * this query is its bookkeeping twin. */
+    * write is a parquet write partitioned by this column — this query is
+    * its bookkeeping twin. */
   /** The per-doc shard assignment BOTH consumers key on — the
-    * [[shardManifest]] aggregate and `SourceSinks`' partitioned writer
-    * (one rule, so the files on disk and the manifest rows cannot
-    * disagree; `SourceSinksSpec` round-trips the written shards against
-    * the manifest file-by-file). */
+    * [[shardManifest]] aggregate and the partitioned shard write (one
+    * rule, so the files on disk and the manifest rows cannot disagree;
+    * `SourceSinksSpec` round-trips the written shards against the
+    * manifest file-by-file). */
   def shardAssign(docs: DataFrame, nShards: Int = 16): DataFrame =
     docs.select(col("doc_id"), col("n_chars"),
       expr("CAST(size(split(text, ' ')) AS BIGINT)").as("n_tokens"),
@@ -105,7 +105,7 @@ object PipelineOps {
     * its q100 shard. The loader reads shards by shard_seq, each shard in
     * pos order; BOTH levels reshuffle every epoch while shard MEMBERSHIP
     * (hence the files on disk) stays fixed (the [[shardAssign]] rule —
-    * one shard definition, so the order ledger and `SourceSinks`' written
+    * one shard definition, so the order ledger and the written shard
     * files can never disagree). `rand()`-seeded shuffles lose exactly
     * this replay property under speculative re-execution; the md5 draws
     * are pure functions of their keys.
@@ -284,8 +284,8 @@ object PipelineOps {
     * both engines (DECIMAL(38,0) / HUGEINT — no overflow at any corpus
     * size) and `u` is a pure function of doc_id, so the kept set is
     * replay/engine-independent. Kept counts are binomial around keep_n;
-    * exact-count callers use [[stratifiedSampleExact]], the rank twin
-    * (`PipelineOpsSpec` bounds the deviation between the two). */
+    * `PipelineOpsSpec` bounds the deviation against an exact-count rank
+    * twin. */
   /** q58's graded per-stratum sampling fraction, shared with the oracle
     * (one dial definition, the StreamQualityGate lesson). */
   val StratifiedFrac = 0.2
@@ -301,23 +301,6 @@ object PipelineOps {
       .filter(col("u") < col("cut"))
       .select("lang", "doc_id", "u", "keep_n")
       .orderBy("lang", "doc_id")
-  }
-
-  /** The exact-count rank twin of [[stratifiedSample]] (the
-    * [[mixtureSampleExact]] precedent): per-stratum md5-rank keeps
-    * EXACTLY ceil(frac·n) docs, at the cost of one sort task per stratum
-    * — correct when strata are bounded, and the cross-check
-    * `PipelineOpsSpec` uses to bound the threshold form's deviation. */
-  def stratifiedSampleExact(docs: DataFrame, frac: Double = StratifiedFrac): DataFrame = {
-    val w = Window.partitionBy("lang")
-      .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
-    val counts = docs.groupBy("lang").agg(count(lit(1)).as("n"))
-    docs.select(col("doc_id"), col("lang"))
-      .withColumn("r", row_number().over(w).cast("long"))
-      .join(broadcast(counts), "lang")
-      .filter(col("r") <= ceil(col("n").cast("double") * lit(frac)))
-      .select("lang", "doc_id", "r")
-      .orderBy("lang", "r")
   }
 
   /** DuckDB equivalents — same md5 constructions, same regexes (RE2 and
@@ -374,12 +357,13 @@ object PipelineOps {
         "w_micro / CAST(SUM(w_micro) OVER () AS DOUBLE) AS p")
       .orderBy("lang", "source")
 
-  /** The per-stratum keep budget shared by [[mixtureSample]] and
-    * [[mixtureSampleExact]]: stratum s keeps ceil(min(1, p_s·target/n_s)
+  /** The per-stratum keep budget shared by [[mixtureSample]],
+    * [[mixtureRealization]] and `PipelineOpsSpec`'s exact-count rank
+    * twin: stratum s keeps ceil(min(1, p_s·target/n_s)
     * · n_s) docs. `keep_n` never exceeds n_s (rate capped at 1): an
     * under-represented stratum cannot be upsampled here — the cap is
     * reported so a caller can route those strata to a repetition pass. */
-  private def keepBudget(docs: DataFrame, target: Long): DataFrame =
+  private[graft] def keepBudget(docs: DataFrame, target: Long): DataFrame =
     mixtureWeights(docs).selectExpr("lang", "source", "n",
       s"CAST(CEIL(least(1e0, p * CAST($target AS DOUBLE) / CAST(n AS DOUBLE)) * CAST(n AS DOUBLE)) AS BIGINT) AS keep_n")
 
@@ -396,8 +380,8 @@ object PipelineOps {
     * in DECIMAL(38,0) (≤ 2¹¹¹ < 10³⁸, no overflow at any corpus size),
     * floor-divided by n — and `u` is a pure function of doc_id, so the
     * kept set is replay/engine-independent like q57/q58. Kept counts are
-    * binomial around keep_n (exact-count callers use
-    * [[mixtureSampleExact]], the rank twin, where strata are bounded). */
+    * binomial around keep_n (`PipelineOpsSpec` bounds the deviation
+    * against an exact-count rank twin). */
   /** q76's graded target corpus size (docs), shared with the oracle. */
   val MixtureTarget = 200L
 
@@ -410,22 +394,6 @@ object PipelineOps {
       .filter(col("u") < col("cut"))
       .select("lang", "source", "doc_id", "u", "keep_n")
       .orderBy("lang", "source", "doc_id")
-  }
-
-  /** The exact-count rank twin of [[mixtureSample]]: per-stratum md5-rank
-    * keeps EXACTLY keep_n docs, at the cost of one sort task per stratum —
-    * correct when strata are bounded (or salted), and the cross-check
-    * `PipelineOpsSpec` uses to bound the hash-threshold form's deviation. */
-  def mixtureSampleExact(docs: DataFrame, target: Long = MixtureTarget): DataFrame = {
-    val w = keepBudget(docs, target)
-    val ranked = docs.select(col("doc_id"), col("lang"), col("source"))
-      .withColumn("r", row_number().over(
-        Window.partitionBy("lang", "source")
-          .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))).cast("long"))
-    ranked.join(broadcast(w.select("lang", "source", "keep_n")), Seq("lang", "source"))
-      .filter(col("r") <= col("keep_n"))
-      .select("lang", "source", "doc_id", "r", "keep_n")
-      .orderBy("lang", "source", "r")
   }
 
   /** q129 — MIXTURE REALIZATION AUDIT: did the q76 hash-threshold sample

@@ -80,17 +80,11 @@ object QualityModelOps {
     // — a pure function of the bucket's counts, and the guard evaluates
     // its 4-ln expression three times — used to be computed PER
     // OCCURRENCE; now it is pre-tabulated once per bucket on the full
-    // 0..255 range (exactly [[bucketWeightsMicro]]'s artifact recipe,
-    // already spec-proven bit-equal to the per-occurrence rounding) and
-    // occurrences just gather the bounded table's micro value.
-    val w = s"(ln(COALESCE(cpos, 0) + 1) - ln(tpos + $NumBuckets)" +
-      s" - ln(COALESCE(cneg, 0) + 1) + ln(tneg + $NumBuckets)) * 1e6"
-    val weights = docs.sparkSession.range(NumBuckets).toDF("fb")
-      .join(m.counts, Seq("fb"), "left_outer")
-      .crossJoin(broadcast(m.totals))
-      .selectExpr("fb", s"${microGuard(w, "q101 weight")} AS micro")
+    // 0..255 range ([[ModelTables]]' `weights`, spec-proven bit-equal to
+    // the per-occurrence rounding) and occurrences just gather the
+    // bounded table's micro value.
     val scored = toks
-      .join(broadcast(weights), Seq("fb"))
+      .join(broadcast(m.weights), Seq("fb"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_feats"), sum("micro").as("fm"))
     docs.select("doc_id")
@@ -104,40 +98,15 @@ object QualityModelOps {
       .orderBy("doc_id")
   }
 
-  /** The trained model as a BOUNDED ARTIFACT: the full 0..255 bucket →
-    * guarded micro-unit weight array plus the bias — what a real pipeline
-    * persists next to its corpus so ingest-time consumers
-    * ([[graft.streaming.StreamQualityScore]]) can score arriving docs
-    * without touching the corpus (the k-means-centroids / BPE-merges
-    * pattern). The per-bucket weight is evaluated by the SAME guarded
-    * expression [[qualityClassifier]] applies per occurrence — a pure
-    * function of the bucket's counts, so pre-tabulating it is exactly
-    * the per-occurrence rounding (parity spec-proven bit-equal). The
-    * collect is ≤ [[NumBuckets]]+1 rows by construction. */
-  def bucketWeightsMicro(docs: DataFrame,
-                         weakLabels: Option[DataFrame] = None): (Array[Long], Long) = {
-    val spark = docs.sparkSession
-    // single consumer of the feature rows here — no checkpoint needed
-    val m = modelTables(docs, weakLabels, featureRows(docs))
-    val wExpr = s"(ln(COALESCE(cpos, 0) + 1) - ln(tpos + $NumBuckets)" +
-      s" - ln(COALESCE(cneg, 0) + 1) + ln(tneg + $NumBuckets)) * 1e6"
-    val w = spark.range(NumBuckets).toDF("fb")
-      .join(m.counts, Seq("fb"), "left_outer")
-      .crossJoin(broadcast(m.totals))
-      .selectExpr("fb", s"${microGuard(wExpr, "q101 weight")} AS micro")
-      .orderBy("fb")
-      .collect().map(_.getLong(1))
-    val bias = m.bias.collect().head.getLong(0)
-    (w, bias)
-  }
-
-  /** The three bounded model tables (per-bucket counts, totals, bias),
-    * shared by [[qualityClassifier]] and [[bucketWeightsMicro]] so the
-    * corpus path and the persisted artifact cannot drift. */
-  private final case class ModelTables(counts: DataFrame, totals: DataFrame,
-                                       bias: DataFrame)
-  private def modelTables(docs: DataFrame, weakLabels: Option[DataFrame],
-                          feats: DataFrame): ModelTables = {
+  /** The bounded model tables: the full 0..255 bucket → guarded micro-unit
+    * weight table and the bias. [[qualityClassifier]] scores with them;
+    * collected, they are the artifact ingest-time consumers
+    * ([[graft.streaming.StreamQualityScore]]) score arriving docs against
+    * (`StreamQualityScoreSpec` builds it), so the corpus path and the
+    * persisted artifact cannot drift. */
+  private[graft] final case class ModelTables(weights: DataFrame, bias: DataFrame)
+  private[graft] def modelTables(docs: DataFrame, weakLabels: Option[DataFrame],
+                                 feats: DataFrame): ModelTables = {
     val labels = weakLabels.getOrElse(
       TextOps.trainingFilter(docs).select(col("doc_id"), col("keep")))
     val trainIds = docs
@@ -153,17 +122,23 @@ object QualityModelOps {
     val totals = counts.agg(
       coalesce(sum("cpos"), lit(0L)).as("tpos"),
       coalesce(sum("cneg"), lit(0L)).as("tneg"))
+    val w = s"(ln(COALESCE(cpos, 0) + 1) - ln(tpos + $NumBuckets)" +
+      s" - ln(COALESCE(cneg, 0) + 1) + ln(tneg + $NumBuckets)) * 1e6"
+    val weights = docs.sparkSession.range(NumBuckets).toDF("fb")
+      .join(counts, Seq("fb"), "left_outer")
+      .crossJoin(broadcast(totals))
+      .selectExpr("fb", s"${microGuard(w, "q101 weight")} AS micro")
     val bias = trainIds.join(labels, "doc_id").agg(
         coalesce(sum(when(col("keep"), 1L).otherwise(0L)), lit(0L)).as("npos"),
         coalesce(sum(when(col("keep"), 0L).otherwise(1L)), lit(0L)).as("nneg"))
       .selectExpr(s"${microGuard("(ln(npos + 1) - ln(nneg + 1)) * 1e6", "q101 bias")} AS bias_micro")
-    ModelTables(counts, totals, bias)
+    ModelTables(weights, bias)
   }
 
   /** The hashed feature rows (doc_id, fb) — the three families via the
     * union of explodes (one simple codegen'd Generate per family; the
     * fused concat-array form measured slower). */
-  private def featureRows(docs: DataFrame): DataFrame = {
+  private[graft] def featureRows(docs: DataFrame): DataFrame = {
     val base = docs.selectExpr("doc_id", "lang", "split(text, ' ') AS ts")
     val uni = base.selectExpr("doc_id", "explode(ts) AS f")
     val li = base.selectExpr("doc_id",

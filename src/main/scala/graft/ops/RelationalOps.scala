@@ -127,19 +127,9 @@ object RelationalOps {
         count(lit(1)).as("n_events"))
       .orderBy("event_type")
 
-  /** Approximate distinct (HLL++) — the sketch path for cardinalities at
-    * 100 TB where exact distinct would shuffle every key. Deterministic for
-    * a fixed input but NOT DuckDB-comparable; q21 grades the sketch through
-    * [[approxDistinctChecked]] instead. Accuracy bound: default relative
-    * standard deviation 0.05; `RelationalOpsSpec` asserts every estimate
-    * lands within 3×rsd of [[distinctUsersPerType]]'s exact count. */
-  def approxDistinctUsers(events: DataFrame): DataFrame =
-    events
-      .groupBy("event_type")
-      .agg(approx_count_distinct(col("user_id")).as("n_users_approx"))
-      .orderBy("event_type")
-
-  /** q21 — [[approxDistinctUsers]] in ORACLE-GRADABLE form (the q50
+  /** q21 — approximate distinct users per event type (HLL++, the sketch
+    * path for cardinalities at 100 TB where exact distinct would shuffle
+    * every key) in ORACLE-GRADABLE form (the q50
     * computed-vs-oracle pattern). The HLL++ estimate itself is not
     * DuckDB-reproducible, so the query emits what DuckDB CAN recompute —
     * the exact distinct count — plus `hll_ok`, asserting the sketch landed
@@ -219,7 +209,7 @@ object RelationalOps {
     * pos = (n-1)*p; pct = (c_floor(pos) + (pos - floor(pos)) *
     * (c_ceil(pos) - c_floor(pos))) / 100.
     * Plan: one window sort per group (inherent to exact percentiles — the
-    * approx path for 100 TB is [[approxPercentiles]]), counts broadcast,
+    * approx path for 100 TB is q53's sketch), counts broadcast,
     * one final hash agg. Ties in `c` need no tie-break: row_number among
     * equal cents picks equal values either way. */
   def valuePercentiles(events: DataFrame, ps: Seq[(String, Double)] =
@@ -250,24 +240,9 @@ object RelationalOps {
     agg.select(outCols: _*).orderBy("event_type")
   }
 
-  /** Approximate percentiles (GK/KLL-style sketch): the single-pass,
-    * no-global-sort path for 100 TB quantiles. Deterministic for a fixed
-    * input but not DuckDB-expressible; q53 grades the sketch through
-    * [[approxPercentilesChecked]] instead. Exact-value accuracy is
-    * asserted against [[valuePercentiles]] in `RelationalOpsSpec`
-    * (approx_percentile with accuracy 10000 is exact-rank within 1/10000
-    * of the input size). */
-  def approxPercentiles(events: DataFrame): DataFrame =
-    events
-      .groupBy("event_type")
-      .agg(
-        expr("approx_percentile(value, 0.5, 10000)").as("p50_approx"),
-        expr("approx_percentile(value, 0.95, 10000)").as("p95_approx"),
-        expr("approx_percentile(value, 0.99, 10000)").as("p99_approx"))
-      .orderBy("event_type")
-
-  /** q53 — [[approxPercentiles]] in ORACLE-GRADABLE form (the q50
-    * computed-vs-oracle pattern). The sketch values are not
+  /** q53 — approximate percentiles (`approx_percentile`, the single-pass,
+    * no-global-sort path for 100 TB quantiles) in ORACLE-GRADABLE form
+    * (the q50 computed-vs-oracle pattern). The sketch values are not
     * DuckDB-reproducible, so the query emits the non-null count — which
     * DuckDB CAN recompute — plus one rank-containment boolean per
     * percentile (see [[percentileRankCheck]]). A sketch that drifts outside

@@ -1,20 +1,17 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Skew-handling idioms for 100 TB runs, packaged as reusable transforms.
+/** Skew and storage-layout audits for 100 TB runs: the key-skew report
+  * that says where a shuffle needs salting, encoding and resharding
+  * audits, and the zone-map, Z-order, Hilbert and compaction layouts a
+  * lake picks before it writes.
   *
-  * At test scale these produce byte-identical results to their naive
-  * counterparts (asserted in `ScaleOpsSpec`); at cluster scale they are the
-  * difference between a straggler-free job and one task pinning an executor
-  * for hours on a hot key (the events table's analog: one user producing a
-  * large fraction of all transactions).
-  *
-  * AQE's skew-join split (`spark.sql.adaptive.skewJoin`) handles many of
-  * these cases automatically at runtime; these explicit forms are for the
-  * planned-ahead cases AQE can't see (aggregation skew, and joins whose
-  * skew is known from data profiling).
+  * AQE's skew-join split (`spark.sql.adaptive.skewJoin`) handles many
+  * skew cases automatically at runtime; these audits cover the
+  * planned-ahead cases AQE can't see (aggregation skew, and layouts whose
+  * payoff is known from data profiling).
   */
 object ScaleOps {
 
@@ -113,48 +110,13 @@ object ScaleOps {
       .orderBy("day", "col")
   }
 
-  /** Two-phase salted aggregation: partial-aggregate on (key, salt) to
-    * spread one hot key over `salts` reducers, then final-aggregate on key.
-    * The salt is derived from a unique column (deterministic, testable —
-    * never `rand()`, which breaks retry idempotency: a re-run task would
-    * re-salt rows differently and double-count under speculative execution).
-    *
-    * Determinism contract: results are byte-identical to the naive
-    * single-phase aggregate only when `sumCol` is an EXACT type (long /
-    * integer cents per [[Exact]]) — double addition is non-associative, so
-    * for raw doubles the two-phase sum may differ in the last ulp. Pass
-    * `Exact.units(col, 2)` (or any integral column), divide at the end. */
-  def saltedSumCount(df: DataFrame, key: String, uniqueCol: String,
-                     sumCol: Column, salts: Int = 16): DataFrame =
-    df.withColumn("__salt", pmod(hash(col(uniqueCol)), lit(salts)))
-      .groupBy(col(key), col("__salt"))
-      .agg(sum(sumCol).as("__psum"), count(lit(1)).as("__pcnt"))
-      .groupBy(col(key))
-      .agg(sum("__psum").as("sum"), sum("__pcnt").as("n"))
-
-  /** Skew-safe equi-join: salt the (big, skewed) probe side, replicate the
-    * small build side across all `salts` copies, join on (key, salt). The
-    * big side's hot key now lands on `salts` different reducers. Result is
-    * row-identical to `big.join(small, key)` (inner). */
-  def saltedJoin(big: DataFrame, small: DataFrame, key: String, uniqueCol: String,
-                 salts: Int = 16): DataFrame = {
-    // salt from a per-row unique column — hash(key) would map a hot key to
-    // ONE salt (no spreading), and rand() breaks retry idempotency
-    val saltedBig = big.withColumn("__salt", pmod(hash(col(uniqueCol)), lit(salts)))
-    val replicatedSmall = small
-      .withColumn("__salt", explode(sequence(lit(0), lit(salts - 1))))
-    saltedBig.join(replicatedSmall,
-        saltedBig(key) === replicatedSmall(key) && saltedBig("__salt") === replicatedSmall("__salt"))
-      .drop(replicatedSmall(key)).drop("__salt")
-  }
-
   /** q153 — JOIN-KEY SKEW AUDIT: for each (table, key) a join or
     * aggregation will hash on, the distribution evidence that decides
     * the physical plan — row/key counts, the hottest key's share, the
     * share of rows held by the top 1% of keys, and the coefficient of
     * variation of per-key counts. A max_share near 1 says one reducer
-    * gets the table (salt it — [[saltedSumCount]]/[[saltedJoin]] are
-    * the remedies this report triggers); a CV near 0 says hash
+    * gets the table (salt it: spread the hot key over (key, salt)
+    * reducers); a CV near 0 says hash
     * partitioning balances for free. This is the artifact a 100 TB
     * engine reads BEFORE picking shuffle keys, made a first-class
     * graded query.

@@ -57,40 +57,13 @@ object SimilarityOps {
   private def sparkDot(a: String, b: String): String =
     s"graft_dot($a, $b)"
 
-  /** Plane-sign band key for band `b`: the sign bits of `planesPerBand`
-    * integer plane dots, offset by band*2^planesPerBand so keys from
-    * different bands can never collide in a plain equi-join.
-    *
-    * Determinism is STRUCTURAL here, not IEEE-argued: the vector is
-    * quantized to exact 1e-6 integers (`vq`, same construction the q44
-    * centroids use) and the hyperplanes are integers, so the dot is exact
-    * int64 arithmetic — associative, order-independent, bit-identical in
-    * any engine. A float dot's sign could flip near zero under reordering;
-    * an integer dot's cannot.
-    *
-    * This composed form is the SEMANTIC SPEC (and `DotProductSpec`'s
-    * cross-check twin) of the native [[graft.expressions.HyperplaneBands]]
-    * expression [[bandRows]] actually runs — 32 CASE'd dots against
-    * dim-length literal arrays cost real analysis/codegen time per query
-    * and one array walk per plane per row. */
-  private[graft] def sparkBandKey(vq: String, band: Int, planesPerBand: Int): String = {
-    val bits = (0 until planesPerBand).map { p =>
-      val g = band * planesPerBand + p
-      val wq = (0 until Dim).map(d => s"${plane(g, d)}L").mkString("array(", ", ", ")")
-      // graft_dotl: the codegen'd integer twin of graft_dot — the HOF fold
-      // interprets a lambda per element, 32 of these per vector add up
-      s"(CASE WHEN graft_dotl($vq, $wq) > 0L THEN ${1L << p}L ELSE 0L END)"
-    }
-    bits.mkString(s"(${band.toLong << planesPerBand}L + ", " + ", ")")
-  }
-
   /** The 1e-6 quantization shared by [[bandRows]] and its spec twin. */
   private[graft] val QuantizeExpr = "transform(v, x -> CAST(ROUND(x * 1000000) AS BIGINT))"
 
   /** (vec_id, band) rows — one narrow row per vector per band, the only
     * thing the candidate join shuffles. All keys come from ONE native
     * [[graft.expressions.HyperplaneBands]] pass (hash-cross-checked
-    * against the composed [[sparkBandKey]] form and the SQL-arithmetic
+    * against `DotProductSpec`'s composed form and the SQL-arithmetic
     * oracle). */
   private def bandRows(emb: DataFrame, bands: Int, planesPerBand: Int): DataFrame =
     vecs(emb)
@@ -605,12 +578,12 @@ object SimilarityOps {
   private[graft] val KmeansQuantize =
     "transform(CAST(embedding AS ARRAY<DOUBLE>), x -> CAST(ROUND(x * 1000) AS BIGINT))"
 
-  private def kmVq(emb: DataFrame): DataFrame =
+  private[graft] def kmVq(emb: DataFrame): DataFrame =
     emb.select(col("vec_id").cast("long").as("vec_id"),
       expr(KmeansQuantize).as("qv"))
 
   /** (cell, n, sv) exact integer centroid state, collapsed to one row. */
-  private def kmCents(assigned: DataFrame): DataFrame = assigned
+  private[graft] def kmCents(assigned: DataFrame): DataFrame = assigned
     .select(col("cell"), posexplode(col("qv")))
     .select(col("cell"), col("pos").cast("long").as("d"), col("col").as("q"))
     .groupBy("cell", "d").agg(sum("q").as("sq"), count(lit(1)).as("n"))
@@ -672,7 +645,7 @@ object SimilarityOps {
     * per round. The FINAL round stays lazy: callers get a plan whose
     * shape (broadcast centroid row → row-local fold) is inspectable and
     * composes with their own transforms. */
-  private def kmRounds(vq0: DataFrame, k: Int, rounds: Int): DataFrame = {
+  private[graft] def kmRounds(vq0: DataFrame, k: Int, rounds: Int): DataFrame = {
     // materialize the quantized corpus ONCE: every round's assign (and the
     // seed scan) reads the checkpointed (vec_id, qv) rows instead of
     // re-deriving scan + cast + per-element round from parquet per round —
@@ -690,32 +663,6 @@ object SimilarityOps {
     kmRounds(kmVq(emb), k, rounds)
       .select(col("vec_id"), col("cell"), col("dist")).orderBy("vec_id")
 
-  /** The centroid state the FINAL [[kmeans]] assignment used — the bounded
-    * artifact (k × D integer sums + counts, one row) a batch job persists
-    * so ingest-time consumers ([[graft.streaming.StreamCentroidAssign]])
-    * can route arriving vectors without touching the corpus. */
-  def kmeansCentroids(emb: DataFrame, k: Int = KmeansK,
-                      rounds: Int = KmeansRounds): DataFrame =
-    kmCents(kmRounds(kmVq(emb), k, rounds - 1))
-
-  /** q94 — the per-round convergence trace a real k-means job watches:
-    * round number, member count, and total/mean within-cell squared
-    * distance. Lloyd guarantees the total is non-increasing round-over-
-    * round; a flat tail says "stop paying for rounds", an INCREASE says
-    * the implementation is broken — this is the monitoring row that
-    * catches it. Costs nothing extra: each round's assignment is already
-    * materialized by the checkpoint; the trace is one bounded aggregate
-    * per round over those checkpointed rows.
-    *
-    * Determinism: `dist` is an exact integer quotient (see [[kmeans]]);
-    * it is scaled to 1e-6 micro-units (structurally boundary-safe — see
-    * [[kmeansInertiaOf]]) and summed EXACTLY as int64, so the trace is
-    * bit-identical in any engine — the one final division for `mean_dist`
-    * is IEEE-exact on integer inputs. */
-  def kmeansInertia(emb: DataFrame, k: Int = KmeansK,
-                    rounds: Int = KmeansRounds): DataFrame =
-    kmeansInertiaOf(kmeansRounds(emb, k, rounds))
-
   /** The per-round assignment trace (round_no, vec_id, cell, dist) — the
     * artifact a clustering job PERSISTS so its monitors ([[kmeansInertiaOf]])
     * aggregate stored rows instead of re-running Lloyd. All-numeric columns
@@ -730,7 +677,15 @@ object SimilarityOps {
     }.reduce(_ unionByName _)
   }
 
-  /** The trace aggregate over [[kmeansRounds]] rows (live or snapshot).
+  /** q94 — the trace aggregate over [[kmeansRounds]] rows (live or
+    * snapshot): the per-round convergence trace a real k-means job
+    * watches, round number, member count, and total/mean within-cell
+    * squared distance. Lloyd guarantees the total is non-increasing
+    * round-over-round; a flat tail says "stop paying for rounds", an
+    * INCREASE says the implementation is broken. `dist` is scaled to 1e-6
+    * micro-units and summed EXACTLY as int64, so the trace is
+    * bit-identical in any engine; the one final division for `mean_dist`
+    * is IEEE-exact on integer inputs.
     *
     * NO rounding-boundary guard here, deliberately — unlike the q67/q92/
     * q95/q101 micro recipes, whose ln() inputs can diverge by an ulp
@@ -763,44 +718,13 @@ object SimilarityOps {
       // converges immediately (empty-in-empty-out, like [[kmeans]])
       .headOption.map(_.getLong(0)).getOrElse(0L)
 
-  /** A convergence-terminated [[kmeansConverged]] run: the final assignment
-    * (same (vec_id, cell, dist) surface as [[kmeans]]), the number of Lloyd
-    * rounds actually paid, and the exact per-round inertia trace consumed
-    * as the stopping signal. */
-  final case class KmeansRun(assign: DataFrame, rounds: Int,
-                             inertiaTrace: Seq[Long])
-
-  /** CONVERGENCE-TERMINATED Lloyd: run up to `maxRounds`, stopping as soon
-    * as the round-over-round inertia improvement is ≤ `epsMicro` — what a
-    * real clustering job does instead of guessing a round budget
-    * ([[kmeans]] keeps the fixed budget as the graded q87 form). The stop
-    * signal is exactly q94's trace: after each checkpointed round, ONE
-    * bounded aggregate job ([[kmeansInertiaOf]]'s exact micro-unit sum, so
-    * the decision is integer math — deterministic on any engine/partitioning)
-    * compares this round's inertia to the last. Lloyd guarantees the delta
-    * is ≥ 0 under these exact rational centroids (spec-asserted), so
-    * `epsMicro = 0` means "stop when a round stops strictly improving";
-    * the cap bounds a non-converged run like any production round budget.
-    * Cost: the convergence check adds one bounded aggregate per round over
-    * rows the checkpoint already materialized — the corpus is never
-    * re-scanned for it. */
-  def kmeansConverged(emb: DataFrame, k: Int = KmeansK, maxRounds: Int = 10,
-                      epsMicro: Long = 0L): KmeansRun = {
-    require(maxRounds >= 1, s"kmeansConverged: maxRounds must be >= 1, got $maxRounds")
-    val (frames, _) = convergedRounds(kmVq(emb), k, maxRounds,
-      (prev, cur) => prev - cur <= epsMicro)
-    KmeansRun(
-      frames.last._2.select(col("vec_id"), col("cell"), col("dist")).orderBy("vec_id"),
-      frames.size, frames.map(_._3))
-  }
-
   /** The shared convergence-terminated Lloyd loop: each element is
     * (round_no, checkpointed assignment, exact inertia_micro); the Boolean
     * is TRUE iff the run STOPPED on `stopRule(prev, cur)` (vs exhausting
-    * the cap). Both [[kmeansConverged]] (absolute eps) and the graded
-    * [[kmeansConvergedTrace]] (relative per-mille eps) consume this one
+    * the cap). The graded [[kmeansConvergedTrace]] (relative per-mille
+    * eps) and `SimilarityOpsSpec`'s absolute-eps twin consume this one
     * loop, so the stopping mechanics cannot drift. */
-  private def convergedRounds(vq0: DataFrame, k: Int, maxRounds: Int,
+  private[graft] def convergedRounds(vq0: DataFrame, k: Int, maxRounds: Int,
                               stopRule: (Long, Long) => Boolean): (Seq[(Int, DataFrame, Long)], Boolean) = {
     val vq = vq0.localCheckpoint() // one quantize pass (the kmRounds note)
     var a = kmAssign(vq, kmCents(kmSeed(vq, k))).localCheckpoint()
@@ -833,7 +757,7 @@ object SimilarityOps {
     * round gradable by a fixed-depth SQL expansion. */
   val KmeansConvMaxRounds = 8
 
-  /** q121 — CONVERGENCE-TERMINATED K-MEANS, graded: the [[kmeansConverged]]
+  /** q121 — CONVERGENCE-TERMINATED K-MEANS, graded: a [[convergedRounds]]
     * run emitted as rows — every round actually PAID, each row carrying the
     * round's exact inertia (the stopping signal q94 publishes) and
     * `stopped` marking the final round of a run that hit the relative
@@ -915,14 +839,6 @@ object SimilarityOps {
       .selectExpr("cell", "n", "keep_n",
         s"CAST(CAST(keep_n AS DECIMAL(38,0)) * ${PipelineOps.TwoPow48} DIV n AS BIGINT) AS cut")
   }
-
-  /** The dial collapsed to its driver-side (cell → cut) artifact — the
-    * ≤ k-entry literal the streaming sampler embeds in its plan. The
-    * collect is bounded by k (the cell id space) by construction. */
-  def cellSampleCuts(assign: DataFrame, frac: Double = CellSampleFrac,
-                     k: Int = KmeansK): Seq[(Long, Long)] =
-    cellSampleDial(assign, frac, k).select("cell", "cut")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
 
   /** q110 — CLUSTER QUALITY REPORT (simplified silhouette per cell): the
     * post-hoc evaluation a clustering job publishes next to its centroids —
@@ -1008,7 +924,7 @@ object SimilarityOps {
     * products — identical bits on both engines.
     *
     * `k` is the index's TRUE centroid count, passed explicitly (the
-    * [[cellSampleCuts]] convention): deriving it from the populated-cell
+    * [[cellSampleDial]] convention): deriving it from the populated-cell
     * count would make empty posting lists invisible AND normalize every
     * balance factor against the wrong k (4 populated cells of a k=8
     * index would all read balance 1.0 while really carrying 2× the even
@@ -1110,16 +1026,21 @@ object SimilarityOps {
     * arrival-guard contract): a null/ragged row would silently skew every
     * moment, and q118 is the census that counts them upstream. */
   def embeddingMoments(emb: DataFrame, dim: Int = Dim): DataFrame =
-    momentsFrom(emb, dim, exploded = false)
+    // the native graft_trisum aggregate folds each row's upper triangle
+    // into one long[] buffer per partition (tight JVM loop, one ≤ 17 KB
+    // state shuffled per partition, integer adds — partitioning-independent)
+    momentsFrom(emb, dim) { (q, _) =>
+      q.agg(expr(s"graft_trisum(qv, $dim)").as("tri"), count(lit(1)).as("n"))
+        .selectExpr("n", "posexplode(tri) AS (pos, xy)")
+        .selectExpr("pos", "n", "CAST(xy AS DECIMAL(38,0)) AS sxy")
+    }
 
-  /** The built-ins-only twin of [[embeddingMoments]] (posexplode of the
-    * per-row product triangle into a hash aggregate) — same values by
-    * construction, kept as the spec cross-check for the native
-    * `graft_trisum` aggregate (the q58 threshold/rank twin pattern). */
-  private[graft] def embeddingMomentsExploded(emb: DataFrame, dim: Int = Dim): DataFrame =
-    momentsFrom(emb, dim, exploded = true)
-
-  private def momentsFrom(emb: DataFrame, dim: Int, exploded: Boolean): DataFrame = {
+  /** The moments around a product-sum step: `prods(q, triangle)` turns the
+    * quantized rows (`qv`) into (pos, n, sxy) sums over the upper triangle
+    * `triangle` enumerates (a format string over `i`, `j`), so
+    * `SimilarityOpsSpec`'s built-ins-only twin shares everything else. */
+  private[graft] def momentsFrom(emb: DataFrame, dim: Int)(
+      prods: (DataFrame, String) => DataFrame): DataFrame = {
     graft.expressions.GraftFunctions.register(emb.sparkSession)
     val q = emb.selectExpr(
       s"""CASE WHEN embedding IS NULL OR size(embedding) != $dim
@@ -1138,22 +1059,8 @@ object SimilarityOps {
     val posMap = emb.sparkSession.range(1).selectExpr(
         s"posexplode(${triangle.format("struct(i AS i, j AS j)")}) AS (pos, ij)")
       .selectExpr("pos", "ij.i AS i", "ij.j AS j")
-    // product sums: the native graft_trisum aggregate folds each row's
-    // upper triangle into one long[] buffer per partition (tight JVM
-    // loop, one ≤ 17 KB state shuffled per partition, integer adds —
-    // partitioning-independent); the exploded twin streams the same
-    // triangle through Generate → partial hash agg
-    val prods = (if (exploded)
-      q.selectExpr(
-          s"posexplode(${triangle.format("qv[i] * qv[j]")}) AS (pos, xy)")
-        .groupBy("pos")
-        .agg(count(lit(1)).as("n"), sum(col("xy").cast("decimal(38,0)")).as("sxy"))
-    else
-      q.agg(expr(s"graft_trisum(qv, $dim)").as("tri"), count(lit(1)).as("n"))
-        .selectExpr("n", "posexplode(tri) AS (pos, xy)")
-        .selectExpr("pos", "n", "CAST(xy AS DECIMAL(38,0)) AS sxy"))
+    prods(q, triangle)
       .join(broadcast(posMap), "pos")
-    prods
       .join(broadcast(sums.select(col("i"), col("s").as("si"))), "i")
       .join(broadcast(sums.select(col("i").as("j"), col("s").as("sj"))), "j")
       .selectExpr("CAST(i AS INT) AS i", "CAST(j AS INT) AS j", "n",
@@ -1226,8 +1133,8 @@ object SimilarityOps {
     * within-cell self-join is O(cell²) BY DESIGN — the paper's cost model
     * holds only while the cluster count grows with the corpus (~√n cells
     * keeps E[cell] ≈ √n). A cell past the budget means the corpus outgrew
-    * the clustering; the fix is more cells ([[semanticDedupAuto]] or a
-    * re-learned k), never a silent quadratic. 10⁴ members ≈ 5·10⁷ pairs
+    * the clustering; the fix is more cells (a re-learned k), never a
+    * silent quadratic. 10⁴ members ≈ 5·10⁷ pairs
     * per cell — the most a single reducer should ever be handed. */
   val SemDedupMaxCell = 10000L
 
@@ -1255,10 +1162,7 @@ object SimilarityOps {
     * is one left anti-ish aggregate join back to the assignment table.
     *
     * Cells: the graded default assigns to the per-label centroids via
-    * [[cellDist]]'s exact-integer argmin (deterministic in any engine);
-    * [[semanticDedupAuto]] is the scale path that LEARNS ~√n cells with
-    * [[kmeans]] so the cell count is a corpus-size function, not a fixed
-    * label cardinality. */
+    * [[cellDist]]'s exact-integer argmin (deterministic in any engine). */
   def semanticDedup(emb: DataFrame, minCos: Double = SemDedupMinCos,
                     maxCell: Long = SemDedupMaxCell): DataFrame = {
     val byDist = org.apache.spark.sql.expressions.Window
@@ -1266,21 +1170,6 @@ object SimilarityOps {
     val assigned = cellDist(emb)
       .withColumn("rn", row_number().over(byDist))
       .filter(col("rn") === 1).select("vec_id", "cell")
-    semanticDedupOn(emb, assigned, minCos, maxCell)
-  }
-
-  /** The scale variant: cells are LEARNED — k = ⌈√n⌉ [[kmeans]] centroids
-    * (the paper's dial: cluster count grows with the corpus, keeping the
-    * expected within-cell pair space linear-ish), so no fixed label/cell
-    * cardinality caps the clustering as the corpus grows. The one `count()`
-    * action prices the corpus before sizing k — the same bounded driver
-    * action as the kmeans round checkpoints it precedes. Not oracle-graded
-    * (the graded q85 keeps the label-cell default); spec-verified. */
-  def semanticDedupAuto(emb: DataFrame, minCos: Double = SemDedupMinCos,
-                        rounds: Int = KmeansRounds,
-                        maxCell: Long = SemDedupMaxCell): DataFrame = {
-    val k = math.ceil(math.sqrt(emb.count().toDouble)).toInt max 1
-    val assigned = kmeans(emb, k, rounds).select("vec_id", "cell")
     semanticDedupOn(emb, assigned, minCos, maxCell)
   }
 
@@ -1405,7 +1294,8 @@ object SimilarityOps {
         $roundCtes"""
   }
 
-  /** Same banded key as [[sparkBandKey]]: exact integer plane dots over the
+  /** Same banded key as [[graft.expressions.HyperplaneBands]]: exact
+    * integer plane dots over the
     * 1e-6-quantized vector; the plane weight is the same integer formula
     * inlined as SQL arithmetic (list_sum over BIGINTs is exact, so fold
     * order is irrelevant — structural cross-engine determinism). */

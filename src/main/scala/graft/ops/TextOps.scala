@@ -800,7 +800,7 @@ object TextOps {
     *
     * Scale shape: the weight table is checkpointed once; each
     * water-fill round is ONE bounded two-column aggregate over it (the
-    * q66/kmeansConverged driver-fixpoint idiom — state is two integers);
+    * q66/q121 driver-fixpoint idiom — state is two integers);
     * the final verdict is a row-local filter against the broadcast
     * (n, s) pair. No window, no unbounded join. (Σw_micro is int64 here;
     * a corpus pushing it past 2⁶³ moves the state to DECIMAL(38,0) —

@@ -174,7 +174,7 @@ object FraudPipeline {
     * ([[BatchSink.startBackToBack]]), as the reference's topology handles
     * each record once polled: `alerts` may hold [[fraudAlerts]] or
     * event-time keyed state ([[VelocityDetector.detectEventTime]]), not a
-    * processing-time TTL ([[VelocityDetector.detect]]), which is refused. */
+    * processing-time TTL ([[KeyedFold.apply]]), which is refused. */
   def startAlertSink(alerts: DataFrame, path: String, checkpoint: String): StreamingQuery =
     BatchSink.startBackToBack(alerts, checkpoint)(BatchSink.write(_, _, path))
 }

@@ -45,8 +45,8 @@ object IngestPipeline {
     * (`textCol`, `embedding`) columns. Emits every input row with:
     * `textCol` scrubbed, `n_pii` (masked-identifier count), `contaminated`
     * (eval-set leak flag), `cell` + `dist` (nearest learned centroid).
-    * `evalDocs` must carry `text`; `centroids` is the one-row
-    * [[graft.ops.SimilarityOps.kmeansCentroids]] artifact. */
+    * `evalDocs` must carry `text`; `centroids` is the one-row centroid
+    * artifact [[StreamCentroidAssign.assign]] reads. */
   def ingest(stream: DataFrame, evalDocs: DataFrame, centroids: DataFrame,
              textCol: String = "text"): DataFrame =
     StreamCentroidAssign.assign(

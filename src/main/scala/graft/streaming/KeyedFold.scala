@@ -9,9 +9,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * maintainer's pure step over each key's micro-batch rows, and keep or
   * free the key's state. The only `flatMapGroupsWithState` call.
   *
-  * Processing time, [[apply]] ([[VelocityDetector.detect]],
-  * [[StreamCusum]], [[StreamAlert]], [[StreamSprt]], [[StreamFunnel]],
-  * [[StreamEncoding]]): the fold sees `None` for a key with no state and
+  * Processing time, [[apply]] ([[StreamCusum]], [[StreamAlert]],
+  * [[StreamSprt]], [[StreamFunnel]], [[StreamEncoding]]): the fold sees `None` for a key with no state and
   * returns the next state: `Some` stores it and re-arms the TTL, `None`
   * frees the key (the [[StreamAlert]] latch closing its run). It runs
   * once per key per micro-batch, not per row, so a maintainer may emit

@@ -9,7 +9,7 @@ import graft.ops.{PipelineOps, SimilarityOps}
   * q107 dial, completing the batch-trains / stream-applies pair the engine
   * has for k-means routing ([[StreamCentroidAssign]]), BPE (q79), and the
   * quality model ([[StreamQualityScore]]): a batch job computes the bounded
-  * per-cell dial ([[SimilarityOps.cellSampleCuts]] — ≤ k (cell, cut)
+  * per-cell dial ([[SimilarityOps.cellSampleDial]]'s ≤ k (cell, cut)
   * entries) over the standing corpus, and every arriving vector is then
   * admitted or shed ROW-LOCALLY against it. Chained after
   * [[StreamCentroidAssign]] this is topic-aware ingest admission: the
@@ -28,8 +28,8 @@ import graft.ops.{PipelineOps, SimilarityOps}
 object StreamCellSample {
 
   /** Flag each arriving (vec_id, cell, ...) row with `keep` — the caller
-    * routes or filters. `cuts` is the [[SimilarityOps.cellSampleCuts]]
-    * artifact. Emits every input column plus `u` (the replay-safe draw)
+    * routes or filters. `cuts` is the (cell, cut) pairs of
+    * [[SimilarityOps.cellSampleDial]], collected. Emits every input column plus `u` (the replay-safe draw)
     * and `keep`. */
   def flag(stream: DataFrame, cuts: Seq[(Long, Long)]): DataFrame = {
     require(cuts.nonEmpty, "StreamCellSample: empty dial artifact — " +

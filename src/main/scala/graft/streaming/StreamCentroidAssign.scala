@@ -12,8 +12,8 @@ import graft.ops.SimilarityOps
   * vectors, all without touching the standing corpus.
   *
   * Scale contract: the centroid state is the bounded one-row artifact a
-  * scheduled batch job refreshes ([[SimilarityOps.kmeansCentroids]] — k ×
-  * D integer sums + counts); it joins each micro-batch as a broadcast
+  * scheduled batch job refreshes (the final q87 round's centroid state,
+  * [[SimilarityOps.kmCents]]: k × D integer sums + counts); it joins each micro-batch as a broadcast
   * one-row table and the argmin is the SAME row-local codegen'd fold the
   * batch rounds use ([[SimilarityOps.KmeansBestExpr]]), so batch and
   * stream assignments cannot drift and the stream shuffles nothing.
@@ -22,8 +22,7 @@ import graft.ops.SimilarityOps
 object StreamCentroidAssign {
 
   /** Assign each arriving (vec_id, embedding) row to its nearest cell.
-    * `centroids` is the static one-row [[SimilarityOps.kmeansCentroids]]
-    * table. Emits (vec_id, cell, dist) plus any extra columns the stream
+    * `centroids` is that static one-row centroid table. Emits (vec_id, cell, dist) plus any extra columns the stream
     * carries (ts, source, ...) so downstream routing keeps its context. */
   def assign(stream: DataFrame, centroids: DataFrame): DataFrame = {
     require(stream.columns.contains("embedding"),

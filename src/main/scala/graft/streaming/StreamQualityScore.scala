@@ -10,8 +10,8 @@ import graft.ops.QualityModelOps
   * the engine already has for k-means ([[StreamCentroidAssign]] routes
   * against persisted centroids) and BPE (q79 applies persisted merges):
   * a batch job trains the hashed-feature NB model and persists the
-  * BOUNDED artifact ([[QualityModelOps.bucketWeightsMicro]] — 256 micro
-  * weights + a bias); every arriving document is then scored ROW-LOCALLY
+  * BOUNDED artifact ([[QualityModelOps.ModelTables]], collected: 256
+  * micro weights + a bias); every arriving document is then scored ROW-LOCALLY
   * against it. No state store, no watermark, no shuffle, nothing beyond
   * a 2 KB literal in the plan — the shape that keeps an ingest chain
   * linear in executors.
@@ -27,8 +27,8 @@ object StreamQualityScore {
   /** Score each arriving row: emits every input column plus `n_feats`,
     * `score_micro`, `score`, `pred`. The stream must carry `textCol` and
     * `lang` (the interaction features' context). `wMicro` must be the
-    * full [[QualityModelOps.NumBuckets]]-entry array from
-    * [[QualityModelOps.bucketWeightsMicro]]. */
+    * full [[QualityModelOps.NumBuckets]]-entry weight array of
+    * [[QualityModelOps.ModelTables]], in bucket order. */
   def score(stream: DataFrame, wMicro: Seq[Long], biasMicro: Long,
             textCol: String = "text"): DataFrame = {
     require(wMicro.length == QualityModelOps.NumBuckets,

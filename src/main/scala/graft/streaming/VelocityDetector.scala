@@ -11,31 +11,30 @@ import org.apache.spark.sql.Dataset
   * inside a sliding `windowSec` (velocity), or when an amount exceeds 3× the
   * user's running mean (deviation) after a warm-up of 3 observations. State
   * per key is O(window) recent timestamps + two running moments; idle-user
-  * state expires via a timeout, so total state is bounded by active keys —
-  * the property that keeps this runnable against an unbounded 100 TB stream.
-  *
-  * Two expiry clocks:
-  *  - [[detect]]: processing-time TTL — simplest, correct for a
-  *    tail-following production stream; its lifecycle is [[KeyedFold]]'s.
-  *  - [[detectEventTime]]: watermark + event-time TTL on
-  *    [[KeyedFold.eventTime]] — the scale-correct variant for
-  *    replay/backfill, where state expiry must follow the
-  *    DATA's clock (a backfill at 1000× speed would otherwise never expire
-  *    state, and a paused stream would expire it spuriously).
+  * state expires on the data's clock, so total state is bounded by active
+  * keys — the property that keeps this runnable against an unbounded
+  * 100 TB stream. [[detectEventTime]] runs it on [[KeyedFold.eventTime]]
+  * (watermark + event-time TTL): expiry follows the DATA's clock, so a
+  * backfill at 1000× speed still expires state and a paused stream does
+  * not expire it spuriously.
   */
 object VelocityDetector {
   case class Txn(userId: String, amount: Double, timestamp: Long)
   case class UserState(recentTs: List[Long], n: Long, sumAmount: Double)
   case class Alert(userId: String, kind: String, amount: Double, timestamp: Long, detail: String)
 
-  /** The per-user state machine, shared by both expiry variants: fold a
-    * batch of transactions (sorted by event time) through the state,
-    * emitting velocity/deviation alerts. Package-visible so the batch
-    * twin of [[detectEventTime]] can fold it over a static input. */
+  /** The per-user state machine: fold a batch of transactions (sorted by
+    * event time) through the state, emitting velocity/deviation alerts. A
+    * transaction more than `ttlSec` after the key's previous one (the head
+    * of `recentTs`) starts from empty state: the key has expired on the
+    * data's clock. Package-visible so the batch twin of
+    * [[detectEventTime]] can fold it over a static input. */
   private[graft] def advance(userId: String, txns: Seq[Txn], st0: UserState,
-                             maxTxns: Int, windowSec: Long): (Seq[Alert], UserState) = {
+                             maxTxns: Int, windowSec: Long,
+                             ttlSec: Long): (Seq[Alert], UserState) = {
     var st = st0
     val alerts = txns.flatMap { t =>
+      if (st.recentTs.headOption.exists(t.timestamp - _ > ttlSec)) st = UserState(Nil, 0L, 0.0)
       val recent = (t.timestamp :: st.recentTs).filter(_ > t.timestamp - windowSec)
       val mean = if (st.n > 0) st.sumAmount / st.n else 0.0
       val velocity =
@@ -52,19 +51,6 @@ object VelocityDetector {
       velocity ++ deviation
     }
     (alerts, st)
-  }
-
-  /** Processing-time variant; idle-user state expires after
-    * [[KeyedFold.Ttl]]. */
-  def detect(txns: Dataset[Txn], maxTxns: Int = 3, windowSec: Long = 60): Dataset[Alert] = {
-    val spark = txns.sparkSession
-    import spark.implicits._
-    KeyedFold[Txn, String, UserState, Alert](txns, _.userId,
-      Ordering.by(_.timestamp)) { (userId, st0, rows) =>
-      val (alerts, st1) = advance(userId, rows,
-        st0.getOrElse(UserState(Nil, 0L, 0.0)), maxTxns, windowSec)
-      (Some(st1), alerts)
-    }
   }
 
   /** Buffered per-key event-time state: the not-yet-sealed events and the
@@ -104,11 +90,17 @@ object VelocityDetector {
     * later than the watermark are dropped by the stateful operator's late
     * filter (explicit policy, like the windowed aggs).
     *
-    * State expiry also follows the data clock: a key with an empty buffer
-    * expires `stateTtlSec` after its last event; a key with sealed-but-
-    * unprocessed events is woken by a timer instead of waiting for new
-    * data, and the timer never regresses below last-seen + TTL because
-    * `lastSeen` is monotone in state. */
+    * State expiry also follows the data clock, inside [[advance]]: a
+    * sealed event more than `stateTtlSec` after the key's previous sealed
+    * event starts from empty state, so expiry, too, is the same in every
+    * batch split. The timer at last-seen + TTL only frees storage: it
+    * fires once the watermark passes that time, and Spark drops every
+    * later row at or below the watermark, so a row reaching a key the
+    * timer freed is more than `stateTtlSec` after the key's last event
+    * and [[advance]] would have started it from empty state anyway. A key
+    * with sealed-but-unprocessed events is woken by a timer instead of
+    * waiting for new data, and the timer never regresses below last-seen
+    * + TTL because `lastSeen` is monotone in state. */
   def detectEventTime(txns: Dataset[Txn], maxTxns: Int = 3, windowSec: Long = 60,
                       stateTtlSec: Long = 3600,
                       watermarkDelaySec: Long = 30): Dataset[Alert] = {
@@ -126,7 +118,7 @@ object VelocityDetector {
         val (ready, pending) = buf.partition(_.timestamp * 1000L <= wmMs)
         val (alerts, core1) = advance(userId,
           ready.sortBy(t => (t.timestamp, t.amount)), UserState(recentTs, st.n, st.sumAmount),
-          maxTxns, windowSec)
+          maxTxns, windowSec, stateTtlSec)
         val lastSeen = (st.lastSeen +: buf.map(_.timestamp)).max
         // wake when the earliest pending event can be sealed — the event
         // at ts is sealable once the watermark REACHES ts (the watermark

@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress}
 
-import graft.streaming.{FraudPipeline, VelocityDetector}
+import graft.streaming.{FraudPipeline, StreamAlert, VelocityDetector}
 
 /** The alert sink's back-to-back cadence ([[graft.streaming.BatchSink.startBackToBack]]
   * under [[FraudPipeline.startAlertSink]]): it refuses a processing-time
@@ -33,8 +33,9 @@ class BackToBackSinkSpec extends SparkSpec {
   test("startAlertSink refuses processing-time keyed state and starts the paper's two queries") {
     val (sink, ck) = dirs("b2b_guard")
     val active = spark.streams.active.length
+    val obs = MemoryStream[StreamAlert.Obs](Encoders.product[StreamAlert.Obs], spark.sqlContext)
     val e = intercept[IllegalArgumentException](FraudPipeline.startAlertSink(
-      VelocityDetector.detect(txnStream().toDS()).toDF(), sink, ck))
+      StreamAlert.track(obs.toDS()).toDF(), sink, ck))
     assert(e.getMessage.contains("BatchSink.start"))
     assert(spark.streams.active.length === active, "a refused stream must not start")
     assert(!new File(ck).exists(), "a refused stream must leave no checkpoint")

@@ -79,7 +79,7 @@ class BpeOpsSpec extends SparkSpec {
       val ws = t.split(" ")
       (id, ws.length.toLong, ws.map(tokenize).map(_.toLong).sum)
     }
-    val got = BpeOps.bpeTokenCounts(docs, numMerges = 8)
+    val got = BpeOps.applyMerges(docs, BpeOps.learnMerges(docs, 8))
       .as[(Long, Long, Long)].collect().toSeq
     assert(got === expected)
     // merges genuinely compress: fewer BPE tokens than characters
@@ -100,7 +100,7 @@ class BpeOpsSpec extends SparkSpec {
       (1L, "a", BpeOps.EndMark, s"a${BpeOps.EndMark}", 3L),
       (2L, "b", BpeOps.EndMark, s"b${BpeOps.EndMark}", 1L)))
     // application over the fully-collapsed vocabulary still tokenizes
-    val counts = BpeOps.bpeTokenCounts(docs, numMerges = 5)
+    val counts = BpeOps.applyMerges(docs, BpeOps.learnMerges(docs, 5))
       .as[(Long, Long, Long)].collect().toSeq
     assert(counts === Seq((1L, 4L, 4L)))
   }

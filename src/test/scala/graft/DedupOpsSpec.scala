@@ -1,6 +1,33 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, min, struct}
+
 import graft.ops.{DedupOps, TextOps}
+
+object DedupOpsSpec {
+  import DedupOps.{WinnowK, WinnowW}
+
+  /** Composed-operator twin of [[DedupOps.winnowFingerprints]]: windowed
+    * `MIN(struct(h, -p))` with the rightmost tie-break, exactly the
+    * oracle's formulation. */
+  def winnowFingerprintsWindowed(docs: DataFrame): DataFrame = {
+    val hashed = docs.where(s"length(text) >= $WinnowK")
+      .selectExpr("doc_id", "text",
+        s"explode(sequence(1, length(text) - ${WinnowK - 1})) AS p")
+      .selectExpr("doc_id", "p",
+        s"CAST(conv(substring(md5(substring(text, p, $WinnowK)), 1, 15), 16, 10) AS BIGINT) AS h")
+    val win = Window.partitionBy("doc_id").orderBy("p")
+      .rowsBetween(-(WinnowW - 1), 0)
+    hashed
+      .withColumn("s", min(struct(col("h"), (-col("p")).as("np"))).over(win))
+      .where(col("p") >= WinnowW) // full windows only — partial prefixes
+                                  // would break cross-length determinism
+      .select(col("doc_id"), col("s.h").as("h"))
+      .distinct()
+  }
+}
 
 class DedupOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -57,7 +84,7 @@ class DedupOpsSpec extends SparkSpec {
     val docs01 = Tables.documents(spark, "/root/testdata/sf0.001")
     val native = DedupOps.winnowFingerprints(docs01)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val windowed = DedupOps.winnowFingerprintsWindowed(docs01)
+    val windowed = DedupOpsSpec.winnowFingerprintsWindowed(docs01)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(native === windowed,
       "the native selection must match the composed windowed form — the oracle runs the windowed shape")
@@ -66,7 +93,7 @@ class DedupOpsSpec extends SparkSpec {
       (4L, "tiny"), (5L, "")).toDF("doc_id", "text")
     val ne = DedupOps.winnowFingerprints(edge)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val we = DedupOps.winnowFingerprintsWindowed(edge)
+    val we = DedupOpsSpec.winnowFingerprintsWindowed(edge)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(ne === we)
     assert(!ne.exists(_._1 >= 4L), "texts shorter than K must yield no fingerprints")

@@ -3,6 +3,24 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.expressions.GraftFunctions
+import graft.ops.SimilarityOps
+
+object DotProductSpec {
+  /** The composed form of [[graft.expressions.HyperplaneBands]]' key for
+    * band `band`: the sign bits of `planesPerBand` exact int64 plane dots
+    * (`graft_dotl` over the 1e-6-quantized vector `vq` and the integer
+    * planes), offset by band·2^planesPerBand so keys from different bands
+    * never collide. */
+  def sparkBandKey(vq: String, band: Int, planesPerBand: Int): String = {
+    val bits = (0 until planesPerBand).map { p =>
+      val g = band * planesPerBand + p
+      val wq = (0 until SimilarityOps.Dim)
+        .map(d => s"${SimilarityOps.plane(g, d)}L").mkString("array(", ", ", ")")
+      s"(CASE WHEN graft_dotl($vq, $wq) > 0L THEN ${1L << p}L ELSE 0L END)"
+    }
+    bits.mkString(s"(${band.toLong << planesPerBand}L + ", " + ", ")")
+  }
+}
 
 class DotProductSpec extends SparkSpec {
   import spark.implicits._
@@ -103,10 +121,10 @@ class DotProductSpec extends SparkSpec {
 
   test("graft_bands equals the composed CASE/dotl band keys on real vectors") {
     withFn {
-      import graft.ops.SimilarityOps
+      import DotProductSpec.sparkBandKey
       val (bands, planes) = (SimilarityOps.VBands, SimilarityOps.PlanesPerBand)
       val composed = (0 until bands)
-        .map(b => SimilarityOps.sparkBandKey("vq", b, planes)).mkString(", ")
+        .map(b => sparkBandKey("vq", b, planes)).mkString(", ")
       val df = Tables.embeddings(spark, "/root/testdata/sf0.001")
         .selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS v")
         .selectExpr("vec_id", s"${SimilarityOps.QuantizeExpr} AS vq")
@@ -120,7 +138,7 @@ class DotProductSpec extends SparkSpec {
         .selectExpr("CAST(embedding AS ARRAY<DOUBLE>) AS v")
         .selectExpr(s"${SimilarityOps.QuantizeExpr} AS vq")
         .selectExpr("graft_bands(vq, 2, 3) AS native",
-          s"array(${(0 until 2).map(b => SimilarityOps.sparkBandKey("vq", b, 3)).mkString(", ")}) AS spec")
+          s"array(${(0 until 2).map(b => sparkBandKey("vq", b, 3)).mkString(", ")}) AS spec")
       assert(df2.filter("native <> spec").count() === 0)
     }
   }

@@ -28,7 +28,7 @@ class IngestPipelineSpec extends SparkSpec {
     implicit val sc = spark.sqlContext
     val embs = corpus.limit(3).collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    val cents = SimilarityOps.kmeansCentroids(corpus)
+    val cents = StreamCentroidAssignSpec.kmeansCentroids(corpus)
     val batchCells = SimilarityOps.kmeans(corpus).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
 
@@ -64,7 +64,7 @@ class IngestPipelineSpec extends SparkSpec {
   test("chained output is bit-equal to composing the batch twins") {
     val embs = corpus.limit(3).collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    val cents = SimilarityOps.kmeansCentroids(corpus)
+    val cents = StreamCentroidAssignSpec.kmeansCentroids(corpus)
     val in = arrivals(embs).toDF("doc_id", "text", "embedding")
 
     // batch composition of the shared expressions: q86 redact chain →

@@ -90,14 +90,16 @@ class KeyedStateRestartSpec extends SparkSpec {
     * later than their batch's watermark, the newest event time of the
     * batches before it minus the delay), per key in `(timestamp, amount)`
     * order, sealed at the final watermark and folded through the
-    * detector's step from empty state. */
+    * detector's step from empty state, which also expires the key on the
+    * data's clock (the 3,600 s default TTL). */
   private def velocityTwin(batches: Seq[Seq[VelocityDetector.Txn]]): Seq[VelocityDetector.Alert] = {
     val wms = batches.scanLeft(0L)((wm, b) => (wm +: b.map(_.timestamp - 30)).max)
     batches.zip(wms).flatMap { case (b, wm) => b.filter(_.timestamp > wm) }
       .groupBy(_.userId).toSeq.flatMap { case (user, txns) =>
         VelocityDetector.advance(user,
           txns.filter(_.timestamp <= wms.last).sortBy(t => (t.timestamp, t.amount)),
-          VelocityDetector.UserState(Nil, 0L, 0.0), maxTxns = 3, windowSec = 60)._1
+          VelocityDetector.UserState(Nil, 0L, 0.0), maxTxns = 3, windowSec = 60,
+          ttlSec = 3600)._1
       }
   }
 
@@ -114,22 +116,14 @@ class KeyedStateRestartSpec extends SparkSpec {
       === bag(restarted), "the restarted sink must equal the batch twin over every row")
   }
 
-  private val velocity = {
-    import VelocityDetector.Txn
-    Seq(
-      Seq(Txn("u1", 10, 100), Txn("u1", 11, 110), Txn("u2", 50, 100)),
-      Seq(Txn("u1", 12, 120), Txn("u2", 60, 105), Txn("u2", 55, 110)),
-      Seq(Txn("u1", 13, 130), Txn("u2", 500, 120)), // velocity + deviation
-      Seq(Txn("u1", 14, 300), Txn("u3", 1, 300)))
-  }
-
   private val velocityEventTime = {
     import VelocityDetector.Txn
     Seq(
-      // u5's rows seal in one call, where amount order is not time order
+      // u5's rows seal in one call, where amount order is not time order;
+      // u3 warms up (mean 100) and returns after its TTL, below
       Seq(Txn("u1", 10, 100), Txn("u1", 11, 130), Txn("u1", 12, 110),
         Txn("u2", 50, 100), Txn("u5", 100, 10), Txn("u5", 1, 20), Txn("u5", 2, 30),
-        Txn("u5", 3, 40)),
+        Txn("u5", 3, 40), Txn("u3", 100, 100), Txn("u3", 110, 101), Txn("u3", 90, 102)),
       // u1@110 again: the one duplicate row
       Seq(Txn("u1", 13, 140), Txn("u2", 60, 120), Txn("u2", 55, 110),
         Txn("u1", 12, 110)),
@@ -138,8 +132,10 @@ class KeyedStateRestartSpec extends SparkSpec {
       Seq(Txn("sentinel", 1, 100000), Txn("u4", 10, 99950), Txn("u4", 11, 99955),
         Txn("u4", 12, 99960)),
       // u4@99971 sits exactly on the final watermark (100001 − 30); the
-      // next batch's u4 row seals it
-      Seq(Txn("sentinel", 1, 100001), Txn("u4", 1000, 99971)),
+      // next batch's u4 row seals it. u3 returns after the timer freed it
+      // (watermark 99970, past 102 + 3600): 5000 is no deviation from
+      // empty state
+      Seq(Txn("sentinel", 1, 100001), Txn("u4", 1000, 99971), Txn("u3", 5000, 99971)),
       Seq(Txn("u4", 1, 99990)))
   }
 
@@ -230,8 +226,6 @@ class KeyedStateRestartSpec extends SparkSpec {
   }
 
   private val laws: Seq[(String, String => Unit)] = Seq(
-    "VelocityDetector.detect" -> processingTimeLaw((ds: Dataset[VelocityDetector.Txn]) =>
-      VelocityDetector.detect(ds), velocity, 2),
     "VelocityDetector.detectEventTime" -> restartLaw((ds: Dataset[VelocityDetector.Txn]) =>
       VelocityDetector.detectEventTime(ds), velocityEventTime, 2,
       Some((_: SparkSession) => velocityTwin(velocityEventTime))),

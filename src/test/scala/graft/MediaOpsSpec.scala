@@ -58,44 +58,6 @@ class MediaOpsSpec extends SparkSpec {
     assert(stats.map(_.doc_id).toSeq === Seq(1L))
   }
 
-  test("imageStats decodes real PNGs: exact dimensions + stable pixel checksum") {
-    // doc 0: n_chars=23 → 11×5 raster by construction (23%16+4, 23%12+3)
-    val stats = MediaOps.imageStats(MediaOps.fromDocuments(docs)).collect()
-    assert(stats.length === 1)
-    val s = stats.head
-    assert((s.width, s.height) === ((23 % 16 + 4, 23 % 12 + 3)))
-    // the distributed decode must agree with a local ImageIO round-trip
-    val img = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(MediaOps.pngBytes(0L, s.width, s.height)))
-    assert(s.pixel_checksum === MediaOps.pixelChecksum(img))
-  }
-
-  test("decodeFeatures is deterministic with a fixed dim batch shape") {
-    val f1 = MediaOps.decodeFeatures(MediaOps.fromDocuments(docs), dim = 16)
-      .collect().sortBy(_.media_id)
-    val f2 = MediaOps.decodeFeatures(MediaOps.fromDocuments(docs), dim = 16)
-      .collect().sortBy(_.media_id)
-    assert(f1.length === 3)
-    assert(f1.forall(_.features.length === 16))
-    assert(f1.zip(f2).forall { case (a, b) => a.features sameElements b.features })
-  }
-
-  test("frameSample splits only videos, on REAL frame boundaries") {
-    // doc 2: n=194 → 4 frames of 8×5; every sampled frame is a standalone
-    // decodable PNG of the frame dims, and stride 2 keeps frames 0 and 2
-    val media = MediaOps.fromDocuments(docs)
-    val frames = MediaOps.frameSample(media).collect().sortBy(_.frame_no)
-    assert(frames.forall(_.media_id === 2L))
-    assert(frames.map(_.frame_no).toSeq === Seq(0, 1, 2, 3))
-    frames.foreach { f =>
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(f.frame_bytes))
-      assert(img != null, s"frame ${f.frame_no} is not a decodable PNG")
-      assert((img.getWidth, img.getHeight) === ((194 % 10 + 4, 194 % 8 + 3)))
-    }
-    val strided = MediaOps.frameSample(media, stride = 2).collect()
-    assert(strided.map(_.frame_no).toSeq.sorted === Seq(0, 2))
-  }
-
   test("videoStats decodes real motion-PNG: frame count, dims, ordered checksum") {
     // doc 2: n=194 → 4 frames of 8×5; the decoded checksum must equal the
     // direct nested fold of the raster generator formula — proving the
@@ -143,41 +105,19 @@ class MediaOpsSpec extends SparkSpec {
     MediaOps.fromDocuments(docs).toDF().write.mode("overwrite").parquet(dir)
     val snap = spark.read.parquet(dir)
     assert(MediaOps.mediaFeatureStatsOf(snap).collect().toSeq ===
-      MediaOps.mediaFeatureStats(spark, docs).collect().toSeq)
+      MediaOps.mediaFeatureStatsOf(MediaOps.fromDocuments(docs).toDF()).collect().toSeq)
     assert(MediaOps.audioFeatureStatsOf(snap).collect().toSeq ===
-      MediaOps.audioFeatureStats(spark, docs).collect().toSeq)
+      MediaOps.audioStats(MediaOps.fromDocumentsOf(docs, Some("audio")))
+        .toDF().orderBy("doc_id").collect().toSeq)
     assert(MediaOps.videoFeatureStatsOf(snap).collect().toSeq ===
-      MediaOps.videoFeatureStats(spark, docs).collect().toSeq)
+      MediaOps.videoStats(MediaOps.fromDocumentsOf(docs, Some("video")))
+        .toDF().orderBy("doc_id").collect().toSeq)
     // the modality predicate must reach the parquet scan: a snapshot
     // consumer of one kind never reads the other two thirds' payload bytes
     val plan = MediaOps.audioFeatureStatsOf(snap)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") && plan.contains("kind"),
       s"kind filter not pushed to the snapshot scan:\n${plan.take(1500)}")
-  }
-
-  test("resize is a REAL raster transform: re-encoded payload decodes at the capped dims with NN-sampled pixels") {
-    val spark2 = spark
-    import spark2.implicits._
-    val src = MediaOps.pngBytes(7L, 16, 12)
-    val media = Seq(
-      MediaRecord(0L, "image", src, MediaMeta("image/png", 16, 12, 0L)),
-      MediaRecord(1L, "audio", Array[Byte](1), MediaMeta("audio/wav", 0, 0, 10L)),
-      MediaRecord(2L, "image", Array[Byte](1), MediaMeta("image/png", 999, 999, 0L))
-    ).toDS()
-    val out = MediaOps.resize(media, maxSide = 8).collect().sortBy(_.media_id)
-    assert(out(0).meta.width === 8 && out(0).meta.height === 6)
-    val img = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(out(0).bytes))
-    assert(img.getWidth === 8 && img.getHeight === 6,
-      "payload and metadata must agree after the re-encode")
-    val orig = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(src))
-    for (y <- 0 until 6; x <- 0 until 8)
-      assert((img.getRGB(x, y) & 0xFFFFFF) ===
-        (orig.getRGB(x * 16 / 8, y * 12 / 6) & 0xFFFFFF), s"($x,$y)")
-    assert(out(1).meta === MediaMeta("audio/wav", 0, 0, 10L))
-    assert(out(2).bytes.length === 1,
-      "an undecodable payload passes through unchanged, never kills the job")
   }
 
   test("q207 thumbnail: NN samples equal the raster formula on a hand image; corpus replay by real decode") {

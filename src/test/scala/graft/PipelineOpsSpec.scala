@@ -1,7 +1,42 @@
 package graft
 
 import graft.ops.PipelineOps
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{broadcast, ceil, col, count, lit, md5, row_number}
+
+/** Exact-count rank twins of the hash-threshold samplers: per-stratum
+  * md5 rank keeps exactly the budget, at the cost of one sort task per
+  * stratum, so they bound the threshold forms' binomial deviation. */
+object PipelineOpsSpec {
+  /** q58's twin: exactly ceil(frac·n) docs per `lang`. */
+  def stratifiedSampleExact(docs: DataFrame,
+                            frac: Double = PipelineOps.StratifiedFrac): DataFrame = {
+    val w = Window.partitionBy("lang")
+      .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
+    val counts = docs.groupBy("lang").agg(count(lit(1)).as("n"))
+    docs.select(col("doc_id"), col("lang"))
+      .withColumn("r", row_number().over(w).cast("long"))
+      .join(broadcast(counts), "lang")
+      .filter(col("r") <= ceil(col("n").cast("double") * lit(frac)))
+      .select("lang", "doc_id", "r")
+      .orderBy("lang", "r")
+  }
+
+  /** q76's twin: exactly keep_n docs per (lang, source). */
+  def mixtureSampleExact(docs: DataFrame,
+                         target: Long = PipelineOps.MixtureTarget): DataFrame = {
+    val w = PipelineOps.keepBudget(docs, target)
+    val ranked = docs.select(col("doc_id"), col("lang"), col("source"))
+      .withColumn("r", row_number().over(
+        Window.partitionBy("lang", "source")
+          .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))).cast("long"))
+    ranked.join(broadcast(w.select("lang", "source", "keep_n")), Seq("lang", "source"))
+      .filter(col("r") <= col("keep_n"))
+      .select("lang", "source", "doc_id", "r", "keep_n")
+      .orderBy("lang", "source", "r")
+  }
+}
 
 class PipelineOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -173,7 +208,7 @@ class PipelineOpsSpec extends SparkSpec {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val n = docs.groupBy("lang").count().as[(String, Long)].collect().toMap
     // the exact-rank twin hits ceil(frac·n) on the nose
-    val exact = PipelineOps.stratifiedSampleExact(docs, frac = 0.2)
+    val exact = PipelineOpsSpec.stratifiedSampleExact(docs, frac = 0.2)
       .groupBy("lang").count().as[(String, Long)].collect().toMap
     assert(exact.keySet === n.keySet)
     exact.foreach { case (lang, k) =>
@@ -292,7 +327,7 @@ class PipelineOpsSpec extends SparkSpec {
     assert(again.toSeq === rows.toSeq)
     // the exact-rank twin hits every keep_n on the nose — the cross-check
     // bounding the threshold form's deviation (|28-30| ≤ 3σ ≈ 13)
-    val exact = PipelineOps.mixtureSampleExact(d, target = 40)
+    val exact = PipelineOpsSpec.mixtureSampleExact(d, target = 40)
       .as[(String, String, Long, Long, Long)].collect()
     val keptExact = exact.groupBy(_._2).view.mapValues(_.length.toLong).toMap
     assert(keptExact === Map("big" -> 30L, "small" -> 10L))

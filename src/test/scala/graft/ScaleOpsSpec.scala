@@ -11,27 +11,6 @@ class ScaleOpsSpec extends SparkSpec {
     (i.toLong, if (i % 5 == 0) (i % 13).toLong else 7L, i * 1.5)
   }.toDF("event_id", "user_id", "value")
 
-  private def dim = (0L until 13L).map(u => (u, s"user_$u")).toDF("user_id", "name")
-
-  test("salted aggregation equals naive groupBy exactly") {
-    val naive = skewed.groupBy("user_id")
-      .agg(sum("value").as("sum"), count(lit(1)).as("n"))
-      .orderBy("user_id").collect()
-    val salted = ScaleOps.saltedSumCount(skewed, "user_id", "event_id", col("value"))
-      .orderBy("user_id").collect()
-    assert(salted.map(_.toSeq).toSeq === naive.map(_.toSeq).toSeq)
-  }
-
-  test("salted join equals naive inner join exactly") {
-    val naive = skewed.join(dim, "user_id")
-      .select("event_id", "user_id", "value", "name")
-      .orderBy("event_id").collect()
-    val salted = ScaleOps.saltedJoin(skewed, dim, "user_id", "event_id")
-      .select("event_id", "user_id", "value", "name")
-      .orderBy("event_id").collect()
-    assert(salted.map(_.toSeq).toSeq === naive.map(_.toSeq).toSeq)
-  }
-
   test("salt actually spreads the hot key across reducers") {
     val saltCount = skewed
       .withColumn("__salt", pmod(hash(col("event_id")), lit(16)))

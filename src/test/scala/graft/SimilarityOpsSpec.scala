@@ -1,6 +1,41 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, count, lit, sum}
+
 import graft.ops.SimilarityOps
+
+/** Reference twins of the graded similarity operators. */
+object SimilarityOpsSpec {
+  /** The built-ins-only twin of [[SimilarityOps.embeddingMoments]]: the
+    * per-row product triangle posexploded into a hash aggregate, in place
+    * of the native `graft_trisum` aggregate. */
+  def embeddingMomentsExploded(emb: DataFrame, dim: Int = SimilarityOps.Dim): DataFrame =
+    SimilarityOps.momentsFrom(emb, dim) { (q, triangle) =>
+      q.selectExpr(s"posexplode(${triangle.format("qv[i] * qv[j]")}) AS (pos, xy)")
+        .groupBy("pos")
+        .agg(count(lit(1)).as("n"), sum(col("xy").cast("decimal(38,0)")).as("sxy"))
+    }
+
+  /** q94's trace over a live [[SimilarityOps.kmeansRounds]] run. */
+  def kmeansInertia(emb: DataFrame, k: Int = SimilarityOps.KmeansK,
+                    rounds: Int = SimilarityOps.KmeansRounds): DataFrame =
+    SimilarityOps.kmeansInertiaOf(SimilarityOps.kmeansRounds(emb, k, rounds))
+
+  /** The final assignment, the rounds paid and the exact per-round inertia. */
+  final case class KmeansRun(assign: DataFrame, rounds: Int, inertiaTrace: Seq[Long])
+
+  /** Lloyd stopped once a round improves inertia by at most `epsMicro`:
+    * the absolute-eps twin of q121's per-mille rule, on the same loop. */
+  def kmeansConverged(emb: DataFrame, k: Int = SimilarityOps.KmeansK, maxRounds: Int = 10,
+                      epsMicro: Long = 0L): KmeansRun = {
+    val (frames, _) = SimilarityOps.convergedRounds(SimilarityOps.kmVq(emb), k, maxRounds,
+      (prev, cur) => prev - cur <= epsMicro)
+    KmeansRun(
+      frames.last._2.select(col("vec_id"), col("cell"), col("dist")).orderBy("vec_id"),
+      frames.size, frames.map(_._3))
+  }
+}
 
 class SimilarityOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -279,23 +314,6 @@ class SimilarityOpsSpec extends SparkSpec {
     assert(msgs(e).exists(_.contains("within-cell pair budget")), s"wrong failure: $e")
   }
 
-  test("semantic dedup auto: learned ~sqrt(n) cells still catch scaled-copy duplicates") {
-    // same tri fixture, but cells come from kmeans (k = ceil(sqrt(3)) = 2,
-    // seeds 10/11): 11 and 12 share a learned cell (L2-nearest), so the
-    // scaled copies still collapse to one representative; 10 sits alone in
-    // its own cell and keeps. Cell IDs are seed vec_ids, so assert on
-    // (vec_id, n_dups, keep) — the verdict, not the label-cell identity.
-    val tri = Seq(
-      (10L, Array.tabulate(64)(i => math.sin(i + 1).toFloat).toSeq, 7),
-      (11L, Array.tabulate(64)(i => (math.sin(i + 1) * 2).toFloat).toSeq, 7),
-      (12L, Array.tabulate(64)(i => (math.sin(i + 1) * 3).toFloat).toSeq, 7))
-      .toDF("vec_id", "embedding", "label")
-    val got = SimilarityOps.semanticDedupAuto(tri, minCos = 0.9)
-      .as[(Long, Long, Long, Boolean)].collect().toSeq
-      .map(r => (r._1, r._3, r._4))
-    assert(got === Seq((10L, 0L, true), (11L, 0L, true), (12L, 1L, false)), s"got $got")
-  }
-
   test("kmeans separates two tight groups, regardless of seed identity") {
     // group A around sin(i+1), group B around cos(3i+2) (orthogonal-ish);
     // seeds are vec 0 (A) and vec 1 (B) — members must follow proximity
@@ -415,7 +433,7 @@ class SimilarityOpsSpec extends SparkSpec {
   test("q124 native trisum equals the exploded twin and is partitioning-independent") {
     val embT = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val native = SimilarityOps.embeddingMoments(embT).collect().map(_.toSeq).toSeq
-    val twin = SimilarityOps.embeddingMomentsExploded(embT).collect().map(_.toSeq).toSeq
+    val twin = SimilarityOpsSpec.embeddingMomentsExploded(embT).collect().map(_.toSeq).toSeq
     assert(native === twin)
     // integer adds are associative/commutative: any repartitioning, same table
     val reparted = SimilarityOps.embeddingMoments(
@@ -608,7 +626,7 @@ class SimilarityOpsSpec extends SparkSpec {
     assert(SimilarityOps.kmeans(empty).collect().isEmpty)
     // the convergence-terminated form shares the contract: zero inertia
     // converges at the first check instead of crashing on a missing group
-    val run = SimilarityOps.kmeansConverged(empty, maxRounds = 5)
+    val run = SimilarityOpsSpec.kmeansConverged(empty, maxRounds = 5)
     assert(run.assign.collect().isEmpty && run.rounds <= 2)
   }
 
@@ -642,7 +660,7 @@ class SimilarityOpsSpec extends SparkSpec {
       (2L, a(0.02f), 0), (3L, a(-0.02f), 0),
       (4L, b(0.02f), 0), (5L, b(-0.02f), 0))
       .toDF("vec_id", "embedding", "label")
-    val run = SimilarityOps.kmeansConverged(pts, k = 2, maxRounds = 10)
+    val run = SimilarityOpsSpec.kmeansConverged(pts, k = 2, maxRounds = 10)
     assert(run.rounds === 2, s"expected early stop at round 2: ${run.inertiaTrace}")
     assert(run.inertiaTrace.length === run.rounds)
     // Lloyd under exact rational centroids: deltas are never negative
@@ -659,18 +677,18 @@ class SimilarityOpsSpec extends SparkSpec {
     // run must stop exactly at the cap — the production bound on a
     // non-converging (or slowly-converging) corpus
     val embT = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val run = SimilarityOps.kmeansConverged(embT, maxRounds = 3, epsMicro = -1L)
+    val run = SimilarityOpsSpec.kmeansConverged(embT, maxRounds = 3, epsMicro = -1L)
     assert(run.rounds === 3)
     assert(run.inertiaTrace.length === 3)
     // the trace consumed as the stop signal IS q94's trace for those rounds
-    val q94 = SimilarityOps.kmeansInertia(embT, rounds = 3)
+    val q94 = SimilarityOpsSpec.kmeansInertia(embT, rounds = 3)
       .select("inertia_micro").as[Long].collect().toSeq
     assert(run.inertiaTrace === q94)
   }
 
   test("kmeans inertia trace is non-increasing round over round (Lloyd)") {
     val embT = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val trace = SimilarityOps.kmeansInertia(embT, rounds = 4)
+    val trace = SimilarityOpsSpec.kmeansInertia(embT, rounds = 4)
       .as[(Long, Long, Long, Double)].collect().toSeq
     assert(trace.map(_._1) === Seq(1L, 2L, 3L, 4L))
     assert(trace.forall(_._2 === trace.head._2), s"member count drifted: $trace")
@@ -832,7 +850,7 @@ class SimilarityOpsSpec extends SparkSpec {
       .distinct().orderBy("round_no")
       .as[(Long, Long, Boolean)].collect().toSeq
     // per-round inertia must equal q94's exact trace over the same budget
-    val q94 = SimilarityOps.kmeansInertia(embT, rounds = trace.size)
+    val q94 = SimilarityOpsSpec.kmeansInertia(embT, rounds = trace.size)
       .select("round_no", "inertia_micro").as[(Long, Long)].collect().toMap
     assert(trace.map(t => q94(t._1)) === trace.map(_._2))
     // the emitted round count IS the first round passing the per-mille

@@ -5,6 +5,14 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.ops.SimilarityOps
 import graft.streaming.StreamCellSample
 
+object StreamCellSampleSpec {
+  /** q107's dial collapsed to the (cell → cut) literal the streaming
+    * sampler embeds in its plan; bounded by k, the cell id space. */
+  def cellSampleCuts(assign: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+    SimilarityOps.cellSampleDial(assign).select("cell", "cut")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
+}
+
 class StreamCellSampleSpec extends SparkSpec {
   import spark.implicits._
 
@@ -13,7 +21,7 @@ class StreamCellSampleSpec extends SparkSpec {
     val embT = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val assign = SimilarityOps.kmeans(embT).select("vec_id", "cell")
     // batch-compute once, persist the bounded dial artifact
-    val cuts = SimilarityOps.cellSampleCuts(assign)
+    val cuts = StreamCellSampleSpec.cellSampleCuts(assign)
     assert(cuts.nonEmpty && cuts.size <= SimilarityOps.KmeansK)
     val batchKept = SimilarityOps.cellBalancedSample(assign)
       .select("vec_id").as[Long].collect().toSet

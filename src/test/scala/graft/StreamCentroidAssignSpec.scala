@@ -5,6 +5,16 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.ops.SimilarityOps
 import graft.streaming.StreamCentroidAssign
 
+object StreamCentroidAssignSpec {
+  /** The centroid state the final q87 [[SimilarityOps.kmeans]] assignment
+    * used: the one-row (k × D integer sums + counts) artifact a batch job
+    * persists for ingest-time routing. */
+  def kmeansCentroids(emb: org.apache.spark.sql.DataFrame,
+                      k: Int = SimilarityOps.KmeansK,
+                      rounds: Int = SimilarityOps.KmeansRounds): org.apache.spark.sql.DataFrame =
+    SimilarityOps.kmCents(SimilarityOps.kmRounds(SimilarityOps.kmVq(emb), k, rounds - 1))
+}
+
 class StreamCentroidAssignSpec extends SparkSpec {
   import spark.implicits._
 
@@ -12,7 +22,7 @@ class StreamCentroidAssignSpec extends SparkSpec {
 
   test("stream assignment equals the batch q87 assignment on the same vectors") {
     implicit val sc = spark.sqlContext
-    val cents = SimilarityOps.kmeansCentroids(corpus)
+    val cents = StreamCentroidAssignSpec.kmeansCentroids(corpus)
     val batch = SimilarityOps.kmeans(corpus).collect()
       .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2)))).toMap
 
@@ -37,7 +47,7 @@ class StreamCentroidAssignSpec extends SparkSpec {
 
   test("outlier flag: far-from-every-cell vectors are marked out of distribution") {
     implicit val sc = spark.sqlContext
-    val cents = SimilarityOps.kmeansCentroids(corpus)
+    val cents = StreamCentroidAssignSpec.kmeansCentroids(corpus)
     val inlier = corpus.limit(1).collect()(0).getSeq[Float](1)
     val outlier = Seq.fill(64)(99.0f) // nowhere near the unit-ish corpus
     val mem = MemoryStream[(Long, Seq[Float])]
@@ -56,7 +66,7 @@ class StreamCentroidAssignSpec extends SparkSpec {
   }
 
   test("assign rejects a stream without an embedding column, or with reserved names") {
-    val cents = SimilarityOps.kmeansCentroids(corpus)
+    val cents = StreamCentroidAssignSpec.kmeansCentroids(corpus)
     val noEmb = Seq((1L, "x")).toDF("vec_id", "payload")
     val e1 = intercept[IllegalArgumentException] {
       StreamCentroidAssign.assign(noEmb, cents)
@@ -75,7 +85,7 @@ class StreamCentroidAssignSpec extends SparkSpec {
     // empty corpus) — every vector would silently land in cell -1
     val emptyCorpus = Seq.empty[(Long, Seq[Float], Int)]
       .toDF("vec_id", "embedding", "label")
-    val emptyCents = SimilarityOps.kmeansCentroids(emptyCorpus)
+    val emptyCents = StreamCentroidAssignSpec.kmeansCentroids(emptyCorpus)
     val batch = corpus.limit(3).select("vec_id", "embedding")
     val e = intercept[Exception] {
       StreamCentroidAssign.assign(batch, emptyCents).collect()

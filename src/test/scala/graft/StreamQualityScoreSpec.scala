@@ -5,6 +5,15 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.ops.QualityModelOps
 import graft.streaming.StreamQualityScore
 
+object StreamQualityScoreSpec {
+  /** The trained q101 model as the bounded artifact a pipeline persists:
+    * the [[QualityModelOps.NumBuckets]] guarded micro weights and the bias. */
+  def bucketWeightsMicro(docs: org.apache.spark.sql.DataFrame): (Array[Long], Long) = {
+    val m = QualityModelOps.modelTables(docs, None, QualityModelOps.featureRows(docs))
+    (m.weights.orderBy("fb").collect().map(_.getLong(1)), m.bias.collect().head.getLong(0))
+  }
+}
+
 class StreamQualityScoreSpec extends SparkSpec {
   import spark.implicits._
 
@@ -12,7 +21,7 @@ class StreamQualityScoreSpec extends SparkSpec {
     implicit val sc = spark.sqlContext
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     // batch-train once, persist the bounded artifact
-    val (w, bias) = QualityModelOps.bucketWeightsMicro(docs)
+    val (w, bias) = StreamQualityScoreSpec.bucketWeightsMicro(docs)
     assert(w.length === QualityModelOps.NumBuckets)
     val batch = QualityModelOps.qualityClassifier(docs)
       .select("doc_id", "n_feats", "score_micro", "pred")

@@ -22,9 +22,11 @@ class VelocityDetectorSpec extends SparkSpec {
   test("velocity alert fires on >3 txns in 60s for one user, state persists across batches") {
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[Txn]
-    val alerts = VelocityDetector.detect(mem.toDS())
-    val q = withoutEmptyBatches(spark)(alerts.writeStream.format("memory")
-      .queryName("velocity_test").outputMode("append").start())
+    // no watermark delay: each batch's no-data batch seals its rows, so
+    // the first three fold into the key's state a batch before the fourth
+    val alerts = VelocityDetector.detectEventTime(mem.toDS(), watermarkDelaySec = 0)
+    val q = alerts.writeStream.format("memory")
+      .queryName("velocity_test").outputMode("append").start()
     try {
       // batch 1: 3 txns in-window — no alert yet
       mem.addData(Txn("u1", 10, 100), Txn("u1", 11, 110), Txn("u1", 12, 120))
@@ -32,6 +34,8 @@ class VelocityDetectorSpec extends SparkSpec {
       assert(spark.table("velocity_test").count() === 0)
       // batch 2: 4th txn within 60s of the first three → alert (state carried over)
       mem.addData(Txn("u1", 13, 130), Txn("u2", 5, 130))
+      q.processAllAvailable()
+      mem.addData(Txn("sentinel", 1, 1000)) // moves the watermark past 130
       q.processAllAvailable()
       val got = spark.table("velocity_test").as[Alert].collect()
       assert(got.length === 1)
@@ -95,6 +99,29 @@ class VelocityDetectorSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("event-time expiry is the same in every batch split: a key back after its TTL starts empty") {
+    implicit val sc = spark.sqlContext
+    def run(batches: Seq[Seq[Txn]], name: String): Seq[Alert] = {
+      val mem = MemoryStream[Txn]
+      val q = VelocityDetector.detectEventTime(mem.toDS(), stateTtlSec = 60, watermarkDelaySec = 0)
+        .writeStream.format("memory").queryName(name).outputMode("append").start()
+      try {
+        (batches ++ Seq(Seq(Txn("sentinel", 1, 20000)), Seq(Txn("sentinel", 1, 20001))))
+          .foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+        spark.table(name).as[Alert].collect().toSeq.filterNot(_.userId == "sentinel")
+          .sortBy(a => (a.userId, a.timestamp, a.kind))
+      } finally q.stop()
+    }
+    // u1 warms up (mean 100) at 100–102 s; u2@10000 moves the watermark
+    // past u1's TTL; u1 returns at 10050 s with 50× its mean
+    val warm = Seq(Txn("u1", 100, 100), Txn("u1", 110, 101), Txn("u1", 90, 102))
+    val (away, back) = (Txn("u2", 1, 10000), Txn("u1", 5000, 10050))
+    val together = run(Seq(warm, Seq(away, back)), "ev_ttl_together")
+    val apart = run(Seq(warm, Seq(away), Seq(back)), "ev_ttl_apart")
+    assert(together === apart, "the batch split must not change the alerts")
+    assert(!together.exists(_.kind === "deviation"), s"u1 expired, got $together")
+  }
+
   test("event-time alert for a key with NO further traffic fires at watermark-reach") {
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[Txn]
@@ -151,13 +178,16 @@ class VelocityDetectorSpec extends SparkSpec {
   test("deviation alert fires on 3x the running mean after warm-up") {
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[Txn]
-    val alerts = VelocityDetector.detect(mem.toDS(), maxTxns = 99)
-    val q = withoutEmptyBatches(spark)(alerts.writeStream.format("memory")
-      .queryName("deviation_test").outputMode("append").start())
+    val alerts = VelocityDetector.detectEventTime(mem.toDS(), maxTxns = 99)
+    val q = alerts.writeStream.format("memory")
+      .queryName("deviation_test").outputMode("append").start()
     try {
-      mem.addData(Txn("u1", 100, 0), Txn("u1", 110, 1000), Txn("u1", 90, 2000))
+      // from 1000 s: a row at 0 s sits on the initial watermark, dropped late
+      mem.addData(Txn("u1", 100, 1000), Txn("u1", 110, 2000), Txn("u1", 90, 3000))
       q.processAllAvailable()
-      mem.addData(Txn("u1", 500, 3000)) // 500 > 3 * 100
+      mem.addData(Txn("u1", 500, 4000)) // 500 > 3 * 100
+      q.processAllAvailable()
+      mem.addData(Txn("sentinel", 1, 100000)) // moves the watermark past 4000
       q.processAllAvailable()
       val got = spark.table("deviation_test").as[Alert].collect()
       assert(got.length === 1 && got.head.kind === "deviation")
