@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.ops.SimilarityOps
@@ -9,9 +10,8 @@ object StreamCentroidAssignSpec {
   /** The centroid state the final q87 [[SimilarityOps.kmeans]] assignment
     * used: the one-row (k × D integer sums + counts) artifact a batch job
     * persists for ingest-time routing. */
-  def kmeansCentroids(emb: org.apache.spark.sql.DataFrame,
-                      k: Int = SimilarityOps.KmeansK,
-                      rounds: Int = SimilarityOps.KmeansRounds): org.apache.spark.sql.DataFrame =
+  def kmeansCentroids(emb: DataFrame, k: Int = SimilarityOps.KmeansK,
+                      rounds: Int = SimilarityOps.KmeansRounds): DataFrame =
     SimilarityOps.kmCents(SimilarityOps.kmRounds(SimilarityOps.kmVq(emb), k, rounds - 1))
 }
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.ops.QualityModelOps
@@ -8,7 +9,7 @@ import graft.streaming.StreamQualityScore
 object StreamQualityScoreSpec {
   /** The trained q101 model as the bounded artifact a pipeline persists:
     * the [[QualityModelOps.NumBuckets]] guarded micro weights and the bias. */
-  def bucketWeightsMicro(docs: org.apache.spark.sql.DataFrame): (Array[Long], Long) = {
+  def bucketWeightsMicro(docs: DataFrame): (Array[Long], Long) = {
     val m = QualityModelOps.modelTables(docs, None, QualityModelOps.featureRows(docs))
     (m.weights.orderBy("fb").collect().map(_.getLong(1)), m.bias.collect().head.getLong(0))
   }
